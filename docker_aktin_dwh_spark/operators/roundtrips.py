@@ -25,6 +25,7 @@ from ..functions.determinism import sql_dsum
 from ..registry import QuerySpec
 from ..sources import p21_csv, upsert, xml_cda
 from ..streaming import broker
+from .streamnative import await_query
 
 T = catalog.load
 
@@ -1484,14 +1485,14 @@ def dstr_01(spark, sf):
         ck = _os.path.join(tmp, "ck")
 
         def run():
-            q = (spark.readStream.format("delta_stream")
-                 .option("path", t).load()
-                 .writeStream.format("txnlog")
-                 .option("path", rep).option("key", "o_orderkey")
-                 .option("txnAppId", "dstr01")
-                 .option("checkpointLocation", ck)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
+            await_query(lambda: (
+                spark.readStream.format("delta_stream")
+                .option("path", t).load()
+                .writeStream.format("txnlog")
+                .option("path", rep).option("key", "o_orderkey")
+                .option("txnAppId", "dstr01")
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True).start()))
 
         run()
         con.execute("COPY (SELECT 10000 + range AS o_orderkey, "

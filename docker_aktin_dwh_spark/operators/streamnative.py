@@ -36,6 +36,7 @@ import shutil
 import tempfile
 import threading
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,6 +107,30 @@ _SINK_LOCK = threading.Lock()
 #: it — fn(...).count() then last_replay_progress() in bench/tests)
 _REPLAY_PROGRESS = threading.local()
 
+#: Spark gives the Python process that plans a Python DataSource stream
+#: a fixed 10 s to connect back (PythonWorkerFactory.createSimpleWorker).
+#: On an oversubscribed host the query can die in INITIALIZING on that
+#: timeout before it plans a single batch; such a start is retried —
+#: no offset was logged, so the restart replays the stream from scratch.
+_CONNECT_BACK = "Python worker failed to connect back"
+_START_ATTEMPTS = 5
+
+
+def await_query(start):
+    """Run ``start()`` (which starts a streaming query) and await the
+    query's termination; return the finished query.  A start that dies
+    on the connect-back timeout before logging progress is started
+    again, at most ``_START_ATTEMPTS`` times; any other failure raises."""
+    for attempt in range(1, _START_ATTEMPTS + 1):
+        q = start()
+        try:
+            q.awaitTermination()
+            return q
+        except StreamingQueryException as e:
+            if (_CONNECT_BACK not in str(e) or q.recentProgress
+                    or attempt == _START_ATTEMPTS):
+                raise
+
 
 def last_replay_progress() -> list[dict]:
     """Progress dicts of the replay most recently run BY THIS THREAD
@@ -131,11 +156,11 @@ def start_append_sink(df: DataFrame, base: str):
     spark = df.sparkSession
 
     def run():
-        q = (df.writeStream.format("parquet")
-             .option("path", f"{base}/sink")
-             .option("checkpointLocation", f"{base}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+        q = await_query(lambda: (
+            df.writeStream.format("parquet")
+            .option("path", f"{base}/sink")
+            .option("checkpointLocation", f"{base}/ckpt")
+            .outputMode("append").trigger(availableNow=True).start()))
         # stash the replay's progress (micro-batch count + state-store
         # rows/memory per stateOperator) for the bench's streaming
         # scale lane — thread-local so concurrent pool replays can't

@@ -12,7 +12,7 @@ Semantics pinned to the batch form (:func:`txnlog.table_changes_range`
 — equality certified by the ``str_21`` driver key and in tests):
 
 - one partition per commit version; planning is control-plane (commit
-  JSONs only, the same replay txnbatch duplicates);
+  JSONs only, through logcore.replay);
 - each partition ships the version's old/new file lists (with their
   endpoint DV masks) and the DV deltas on membership-stable files
   (dead = newly vectored rows → old side; alive = restore-resurrected
@@ -29,10 +29,10 @@ diff joins on), ``startingVersion`` (default 0: the first emitted diff
 is startingVersion → startingVersion+1; the create itself is state,
 not change — Delta's CDF default).
 
-Self-contained + pickle-by-value for the same deployment reason as
-txnstream.py/txnbatch.py (the planner process cannot import the
-package); the duplicated replay's byte-compatibility is pinned in
-tests/test_txnlog.py.
+Import rule: this module imports nothing from the package except
+sources/logcore.py, the one definition of the txnlog format — the
+streaming-source runner cannot import the package, so both modules
+travel to it pickled by value (see logcore).
 
 Reference analogue: the broker's incremental result forwarding
 (/root/reference/src/docker/template.yml:51) upgraded from "new rows
@@ -48,74 +48,9 @@ from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import StringType, LongType, StructField, StructType
 
-_LOG = "_txnlog"
-_W = 20
-
-
-def _versions(table: str) -> list[int]:
-    try:
-        names = os.listdir(os.path.join(table, _LOG))
-    except FileNotFoundError:
-        return []
-    return sorted(int(n[:_W]) for n in names
-                  if n.endswith(".json") and not n.endswith(".ckpt.json")
-                  and not n.startswith("."))
-
-
-def _replay(table: str, target: int):
-    """files{name: {rows, dv}} + schema_json + colmap at ``target`` —
-    the same checkpoint-bounded walk txnlog.snapshot does
-    (self-contained; see module docstring)."""
-    files: dict[str, dict] = {}
-    schema_json = None
-    colmap = None
-    start = 0
-    log = os.path.join(table, _LOG)
-    for v in sorted((int(n[:_W]) for n in os.listdir(log)
-                     if n.endswith(".ckpt.json")), reverse=True):
-        if v <= target:
-            with open(os.path.join(log, f"{v:0{_W}d}.ckpt.json")) as f:
-                ck = json.load(f)
-            files = {n: dict(s) for n, s in ck["files"].items()}
-            schema_json = ck.get("schema")
-            colmap = ck.get("colmap")
-            start = v + 1
-            break
-    for v in _versions(table):
-        if v < start or v > target:
-            continue
-        with open(os.path.join(log, f"{v:0{_W}d}.json")) as f:
-            c = json.load(f)
-        for name in c.get("remove", []):
-            files.pop(name, None)
-        for a in c.get("add", []):
-            files[a["file"]] = {"rows": a["rows"]}
-        for d in c.get("dv", []):
-            files[d["file"]]["dv"] = d["ranges"]
-        schema_json = c.get("schema", schema_json)
-        if "colmap" in c:
-            colmap = c["colmap"]
-    return files, schema_json, colmap
-
-
-def _sub_ranges(a: list, b: list) -> list[list[int]]:
-    """ranges in a not covered by b (txnlog._ranges_subtract, duplicated
-    for self-containment; byte-compat pinned in tests)."""
-    out: list[list[int]] = []
-    bs = [list(r) for r in sorted(b)]
-    for s, e in sorted(a):
-        cur = s
-        for t, u in bs:
-            if u < cur or t > e:
-                continue
-            if t > cur:
-                out.append([cur, t - 1])
-            cur = max(cur, u + 1)
-            if cur > e:
-                break
-        if cur <= e:
-            out.append([cur, e])
-    return out
+from .logcore import (arrow_schema, list_versions, nullable_schema_json,
+                      ranges_subtract, read_commit, read_file,
+                      register as _register, replay, ship_by_value)
 
 
 class _VersionDiffPartition(InputPartition):
@@ -127,22 +62,16 @@ class _VersionDiffPartition(InputPartition):
         self.version = version
         self.key = key
         self.schema_json = schema_json
-        # [(name, keep_ranges | None, mask_ranges | None), ...]
+        # [(name, ranges, pv), ...]: whole files minus their DV ranges
         self.old_files = old_files
         self.new_files = new_files
-        self.dv_dead = dv_dead      # [(name, ranges)] -> old side
-        self.dv_alive = dv_alive    # [(name, ranges)] -> new side
+        # [(name, ranges, pv), ...]: only the rows in the ranges
+        self.dv_dead = dv_dead      # newly vectored rows -> old side
+        self.dv_alive = dv_alive    # resurrected rows -> new side
         # logical → physical names at this version (r13 column
         # mapping; physical names are rename-stable, so one map
         # serves both sides of the diff)
         self.colmap = colmap
-
-
-def _nullable(schema_json: str) -> str:
-    d = json.loads(schema_json)
-    for f in d.get("fields", []):
-        f["nullable"] = True
-    return json.dumps(d)
 
 
 class TxnlogCdcStreamReader(DataSourceStreamReader):
@@ -155,36 +84,28 @@ class TxnlogCdcStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self._table)
+        vs = list_versions(self._table)
         if not vs:
             raise FileNotFoundError(f"no txnlog table at {self._table}")
         return {"version": vs[-1]}
 
     def partitions(self, start: dict, end: dict):
-        import json as _json
-        import os as _os
-
-        from . import txnlog as _t
         parts = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            try:
-                with open(_os.path.join(_t._log_dir(self._table),
-                                        _t._commit_name(v))) as cf:
-                    if _json.load(cf).get("data_change") is False:
-                        # compact/OPTIMIZE (or a synced foreign
-                        # no-data commit): rows declared identical —
-                        # the change feed emits NOTHING for it (batch
-                        # table_changes_range skips the same way)
-                        continue
-            except FileNotFoundError:
-                pass        # truncated: _replay raises its own error
-            f0, s0, cm0 = _replay(self._table, v - 1)
-            f1, s1, cm1 = _replay(self._table, v)
-            schema_json = _nullable(s1 or s0)
-            colmap = cm1 if s1 is not None else cm0
-            old_files = [(n, None, f0[n].get("dv"))
+            if read_commit(self._table, v).get("data_change") is False:
+                # compact/OPTIMIZE (or a synced foreign no-data
+                # commit): rows declared identical — the change feed
+                # emits NOTHING for it (batch table_changes_range skips
+                # the same way)
+                continue
+            f0 = replay(self._table, v - 1).files
+            s1 = replay(self._table, v)
+            f1 = s1.files
+            schema_json = nullable_schema_json(s1.schema_json)
+            colmap = s1.colmap
+            old_files = [(n, f0[n].get("dv"), f0[n].get("pv"))
                          for n in sorted(f0) if n not in f1]
-            new_files = [(n, None, f1[n].get("dv"))
+            new_files = [(n, f1[n].get("dv"), f1[n].get("pv"))
                          for n in sorted(f1) if n not in f0]
             dv_dead, dv_alive = [], []
             for n in sorted(f1):
@@ -194,12 +115,12 @@ class TxnlogCdcStreamReader(DataSourceStreamReader):
                 d1 = f1[n].get("dv") or []
                 if d1 == d0:
                     continue
-                dead = _sub_ranges(d1, d0)
+                dead = ranges_subtract(d1, d0)
                 if dead:
-                    dv_dead.append((n, dead))
-                alive = _sub_ranges(d0, d1)
+                    dv_dead.append((n, dead, f1[n].get("pv")))
+                alive = ranges_subtract(d0, d1)
                 if alive:
-                    dv_alive.append((n, alive))
+                    dv_alive.append((n, alive, f1[n].get("pv")))
             if old_files or new_files or dv_dead or dv_alive:
                 parts.append(_VersionDiffPartition(
                     self._table, v, self._key, schema_json,
@@ -210,55 +131,16 @@ class TxnlogCdcStreamReader(DataSourceStreamReader):
         import numpy as np
         import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType as _ST
 
-        target = to_arrow_schema(_ST.fromJson(
-            json.loads(partition.schema_json)))
-
-        cm = getattr(partition, "colmap", None) or {}
-
-        def load(name, keep_ranges, mask_ranges):
-            t = pq.read_table(os.path.join(partition.table, name))
-            # r14 partitioned tables: partition values are encoded in
-            # the file's RELATIVE directory components (hive layout)
-            from urllib.parse import unquote
-            pv = {}
-            for comp in os.path.dirname(name).split(os.sep):
-                if "=" in comp:
-                    c, _, raw = comp.partition("=")
-                    pv[c] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                             else unquote(raw))
-            cols = []
-            for field in target:
-                phys = cm.get(field.name, field.name)
-                if phys in t.column_names:
-                    cols.append(t.column(phys).cast(field.type))
-                elif phys in pv:
-                    raw = pv[phys]
-                    cols.append(
-                        pa.nulls(t.num_rows, field.type) if raw is None
-                        else pa.array([raw] * t.num_rows)
-                        .cast(field.type))
-                else:
-                    cols.append(pa.nulls(t.num_rows, field.type))
-            t = pa.table(dict(zip(target.names, cols)), schema=target)
-            if keep_ranges is not None:
-                m = np.zeros(t.num_rows, dtype=bool)
-                for s, e in keep_ranges:
-                    m[s:e + 1] = True
-                t = t.filter(pa.array(m))
-            elif mask_ranges:
-                m = np.ones(t.num_rows, dtype=bool)
-                for s, e in mask_ranges:
-                    m[s:e + 1] = False
-                t = t.filter(pa.array(m))
-            return t
+        target = arrow_schema(partition.schema_json)
 
         def side(files, keeps):
-            tabs = [load(n, None, mask) for n, _, mask in files]
-            tabs += [load(n, ranges, None) for n, ranges in keeps]
+            tabs = [read_file(os.path.join(partition.table, n), target,
+                              partition.colmap, pv, dead=dv)
+                    for n, dv, pv in files]
+            tabs += [read_file(os.path.join(partition.table, n), target,
+                               partition.colmap, pv, live=ranges)
+                     for n, ranges, pv in keeps]
             if not tabs:
                 return pa.table(
                     {f.name: pa.nulls(0, f.type) for f in target},
@@ -315,16 +197,13 @@ class TxnlogCdcDataSource(DataSource):
         return "txnlog_cdc"
 
     def schema(self) -> StructType:
-        vs = _versions(self.options["path"])
-        if not vs:
-            raise FileNotFoundError(
-                f"no txnlog table at {self.options['path']}")
-        _, schema_json, _ = _replay(self.options["path"], vs[-1])
+        schema_json = replay(self.options["path"]).schema_json
         if schema_json is None:
             raise FileNotFoundError(
                 f"txnlog_cdc: no schema recorded in any retained "
                 f"commit or checkpoint of {self.options['path']}")
-        logged = StructType.fromJson(json.loads(_nullable(schema_json)))
+        logged = StructType.fromJson(
+            json.loads(nullable_schema_json(schema_json)))
         return StructType(
             list(logged.fields)
             + [StructField("change_type", StringType(), False),
@@ -341,27 +220,8 @@ class TxnlogCdcDataSource(DataSource):
 
 
 def register(spark) -> None:
-    # once per session under a lock: DataSourceManager.register
-    # REPLACES an existing entry, so re-registering from a pooled
-    # worker thread opens a lookup-miss window for queries mid-plan
-    # on other threads (see txnbatch.register)
-    with _REGISTER_LOCK:
-        if spark not in _REGISTERED:
-            spark.dataSource.register(TxnlogCdcDataSource)
-            _REGISTERED.add(spark)
+    """Idempotently register the CDC source (logcore.register)."""
+    _register(spark, TxnlogCdcDataSource)
 
 
-_REGISTER_LOCK = __import__("threading").Lock()
-_REGISTERED = __import__("weakref").WeakSet()
-
-
-def _register_by_value() -> None:
-    import sys
-    try:
-        from pyspark import cloudpickle
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:                       # pragma: no cover - old API
-        pass
-
-
-_register_by_value()
+ship_by_value(__name__)

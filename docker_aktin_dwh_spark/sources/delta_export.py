@@ -67,6 +67,7 @@ import struct
 import uuid
 
 from . import txnlog
+from .logcore import HIVE_NULL
 
 #: lowest protocol versions whose feature set covers what we emit
 #: (plain parquet adds, no DVs / column mapping / constraints in the
@@ -422,7 +423,7 @@ def _partition_values(name: str, st: dict) -> dict:
     JSON null (PROTOCOL.md's representation)."""
     from urllib.parse import unquote
     pv = st.get("pv") or {}
-    return {c: (None if raw == txnlog._HIVE_NULL else unquote(raw))
+    return {c: (None if raw == HIVE_NULL else unquote(raw))
             for c, raw in sorted(pv.items())}
 
 

@@ -39,12 +39,13 @@ import struct
 import uuid as _uuid
 import zlib
 import re as _re
-from urllib.parse import quote, unquote
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 from . import txnlog
+from .logcore import pv_frag
 from .delta_export import _Z85
 
 _Z85_REV = {c: i for i, c in enumerate(_Z85)}
@@ -313,18 +314,6 @@ def replay_delta_log(src: str, version: int | None = None
 
 # ---------------------------------------------------------- import
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _pv_fragment(v: str | None) -> str:
-    """One Delta partitionValues entry → the raw hive dir fragment
-    txnlog stores (``_pv_decode`` unquotes, so percent-escaping every
-    special character round-trips any value)."""
-    if v is None:
-        return _HIVE_NULL
-    return quote(str(v), safe="")
-
-
 def _nested_mapping(t) -> bool:
     """True when a (possibly nested) Delta type dict carries a
     columnMapping physicalName below the top level."""
@@ -388,13 +377,13 @@ def _materialize_add(src: str, dest: str, a: dict, pcols: list[str],
     decode the deletion vector."""
     # add.path is RFC 2396 percent-encoded per PROTOCOL.md — the
     # on-disk file lives at the DECODED path.  The txnlog rel keeps
-    # the (re-encoded-by-_pv_fragment) hive frag + the decoded
+    # the (re-encoded-by-pv_frag) hive frag + the decoded
     # basename, so round-trips stay byte-stable.
     disk_path = unquote(a["path"])
     base = os.path.basename(disk_path)
     pv = a.get("partitionValues") or {}
     if pcols:
-        frag = "/".join(f"{c}={_pv_fragment(pv.get(c))}"
+        frag = "/".join(f"{c}={pv_frag(pv.get(c))}"
                         for c in pcols)
         rel = f"{frag}/{base}"
         os.makedirs(os.path.join(dest, frag), exist_ok=True)
@@ -418,7 +407,7 @@ def _materialize_add(src: str, dest: str, a: dict, pcols: list[str],
             os.replace(tmpf, dstf)
     stats = txnlog._file_stats(dstf, phys_key or "")
     if pcols:
-        stats["pv"] = {c: _pv_fragment(pv.get(c)) for c in pcols}
+        stats["pv"] = {c: pv_frag(pv.get(c)) for c in pcols}
         if key in pcols and stats.get("kmin") is None:
             enc = txnlog._stats_encode(
                 txnlog._pv_decode(stats["pv"][key],

@@ -30,9 +30,10 @@ files, never the table.  Partition columns materialize as constants
 from the add's ``partitionValues`` (Delta stores them in the log, not
 the files).
 
-Self-contained + registered pickle-BY-VALUE for the same deployment
-constraint as txnstream (the python_streaming_source_runner process
-cannot import this package; see sources/txnstream.py docstring).
+Import rule: like txnstream, this module imports nothing from the
+package except sources/logcore.py (for registration only — it keeps
+its own Delta-log reader); both travel to the streaming-source runner
+pickled by value (see logcore).
 
 Reference analogue: the broker POLLS its exchange partner for new
 submissions (src/build.sh:255) — here the partner is a Delta-writing
@@ -47,6 +48,8 @@ import os
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import LongType, StructField, StructType
+
+from .logcore import register as _register, ship_by_value
 
 _DLOG = "_delta_log"
 _W = 20
@@ -303,24 +306,8 @@ class DeltaStreamDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent per-session registration (see txnstream.register)."""
-    with _REGISTER_LOCK:
-        if spark not in _REGISTERED:
-            spark.dataSource.register(DeltaStreamDataSource)
-            _REGISTERED.add(spark)
+    """Idempotently register the stream source (logcore.register)."""
+    _register(spark, DeltaStreamDataSource)
 
 
-_REGISTER_LOCK = __import__("threading").Lock()
-_REGISTERED = __import__("weakref").WeakSet()
-
-
-def _register_by_value() -> None:
-    import sys
-    try:
-        from pyspark import cloudpickle
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:                       # pragma: no cover - old API
-        pass
-
-
-_register_by_value()
+ship_by_value(__name__)

@@ -24,11 +24,11 @@ fine for SQL composability and moderate tables; the JVM-native path
 (``txnlog.read_table``) remains the hot path for the 100 TB scan and
 is what every engine operator uses internally.
 
-Self-contained + pickle-by-value for the same deployment reason as
-txnstream.py: the planner/worker processes cannot import
-``docker_aktin_dwh_spark`` when the driver found the repo via its own
-sys.path; byte-compatibility of the duplicated replay is pinned in
-tests/test_txnlog.py.
+Import rule: this module imports nothing from the package except
+sources/logcore.py, the one definition of the txnlog format.  Spark
+plans, reads and commits this source in worker processes that cannot
+import the package, so both modules travel to them pickled by value
+(see logcore).
 
 Reference analogue: the read side of the reference's import schema —
 any SQL client can SELECT the warehouse state Postgres arbitrates
@@ -55,11 +55,16 @@ import os
 from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     DataSourceReader,
                                     DataSourceStreamArrowWriter,
-                                    InputPartition, WriterCommitMessage)
+                                    WriterCommitMessage)
 from pyspark.sql.types import StructType
 
-_LOG = "_txnlog"
-_W = 20
+from .logcore import (FilePartition, arrow_schema, commit, file_stats,
+                      interval_hit, list_versions, log_dir,
+                      nullable_schema_json, posix_link_claim, pv_constant,
+                      pv_frag, read_file, replay, resolve_timestamp,
+                      ship_by_value, stats_encode)
+from .logcore import register as _register
+
 
 
 def _norm_path(p: str) -> str:
@@ -74,219 +79,17 @@ def _norm_path(p: str) -> str:
     return p
 
 
-def _log_dir(table: str) -> str:
-    return os.path.join(table, _LOG)
-
-
-def _versions(table: str) -> list[int]:
-    try:
-        names = os.listdir(_log_dir(table))
-    except FileNotFoundError:
-        return []
-    return sorted(int(n[:_W]) for n in names
-                  if n.endswith(".json") and not n.endswith(".ckpt.json")
-                  and not n.startswith("."))
-
-
 _UNSET = object()
 
 
-def _resolve_timestamp(table: str, ts) -> int:
-    """Epoch seconds or ISO 'YYYY-MM-DD[ HH:MM:SS]' → newest version
-    whose commit-file mtime (monotonized — Delta's rule) is <= target.
-    Verbatim mirror of txnlog.resolve_timestamp, self-contained for
-    the same reason as _replay_meta."""
-    import datetime
-    try:
-        target = float(ts)
-    except ValueError:
-        target = datetime.datetime.fromisoformat(str(ts)).timestamp()
-    versions = _versions(table)
-    if not versions:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    eff, run = [], float("-inf")
-    for vv in versions:
-        m = os.stat(os.path.join(
-            _log_dir(table), f"{vv:0{_W}d}.json")).st_mtime
-        run = max(run, m)
-        eff.append((vv, run))
-    if target < eff[0][1]:
-        raise ValueError(
-            f"timestampAsOf {ts} predates the first retained commit")
-    return max(vv for vv, m in eff if m <= target)
-
-
-def _replay_meta(table: str, version: int | None):
-    """Self-contained snapshot replay — the same checkpoint-bounded
-    walk txnlog.snapshot does, duplicated because the DataSource
-    planner/committer processes cannot import the package (see module
-    docstring; equality pinned in tests).  Returns (files,
-    raw_schema_json, txns, constraints, key, colmap,
-    resolved_version, partition_by)."""
-    versions = _versions(table)
-    if not versions:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    target = versions[-1] if version is None else int(version)
-    if target not in versions:
-        raise ValueError(
-            f"versionAsOf {target} not in log (have "
-            f"{versions[0]}..{versions[-1]})")
-    files: dict[str, dict] = {}
-    schema_json = None
-    txns: dict[str, int] = {}
-    constraints: dict[str, str] = {}
-    key = None
-    colmap: dict[str, str] | None = None
-    partition_by = None
-    start = 0
-    log = _log_dir(table)
-    for v in sorted((int(n[:_W]) for n in os.listdir(log)
-                     if n.endswith(".ckpt.json")), reverse=True):
-        if v <= target:
-            with open(os.path.join(log, f"{v:0{_W}d}.ckpt.json")) as f:
-                ck = json.load(f)
-            files = {n: dict(s) for n, s in ck["files"].items()}
-            schema_json = ck.get("schema")
-            txns = dict(ck.get("txns", {}))
-            constraints = dict(ck.get("constraints", {}))
-            colmap = ck.get("colmap")
-            key = ck.get("key")
-            partition_by = ck.get("partition_by")
-            start = v + 1
-            if "key" not in ck or "colmap" not in ck:
-                # pre-r13 checkpoint without the column-mapping
-                # fields: recover key/colmap from retained commits
-                # BELOW the checkpoint, exactly as txnlog.snapshot
-                # does (ADVICE r14 — the two replays must agree, and
-                # the writer must never stage logical-named files
-                # into a physically-mapped layout).
-                for pv in versions:
-                    if pv >= start:
-                        break
-                    with open(os.path.join(
-                            log, f"{pv:0{_W}d}.json")) as pf:
-                        pc = json.load(pf)
-                    if "key" not in ck and "key" in pc:
-                        key = pc["key"]
-                    if "colmap" not in ck and "colmap" in pc:
-                        colmap = pc["colmap"]
-            break
-    for v in versions:
-        if v < start or v > target:
-            continue
-        with open(os.path.join(log, f"{v:0{_W}d}.json")) as f:
-            c = json.load(f)
-        for name in c.get("remove", []):
-            files.pop(name, None)
-        for a in c.get("add", []):
-            files[a["file"]] = {"rows": a["rows"],
-                                "cols": a.get("cols") or {},
-                                "pv": a.get("pv")}
-        for d in c.get("dv", []):
-            files[d["file"]]["dv"] = d["ranges"]
-        schema_json = c.get("schema", schema_json)
-        if "constraints" in c:
-            constraints = dict(c["constraints"])
-        if "colmap" in c:
-            colmap = c["colmap"]
-        if "key" in c:
-            key = c["key"]
-        if "partition_by" in c:
-            partition_by = c["partition_by"]
-        t = c.get("txn")
-        if t:
-            txns[t["app"]] = max(t["version"],
-                                 txns.get(t["app"], t["version"]))
-    if schema_json is None:
+def _meta(table: str, version: int | None):
+    """The replayed snapshot, refusing a log that records no schema."""
+    snap = replay(table, version)
+    if snap.schema_json is None:
         raise FileNotFoundError(
             f"txnlog: no schema recorded in any retained commit or "
             f"checkpoint of {table}")
-    return (files, schema_json, txns, constraints, key, colmap,
-            target, partition_by)
-
-
-def _replay(table: str, version: int | None):
-    """(files, nullable schema, colmap) — the read-path view of
-    _replay_meta (kept as the reader's seam; byte-compat pinned in
-    tests)."""
-    (files, schema_json, _t, _c, _k, colmap, _v,
-     _p) = _replay_meta(table, version)
-    return files, _nullable_schema_json(schema_json), colmap
-
-
-def _nullable_schema_json(schema_json: str) -> str:
-    """The logged schema with every field forced NULLABLE: a
-    schema-evolving append logs the new column with the frame's own
-    nullability, but pre-evolution files NULL-fill it on read — the
-    read schema must admit those nulls (Spark's native parquet reader
-    relaxes nullability the same way; an Arrow batch with nulls in a
-    declared-non-nullable int column crashes the vectorized reader)."""
-    d = json.loads(schema_json)
-    for f in d.get("fields", []):
-        f["nullable"] = True
-    return json.dumps(d)
-
-
-class _SnapshotFilePartition(InputPartition):
-    def __init__(self, path: str, dv_ranges: list | None,
-                 pv: dict | None = None):
-        self.path = path
-        self.dv_ranges = dv_ranges
-        #: raw hive partition-value fragments from the add action
-        #: (r14 partitioned tables) — decoded executor-side
-        self.pv = pv
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _pv_constant(raw: str | None, n: int, arrow_type):
-    """One partition column as a constant Arrow column: the raw hive
-    dir fragment unescapes and casts through Arrow's string parser
-    (ISO dates/timestamps, decimals, ints — the same value space
-    txnlog._pv_decode covers); the null marker yields nulls."""
-    import pyarrow as pa
-    from urllib.parse import unquote
-    if raw is None or raw == _HIVE_NULL:
-        return pa.nulls(n, arrow_type)
-    return pa.array([unquote(raw)] * n).cast(arrow_type)
-
-
-def _stats_decode(v):
-    """Inverse of txnlog._stats_encode (duplicated — self-contained
-    module; byte-compat pinned in tests/test_txnlog.py)."""
-    import datetime
-    if isinstance(v, dict):
-        if v.get("t") == "ts":
-            return datetime.datetime.fromisoformat(v["v"])
-        if v.get("t") == "d":
-            return datetime.date.fromisoformat(v["v"])
-    return v
-
-
-def _interval_hit(stats: dict, col: str, op: str, val) -> bool:
-    """Same contract as txnlog._interval_hit: False only when the
-    file's recorded [min, max] PROVES no row can match."""
-    iv = (stats.get("cols") or {}).get(col)
-    if iv is None:
-        return True
-    lo, hi = _stats_decode(iv[0]), _stats_decode(iv[1])
-    try:
-        if op == "=":
-            return lo <= val <= hi
-        if op == "<":
-            return lo < val
-        if op == "<=":
-            return lo <= val
-        if op == ">":
-            return hi > val
-        if op == ">=":
-            return hi >= val
-        if op == "in":
-            return any(lo <= v <= hi for v in val)
-    except TypeError:
-        return True
-    return True
+    return snap
 
 
 class TxnlogBatchReader(DataSourceReader):
@@ -308,7 +111,7 @@ class TxnlogBatchReader(DataSourceReader):
         """File-skipping pushdown (Spark 4.1 DataSource filter API):
         translate the simple comparison filters into (col, op,
         literal) conjuncts evaluated against the per-column [min, max]
-        intervals each commit records (txnlog._file_stats), so
+        intervals each commit records (logcore.file_stats), so
         partitions() emits only interval-hit files.  EVERY filter is
         returned as residual — the skip is file-granular, Spark still
         applies the row-level predicate (Delta's data-skipping
@@ -347,40 +150,35 @@ class TxnlogBatchReader(DataSourceReader):
         return filters              # all residual: row filtering is Spark's
 
     def partitions(self):
-        files, schema_json, colmap = _replay(self._table, self._version)
-        cm = colmap or {}
+        files = replay(self._table, self._version).files
+        cm = self._colmap or {}
         # r14 partitioned tables: a recorded partition value is an
         # EXACT [v, v] interval — inject it into the per-file stats so
         # the same conjunct machinery prunes whole partitions before
         # footer intervals ever matter
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType as _ST
-        arrow = to_arrow_schema(_ST.fromJson(json.loads(schema_json)))
-        types = {f.name: f.type for f in arrow}
+        types = {f.name: f.type for f in arrow_schema(self._schema_json)}
         for n, st in files.items():
             for c, raw in (st.get("pv") or {}).items():
                 t = types.get(c)
                 if t is None:
                     continue
                 try:
-                    v = _pv_constant(raw, 1, t)[0].as_py()
+                    v = pv_constant(raw, 1, t)[0].as_py()
                 except Exception:
                     continue            # undecodable: unprunable
-                enc = _stats_encode(v)
+                enc = stats_encode(v)
                 if enc is not None:
                     st["cols"] = {**(st.get("cols") or {}),
                                   c: [enc, enc]}
         pruning = [(cm.get(c, c), o, v) for c, o, v in self._pruning]
         keep = [n for n in sorted(files)
-                if all(_interval_hit(files[n], c, o, v)
+                if all(interval_hit(files[n], c, o, v)
                        for c, o, v in pruning)]
-        return [_SnapshotFilePartition(os.path.join(self._table, n),
-                                       files[n].get("dv"),
-                                       files[n].get("pv"))
+        return [FilePartition(os.path.join(self._table, n),
+                              files[n].get("pv"), files[n].get("dv"))
                 for n in keep]
 
-    def read(self, partition: _SnapshotFilePartition):
+    def read(self, partition: FilePartition):
         # executor-side: one parquet file -> Arrow batches aligned to
         # the LOGGED schema (pre-evolution files NULL-fill the added
         # columns) with the deletion vector masked — all vectorized.
@@ -389,151 +187,13 @@ class TxnlogBatchReader(DataSourceReader):
             # pyspark substitutes [None] for an empty partition list
             # (plan_data_source_read.py) — zero rows, not a crash
             return
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType as _ST
-        import pyarrow.parquet as pq
-
-        target = to_arrow_schema(_ST.fromJson(
-            json.loads(self._schema_json)))
-        cm = self._colmap or {}
-        pv = partition.pv or {}
-        t = pq.read_table(partition.path)
-        cols = []
-        for field in target:
-            phys = cm.get(field.name, field.name)
-            if phys in t.column_names:
-                cols.append(t.column(phys).cast(field.type))
-            elif phys in pv:
-                # r14 partitioned tables: the column lives in the
-                # directory name, not the file — a typed constant
-                cols.append(_pv_constant(pv[phys], t.num_rows,
-                                         field.type))
-            else:
-                cols.append(pa.nulls(t.num_rows, field.type))
-        t = pa.table(dict(zip(target.names, cols)), schema=target)
-        if partition.dv_ranges:
-            import numpy as np
-            keep = np.ones(t.num_rows, dtype=bool)
-            for s, e in partition.dv_ranges:
-                keep[s:e + 1] = False
-            t = t.filter(pa.array(keep))
-        yield from t.to_batches()
+        yield from read_file(partition.path,
+                             arrow_schema(self._schema_json),
+                             self._colmap, partition.pv,
+                             dead=partition.dv).to_batches()
 
 
 # ---------------------------------------------------------------- write
-#: mirror of txnlog.CHECKPOINT_EVERY / STATS_STR_MAX (byte-compat
-#: pinned in tests/test_txnlog.py) — self-contained, same reason as
-#: the replay duplicate
-_CHECKPOINT_EVERY = 10
-_STATS_STR_MAX = 64
-
-
-def _stats_encode(v):
-    """Mirror of txnlog._stats_encode (pinned in tests)."""
-    import datetime
-    if isinstance(v, bool) or v is None:
-        return None
-    if isinstance(v, (int, float)):
-        return v
-    if isinstance(v, str):
-        return v if len(v) <= _STATS_STR_MAX else None
-    if isinstance(v, datetime.datetime):
-        return {"t": "ts", "v": v.isoformat()}
-    if isinstance(v, datetime.date):
-        return {"t": "d", "v": v.isoformat()}
-    return None
-
-
-def _file_stats(fpath: str, key: str | None) -> dict:
-    """Mirror of txnlog._file_stats: rows + key interval + per-column
-    [min, max] from the parquet footer (no data scan).  Accumulates by
-    LEAF path — row-group chunks enumerate parquet leaves, so nested
-    columns shift positional indexing (see txnlog._file_stats); only
-    top-level primitives (no dot in the path) record an interval."""
-    import pyarrow.parquet as pq
-    md = pq.ParquetFile(fpath).metadata
-    acc: dict[str, list] = {}
-    dead: set[str] = set()
-    for rg in range(md.num_row_groups):
-        grp = md.row_group(rg)
-        for ci in range(grp.num_columns):
-            col = grp.column(ci)
-            name = col.path_in_schema
-            if "." in name or name in dead:
-                continue
-            st = col.statistics
-            try:
-                ok = st is not None and st.has_min_max
-                lo_hi = (st.min, st.max) if ok else None
-            except Exception:
-                # ArrowNotImplementedError for some physical types
-                # (e.g. INT96) — unprunable, never fatal
-                lo_hi = None
-            if lo_hi is None:
-                dead.add(name)
-                acc.pop(name, None)
-                continue
-            cur = acc.get(name)
-            if cur is None:
-                acc[name] = list(lo_hi)
-            else:
-                cur[0] = min(cur[0], lo_hi[0])
-                cur[1] = max(cur[1], lo_hi[1])
-    per: dict[str, list] = {}
-    for name, (cmin, cmax) in acc.items():
-        lo, hi = _stats_encode(cmin), _stats_encode(cmax)
-        if lo is not None and hi is not None:
-            per[name] = [lo, hi]
-    kiv = per.get(key) if key else None
-    return {"rows": md.num_rows,
-            "kmin": kiv[0] if kiv else None,
-            "kmax": kiv[1] if kiv else None,
-            "cols": per}
-
-
-def _link_claim_commit(table: str, version: int, payload: dict) -> bool:
-    """Mirror of txnlog._try_commit with the POSIX link(2) claim.
-    The DataSource committer runs in its own Python worker process, so
-    txnlog.set_claim_backend's module-global seam cannot reach it —
-    deployments on stores without atomic create use the Python verbs
-    (which honor the seam) for writes; this is documented on the
-    format."""
-    import uuid
-    log = _log_dir(table)
-    os.makedirs(log, exist_ok=True)
-    payload = {"version": version, **payload}
-    target = os.path.join(log, f"{version:0{_W}d}.json")
-    tmp = os.path.join(log, f".commit-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, target)
-        won = True
-    except FileExistsError:
-        won = False
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-    if won and version % _CHECKPOINT_EVERY == 0 and version > 0:
-        (files, schema_json, txns, constraints, key, colmap,
-         _, partition_by) = _replay_meta(table, version)
-        ck = os.path.join(log, f".ckpt-{uuid.uuid4().hex}")
-        with open(ck, "w") as f:
-            json.dump({"version": version, "files": files,
-                       "schema": schema_json, "txns": txns,
-                       "constraints": constraints,
-                       "colmap": colmap, "key": key,
-                       "partition_by": partition_by}, f)
-        os.replace(ck, os.path.join(log,
-                                    f"{version:0{_W}d}.ckpt.json"))
-    return won
-
-
 def _validate_staged(table: str, adds: list[dict],
                      constraints: dict[str, str],
                      logged_fields: list[str],
@@ -623,20 +283,6 @@ class _TxnWriteMessage(WriterCommitMessage):
         self.adds = adds
 
 
-def _pv_frag(v) -> str:
-    """One partition value → the raw hive dir fragment txnlog's
-    reader decodes (``_pv_decode`` unquotes, parses by the logged
-    type; booleans compare against 'true'; timestamps tolerate the
-    space form).  Percent-escaping EVERY special character makes any
-    string round-trip."""
-    from urllib.parse import quote
-    if v is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return quote(str(v), safe="")
-
-
 class _TxnlogWriterBase:
     """Shared task-side write for the batch writer and the streaming
     sink: each task streams its Arrow batches into ONE immutable
@@ -688,7 +334,7 @@ class _TxnlogWriterBase:
                 writer.close()
         if writer is None:
             return _TxnWriteMessage([])         # empty partition
-        stats = _file_stats(fpath, key_phys)
+        stats = file_stats(fpath, key_phys)
         if stats["rows"] == 0:
             os.remove(fpath)
             return _TxnWriteMessage([])
@@ -724,7 +370,7 @@ class _TxnlogWriterBase:
                     data = data.rename_columns(
                         [cm.get(n, n) for n in data.schema.names])
                 for combo, idxs in by_combo.items():
-                    frag = "/".join(f"{c}={_pv_frag(v)}"
+                    frag = "/".join(f"{c}={pv_frag(v)}"
                                     for c, v in zip(pby, combo))
                     sub = data.take(idxs)
                     sink = sinks.get(frag)
@@ -736,12 +382,12 @@ class _TxnlogWriterBase:
                         w = pq.ParquetWriter(
                             os.path.join(self._table, name),
                             sub.schema)
-                        pv = {c: _pv_frag(v)
+                        pv = {c: pv_frag(v)
                               for c, v in zip(pby, combo)}
-                        # the ONE _stats_encode (with the string cap)
+                        # the ONE stats_encode (with the string cap)
                         # — a >64-char string partition key drops its
                         # bounds here exactly as txnlog.append would
-                        kb = (_stats_encode(dict(zip(pby, combo))
+                        kb = (stats_encode(dict(zip(pby, combo))
                                             .get(self._key))
                               if self._key in pby else None)
                         sinks[frag] = sink = [w, name, pv, kb]
@@ -752,7 +398,7 @@ class _TxnlogWriterBase:
         adds = []
         for w, name, pv, kb in sinks.values():
             fpath = os.path.join(self._table, name)
-            stats = _file_stats(fpath, key_phys)
+            stats = file_stats(fpath, key_phys)
             if stats["rows"] == 0:
                 os.remove(fpath)
                 continue
@@ -824,21 +470,22 @@ class TxnlogBatchWriter(_TxnlogWriterBase, DataSourceArrowWriter):
 
     def _commit_adds(self, adds: list[dict]) -> None:
         for _ in range(self.MAX_ATTEMPTS):
-            if not _versions(self._table):
+            if not list_versions(self._table):
                 # no log: CREATE the table at v0 (requires a key for
                 # merge-skipping stats; readable without one)
+                os.makedirs(log_dir(self._table), exist_ok=True)
                 payload = {"op": "create", "key": self._key,
                            "add": adds, "remove": [],
                            "schema": self._plan_schema_json}
                 if self._txn is not None:
                     payload["txn"] = {"app": self._txn[0],
                                       "version": self._txn[1]}
-                if _link_claim_commit(self._table, 0, payload):
+                if commit(self._table, 0, payload, posix_link_claim):
                     return
                 continue            # lost the create race: re-derive
-            (files, schema_json, txns, constraints, logged_key,
-             colmap, version, partition_by) = _replay_meta(
-                self._table, None)
+            snap = _meta(self._table, None)
+            schema_json, colmap = snap.schema_json, snap.colmap
+            partition_by = snap.partition_by
             if partition_by:
                 # r15: tasks stage hive layouts when the PLAN saw the
                 # partition spec.  An add without matching pv means the
@@ -858,7 +505,7 @@ class TxnlogBatchWriter(_TxnlogWriterBase, DataSourceArrowWriter):
                         f"values (concurrent create/spec change) — "
                         f"retry the write")
             if self._txn is not None and \
-                    txns.get(self._txn[0], -1) >= self._txn[1]:
+                    snap.txns.get(self._txn[0], -1) >= self._txn[1]:
                 _drop_staged(self._table, adds)
                 return              # idempotent replay: already applied
             if colmap != self._plan_colmap:
@@ -876,11 +523,11 @@ class TxnlogBatchWriter(_TxnlogWriterBase, DataSourceArrowWriter):
                 self._plan_schema_json, schema_json, self._evolve)
             logged_fields = [f["name"] for f in
                              json.loads(schema_json)["fields"]]
-            _validate_staged(self._table, adds, constraints,
+            _validate_staged(self._table, adds, snap.constraints,
                              logged_fields, self._colmap)
             op = "replace" if self._overwrite else "append"
             payload = {"op": op, "add": adds,
-                       "remove": sorted(files) if self._overwrite
+                       "remove": sorted(snap.files) if self._overwrite
                        else []}
             if widened is not None:
                 payload["schema"] = widened
@@ -893,7 +540,8 @@ class TxnlogBatchWriter(_TxnlogWriterBase, DataSourceArrowWriter):
             if self._txn is not None:
                 payload["txn"] = {"app": self._txn[0],
                                   "version": self._txn[1]}
-            if _link_claim_commit(self._table, version + 1, payload):
+            if commit(self._table, snap.version + 1, payload,
+                      posix_link_claim):
                 return
         raise RuntimeError(
             f"txnlog writer lost {self.MAX_ATTEMPTS} version races "
@@ -972,7 +620,7 @@ class TxnlogBatchDataSource(DataSource):
             raise ValueError(
                 "txnlog: pass versionAsOf OR timestampAsOf, not both")
         if ts is not None:
-            out = _resolve_timestamp(
+            out = resolve_timestamp(
                 _norm_path(self.options["path"]), ts)
         else:
             out = None if v is None else int(v)
@@ -993,19 +641,18 @@ class TxnlogBatchDataSource(DataSource):
         stage_colmap) — stage_colmap extends the table's colmap with
         FRESH physical names for evolving columns (tasks stage under
         it; the commit records it)."""
-        if not _versions(table):
+        if not list_versions(table):
             return None, None, None, None
-        (_, schema_json, _, _, logged_key, colmap,
-         _, partition_by) = _replay_meta(table, None)
-        new_cols, _w = _check_write_schema(schema.json(), schema_json,
-                                           evolve)
+        snap = _meta(table, None)
+        new_cols, _w = _check_write_schema(schema.json(),
+                                           snap.schema_json, evolve)
         stage = None
-        if colmap is not None:
+        if snap.colmap is not None:
             import uuid
-            stage = {**colmap,
+            stage = {**snap.colmap,
                      **{c: f"c-{uuid.uuid4().hex[:12]}"
                         for c in new_cols}}
-        return logged_key, colmap, stage, partition_by
+        return snap.key, snap.colmap, stage, snap.partition_by
 
     def writer(self, schema: StructType,
                overwrite: bool) -> TxnlogBatchWriter:
@@ -1037,9 +684,9 @@ class TxnlogBatchDataSource(DataSource):
                                   partition_by=pby)
 
     def schema(self) -> StructType:
-        _, schema_json, _ = _replay(_norm_path(self.options["path"]),
-                                    self._version())
-        return StructType.fromJson(json.loads(schema_json))
+        snap = _meta(_norm_path(self.options["path"]), self._version())
+        return StructType.fromJson(json.loads(
+            nullable_schema_json(snap.schema_json)))
 
     def reader(self, schema: StructType) -> TxnlogBatchReader:
         # Pin a CONCRETE version for latest reads (ADVICE r11): with
@@ -1051,9 +698,8 @@ class TxnlogBatchDataSource(DataSource):
         # the schema came from.
         version = self._version()
         if version is None:
-            version = _versions(_norm_path(self.options["path"]))[-1]
-        _, schema_json, colmap = _replay(
-            _norm_path(self.options["path"]), version)
+            version = list_versions(_norm_path(self.options["path"]))[-1]
+        snap = _meta(_norm_path(self.options["path"]), version)
         skipping = str(self.options.get("dataSkipping",
                                         "false")).lower() == "true"
         pruning = None
@@ -1065,8 +711,9 @@ class TxnlogBatchDataSource(DataSource):
             # relation caching, unlike pushFilters; see pushFilters)
             pruning = [tuple(f) for f in json.loads(declared)]
         return TxnlogBatchReader(_norm_path(self.options["path"]), version,
-                                 schema_json, skipping=skipping,
-                                 pruning=pruning, colmap=colmap)
+                                 nullable_schema_json(snap.schema_json),
+                                 skipping=skipping, pruning=pruning,
+                                 colmap=snap.colmap)
 
 
 def register(spark) -> None:
@@ -1095,23 +742,7 @@ def register(spark) -> None:
     # thread opens a lookup-miss window for queries mid-plan on other
     # threads — observed as flaky DATA_SOURCE_NOT_FOUND under pooled
     # tests
-    with _REGISTER_LOCK:
-        if spark not in _REGISTERED:
-            spark.dataSource.register(TxnlogBatchDataSource)
-            _REGISTERED.add(spark)
+    _register(spark, TxnlogBatchDataSource)
 
 
-_REGISTER_LOCK = __import__("threading").Lock()
-_REGISTERED = __import__("weakref").WeakSet()
-
-
-def _register_by_value() -> None:
-    import sys
-    try:
-        from pyspark import cloudpickle
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:                       # pragma: no cover - old API
-        pass
-
-
-_register_by_value()
+ship_by_value(__name__)

@@ -83,9 +83,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-_LOG = "_txnlog"
-_W = 20                       # zero-padded version width in filenames
-CHECKPOINT_EVERY = 10
+from . import logcore as _core
+from .logcore import (CHECKPOINT_EVERY, LOG as _LOG, Snapshot,
+                      ckpt_name as _ckpt_name, commit_name as _commit_name,
+                      file_stats as _file_stats,
+                      interval_hit as _interval_hit,
+                      list_versions as _list_versions, log_dir as _log_dir,
+                      posix_link_claim as _posix_link_claim,
+                      pv_decode as _pv_decode, ranges_count as _ranges_count,
+                      ranges_from_indexes as _ranges_from_indexes,
+                      ranges_subtract as _ranges_subtract,
+                      ranges_union as _ranges_union, resolve_timestamp,
+                      stats_decode as _stats_decode,
+                      stats_encode as _stats_encode)
+
 MERGE_MAX_ATTEMPTS = 5
 #: metadata-only commits (constraints, rename/drop column, restore)
 #: are cheap to retry — no staging, no data read on an unchanged
@@ -112,131 +123,10 @@ class CommitConflictError(RuntimeError):
     optimistic concurrency never leaves partial state."""
 
 
-class Snapshot:
-    """Immutable view of the table at one committed version:
-    ``files`` maps data-file name → its stats dict ({rows, kmin, kmax});
-    ``txns`` maps application id → the highest writer-supplied version
-    committed for it (Delta's ``txn`` action — the mechanism that makes
-    streaming writes idempotent: content and application version commit
-    in ONE atomic log entry, so there is no crash window between
-    "view updated" and "batch marked applied")."""
-
-    def __init__(self, version: int, files: dict[str, dict],
-                 schema_json: str | None, txns: dict[str, int],
-                 constraints: dict[str, str] | None = None,
-                 colmap: dict[str, str] | None = None,
-                 key: str | None = None,
-                 partition_by: list[str] | None = None):
-        self.version = version
-        self.files = files
-        self.schema_json = schema_json
-        self.txns = txns
-        #: hive-style partition columns fixed at create_table (r14,
-        #: Delta's partitionValues / the reference's declarative
-        #: partitioning on the visit/fact tables): data files live in
-        #: ``col=value`` directories, each add action records the
-        #: file's partition values, and partition pruning runs BEFORE
-        #: footer-stats pruning (an exact [v, v] interval per file).
-        #: None/[] = unpartitioned.
-        self.partition_by = partition_by or None
-        #: CHECK constraints (name → SQL boolean expr) enforced on
-        #: every write verb — Delta's table constraints (r11)
-        self.constraints = constraints or {}
-        #: column mapping (r13, Delta's columnMapping mode "name"):
-        #: COMPLETE logical → physical name map once a rename/drop has
-        #: activated it, else None (identity — pre-mapping tables pay
-        #: zero translation).  Data files always store PHYSICAL names;
-        #: the logged schema is logical.  Physical names never change
-        #: after assignment (renames are logical-only), and columns
-        #: added post-activation get FRESH uuid physical names so a
-        #: re-added logical name can never resurrect a dropped
-        #: column's data.
-        self.colmap = colmap
-        #: the logged merge key (logical name; renames update it)
-        self.key = key
-
-
-def _log_dir(path: str) -> str:
-    return os.path.join(path, _LOG)
-
-
-def _commit_name(version: int) -> str:
-    return f"{version:0{_W}d}.json"
-
-
-def _ckpt_name(version: int) -> str:
-    return f"{version:0{_W}d}.ckpt.json"
-
-
-def _list_versions(path: str) -> list[int]:
-    try:
-        names = os.listdir(_log_dir(path))
-    except FileNotFoundError:
-        return []
-    return sorted(int(n[:_W]) for n in names
-                  if n.endswith(".json") and not n.endswith(".ckpt.json"))
-
-
-# ----------------------------------------------------------- DV ranges
-# A deletion vector is a sorted list of inclusive [start, end] row-index
-# ranges within ONE data file — run-length encoded so a contiguous
-# erasure of 10k rows is one entry, and small enough to live inline in
-# the commit JSON (the log stays the single source of truth; Delta
-# keeps bitmaps in side files for the same structure).
-
-def _ranges_from_indexes(idx: list[int]) -> list[list[int]]:
-    """Sorted distinct row indexes → inclusive [start, end] runs."""
-    out: list[list[int]] = []
-    for i in idx:
-        if out and i == out[-1][1] + 1:
-            out[-1][1] = i
-        elif out and i <= out[-1][1]:
-            continue                      # duplicate index
-        else:
-            out.append([i, i])
-    return out
-
-
-def _ranges_union(a: list, b: list) -> list[list[int]]:
-    """Union of two inclusive range lists, normalized."""
-    runs = sorted([list(r) for r in a] + [list(r) for r in b])
-    out: list[list[int]] = []
-    for s, e in runs:
-        if out and s <= out[-1][1] + 1:
-            out[-1][1] = max(out[-1][1], e)
-        else:
-            out.append([s, e])
-    return out
-
-
-def _ranges_subtract(a: list, b: list) -> list[list[int]]:
-    """Ranges in ``a`` not covered by ``b`` (the CDC dv-delta: rows
-    dead at v_to that were still live at v_from)."""
-    out: list[list[int]] = []
-    bs = [list(r) for r in sorted(b)]
-    for s, e in sorted(a):
-        cur = s
-        for t, u in bs:
-            if u < cur or t > e:
-                continue
-            if t > cur:
-                out.append([cur, t - 1])
-            cur = max(cur, u + 1)
-            if cur > e:
-                break
-        if cur <= e:
-            out.append([cur, e])
-    return out
-
-
-def _ranges_count(ranges: list) -> int:
-    return sum(e - s + 1 for s, e in ranges)
-
-
 def snapshot(path: str, version: int | None = None) -> Snapshot:
     """Replay the commit log (from the newest usable checkpoint) up to
-    ``version`` (default: latest).  Pure metadata reads — no data file
-    is opened.
+    ``version`` (default: latest) — :func:`logcore.replay`.  Pure
+    metadata reads — no data file is opened.
 
     Read-side repair (r12, Delta's fix-the-log-on-read): when a claim
     BACKEND with a ``recover_table`` sweep is installed
@@ -255,84 +145,7 @@ def snapshot(path: str, version: int | None = None) -> Snapshot:
             # coordinator must not take reads down with it — writers
             # will surface it loudly on the next claim
             pass
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no txnlog table at {path}")
-    target = versions[-1] if version is None else version
-    if target not in versions:
-        raise ValueError(f"version {target} not in log (have "
-                         f"{versions[0]}..{versions[-1]})")
-    files: dict[str, dict] = {}
-    schema_json: str | None = None
-    txns: dict[str, int] = {}
-    constraints: dict[str, str] = {}
-    colmap: dict[str, str] | None = None
-    key: str | None = None
-    partition_by: list[str] | None = None
-    start = 0
-    # newest checkpoint at or below the target bounds the replay
-    for v in sorted((int(n[:_W]) for n in os.listdir(_log_dir(path))
-                     if n.endswith(".ckpt.json")), reverse=True):
-        if v <= target:
-            with open(os.path.join(_log_dir(path), _ckpt_name(v))) as f:
-                ck = json.load(f)
-            files = dict(ck["files"])
-            schema_json = ck.get("schema")
-            txns = dict(ck.get("txns", {}))
-            constraints = dict(ck.get("constraints", {}))
-            colmap = ck.get("colmap")
-            key = ck.get("key")
-            partition_by = ck.get("partition_by")
-            start = v + 1
-            if "key" not in ck or "colmap" not in ck:
-                # checkpoint written before the r13 column-mapping
-                # fields existed (ADVICE r13): replaying from it would
-                # reset key/colmap to None on an existing table and
-                # silently disable drop_column's merge-key guard.
-                # Recover them from the retained commits BELOW the
-                # checkpoint (the create commit logs the key; any
-                # rename/drop logs key/colmap) instead of defaulting.
-                for pv in versions:
-                    if pv >= start:
-                        break
-                    with open(os.path.join(_log_dir(path),
-                                           _commit_name(pv))) as pf:
-                        pc = json.load(pf)
-                    if "key" not in ck and "key" in pc:
-                        key = pc["key"]
-                    if "colmap" not in ck and "colmap" in pc:
-                        colmap = pc["colmap"]
-            break
-    for v in versions:
-        if v < start or v > target:
-            continue
-        with open(os.path.join(_log_dir(path), _commit_name(v))) as f:
-            c = json.load(f)
-        for name in c.get("remove", []):
-            files.pop(name, None)
-        for a in c.get("add", []):
-            files[a["file"]] = {k: a[k] for k in
-                                ("rows", "kmin", "kmax", "cols", "pv")
-                                if k in a}
-        for d in c.get("dv", []):
-            # the action carries the file's COMPLETE (cumulative) DV —
-            # it supersedes, never appends to, any earlier vector
-            files[d["file"]]["dv"] = d["ranges"]
-        schema_json = c.get("schema", schema_json)
-        if "constraints" in c:
-            constraints = dict(c["constraints"])   # full map, latest wins
-        if "colmap" in c:
-            colmap = c["colmap"]                   # full map (or null)
-        if "key" in c:
-            key = c["key"]
-        if "partition_by" in c:
-            partition_by = c["partition_by"]       # create-only, fixed
-        t = c.get("txn")
-        if t:
-            txns[t["app"]] = max(t["version"],
-                                 txns.get(t["app"], t["version"]))
-    return Snapshot(target, files, schema_json, txns, constraints,
-                    colmap, key, partition_by)
+    return _core.replay(path, version)
 
 
 #: Pluggable version-claim backend — the ONE point where the whole
@@ -358,206 +171,13 @@ def set_claim_backend(fn) -> None:
     _claim_backend = fn
 
 
-def _posix_link_claim(tmp: str, target: str) -> bool:
-    """link(2) fails with EEXIST if another writer won AND publishes
-    complete content or nothing — a crash can never leave a truncated
-    commit file for snapshot() to choke on (O_CREAT|O_EXCL alone
-    would claim the version before its bytes exist)."""
-    try:
-        os.link(tmp, target)
-        return True
-    except FileExistsError:
-        return False
-
-
-#: truncation floor marker: the first RETAINED version after the most
-#: recent truncate_history, published atomically BEFORE any commit
-#: file is deleted.  Claims below the floor are refused O(1), and the
-#: floor is re-checked after a won claim — the two reads bracket the
-#: whole claim, so a truncation landing anywhere inside it cannot
-#: leave a resurrected version behind.
-_TRUNC_MARK = "_truncated_below"
-
-
-def _truncated_floor(path: str) -> int:
-    try:
-        with open(os.path.join(_log_dir(path), _TRUNC_MARK)) as f:
-            return int(f.read().strip() or 0)
-    except (FileNotFoundError, ValueError):
-        return 0
-
-
-def _newest_checkpoint_version(path: str) -> int:
-    try:
-        return max((int(n[:_W])
-                    for n in os.listdir(_log_dir(path))
-                    if n.endswith(".ckpt.json")), default=-1)
-    except FileNotFoundError:
-        return -1
-
-
 def _try_commit(path: str, version: int, payload: dict) -> bool:
-    """Atomically claim ``version`` through the claim backend (POSIX
-    link by default — see _claim_backend for the object-store seam).
-    Returns False, side-effect free, when the version was already
-    taken — or (r15) when the number sits at or below the newest
-    CHECKPOINT: truncate_history deletes dropped commit FILES, which
-    would otherwise make their version numbers claimable again, and a
-    writer stalled long enough to still hold such a target would
-    RESURRECT a version below the cutoff with state derived against
-    ancient history (found by the serializability lane's vacuum verb:
-    an update_where stalled in DV planning re-claimed dropped v2
-    under a cutoff checkpoint at v3 — every bounded replay skipped
-    it, and the direct replay of v2 was inconsistent).  Refusing the
-    claim sends the writer back through its ordinary re-derive loop.
-
-    The guard is gated on the O(1) truncation-floor marker: numbers
-    are only ever freed by truncate_history, which publishes the
-    floor before deleting anything, so never-truncated tables (the
-    common case) skip the O(retained-versions) checkpoint scan
-    entirely on this hottest write path.  The floor is RE-CHECKED
-    after a won link (post-review r15): a truncation landing between
-    the pre-check and the link can no longer leave the resurrected
-    version behind — the writer deletes its own just-linked commit
-    and reports the claim lost."""
-    floor = _truncated_floor(path)
-    if floor and (version < floor
-                  or version <= _newest_checkpoint_version(path)):
-        return False
-    payload = {"version": version, **payload}
-    target = os.path.join(_log_dir(path), _commit_name(version))
-    tmp = os.path.join(_log_dir(path), f".commit-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        won = (_claim_backend or _posix_link_claim)(tmp, target)
-    finally:
-        with contextlib.suppress(OSError):
-            os.remove(tmp)
-    if not won:
-        return False
-    if version < _truncated_floor(path):
-        # truncation raced the claim: the floor rose between the
-        # pre-check and the link, so this number was freed by a
-        # truncate whose cutoff checkpoint does not include it —
-        # self-revert before anything can replay the resurrected
-        # version (bounded replays would skip it; a direct replay
-        # would be inconsistent)
-        with contextlib.suppress(OSError):
-            os.remove(target)
-        return False
-    _maybe_checkpoint(path, version)
-    return True
-
-
-def _maybe_checkpoint(path: str, version: int) -> None:
-    if version % CHECKPOINT_EVERY != 0 or version == 0:
-        return
-    snap = snapshot(path, version)
-    tmp = os.path.join(_log_dir(path), f".ckpt-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump({"version": version, "files": snap.files,
-                   "schema": snap.schema_json, "txns": snap.txns,
-                   "constraints": snap.constraints,
-                   "colmap": snap.colmap, "key": snap.key,
-                   "partition_by": snap.partition_by}, f)
-    os.replace(tmp, os.path.join(_log_dir(path), _ckpt_name(version)))
-
-
-#: longest string min/max recorded in per-column stats; longer values
-#: drop the COLUMN's entry for that file (omission = unprunable =
-#: correct) rather than truncating, because a truncated max
-#: underestimates the interval and would prune files that match
-STATS_STR_MAX = 64
-
-
-def _stats_encode(v):
-    """JSON-encode one footer min/max value; None = not encodable
-    (drop the column's stats for this file)."""
-    import datetime
-    if isinstance(v, bool) or v is None:
-        return None                 # boolean intervals never prune
-    if isinstance(v, (int, float)):
-        return v
-    if isinstance(v, str):
-        return v if len(v) <= STATS_STR_MAX else None
-    if isinstance(v, datetime.datetime):
-        return {"t": "ts", "v": v.isoformat()}
-    if isinstance(v, datetime.date):
-        return {"t": "d", "v": v.isoformat()}
-    return None
-
-
-def _stats_decode(v):
-    import datetime
-    if isinstance(v, dict):
-        if v.get("t") == "ts":
-            return datetime.datetime.fromisoformat(v["v"])
-        if v.get("t") == "d":
-            return datetime.date.fromisoformat(v["v"])
-    return v
-
-
-def _file_stats(fpath: str, key: str) -> dict:
-    """rows + merge-key min/max + PER-COLUMN [min, max] intervals from
-    the parquet FOOTER (no data scan; catalog.table_row_count's
-    discipline).  Missing statistics fall back to an unbounded
-    interval — correct, just unprunable.
-
-    The ``cols`` map (VERDICT r11 item 4) is what lets the READ path
-    skip files on any predicate column, not just the merge key: at
-    100 TB a table has tens of thousands of files and a selective
-    non-key filter should open only the interval-hit ones — Delta
-    records the same per-column min/max in its add actions."""
-    import pyarrow.parquet as pq
-    md = pq.ParquetFile(fpath).metadata
-    # Accumulate by the LEAF path, not the arrow field index: row-group
-    # column chunks enumerate parquet LEAVES, so any nested column
-    # (struct/list) shifts positional indexing and attributes another
-    # column's interval — which would prune files that DO match.  Only
-    # top-level primitives (path == field name, no dot) get stats;
-    # nested leaves ("s.x", "emb.list.element") are skipped — their
-    # parent column is simply unprunable, which is always correct.
-    acc: dict[str, list] = {}
-    dead: set[str] = set()
-    for rg in range(md.num_row_groups):
-        grp = md.row_group(rg)
-        for ci in range(grp.num_columns):
-            col = grp.column(ci)
-            name = col.path_in_schema
-            if "." in name or name in dead:
-                continue
-            st = col.statistics
-            try:
-                ok = st is not None and st.has_min_max
-                lo_hi = (st.min, st.max) if ok else None
-            except Exception:
-                # pyarrow raises ArrowNotImplementedError extracting
-                # min/max for some physical types (e.g. INT96) —
-                # unprunable, never fatal
-                lo_hi = None
-            if lo_hi is None:
-                dead.add(name)
-                acc.pop(name, None)
-                continue
-            cur = acc.get(name)
-            if cur is None:
-                acc[name] = list(lo_hi)
-            else:
-                cur[0] = min(cur[0], lo_hi[0])
-                cur[1] = max(cur[1], lo_hi[1])
-    per: dict[str, list] = {}
-    for name, (cmin, cmax) in acc.items():
-        lo, hi = _stats_encode(cmin), _stats_encode(cmax)
-        if lo is not None and hi is not None:
-            per[name] = [lo, hi]
-    kiv = per.get(key)
-    return {"rows": md.num_rows,
-            "kmin": kiv[0] if kiv else None,
-            "kmax": kiv[1] if kiv else None,
-            "cols": per}
+    """:func:`logcore.commit` through the installed claim backend
+    (POSIX link by default — see _claim_backend for the object-store
+    seam): the truncation-floor guard, the claim and the periodic
+    checkpoint."""
+    return _core.commit(path, version, payload,
+                        _claim_backend or _posix_link_claim)
 
 
 # ------------------------------------------------- column mapping (r13)
@@ -631,38 +251,6 @@ def _identity_colmap(schema: StructType) -> dict[str, str]:
 # partitioning on the visit/fact tables
 # (/root/reference/src/docker/database/Dockerfile:8).
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _pv_decode(raw: str, dtype):
-    """Decode one raw partition-directory fragment (as Spark's
-    partitioned write escaped it) to the Python value of the logged
-    column type.  ``_HIVE_NULL`` → None."""
-    import datetime
-    import decimal
-    from urllib.parse import unquote
-
-    from pyspark.sql.types import (BooleanType, ByteType, DateType,
-                                   DecimalType, DoubleType, FloatType,
-                                   IntegerType, LongType, ShortType,
-                                   TimestampNTZType, TimestampType)
-    if raw == _HIVE_NULL:
-        return None
-    s = unquote(raw)
-    if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
-        return int(s)
-    if isinstance(dtype, (FloatType, DoubleType)):
-        return float(s)
-    if isinstance(dtype, BooleanType):
-        return s == "true"
-    if isinstance(dtype, DateType):
-        return datetime.date.fromisoformat(s)
-    if isinstance(dtype, (TimestampType, TimestampNTZType)):
-        return datetime.datetime.fromisoformat(s.replace(" ", "T"))
-    if isinstance(dtype, DecimalType):
-        return decimal.Decimal(s)
-    return s
-
 
 def _pv_types(schema: StructType,
               partition_by: list[str]) -> dict[str, object]:
@@ -690,6 +278,16 @@ def _walk_staged(stage: str) -> list[tuple[str, str]]:
     return sorted(out)
 
 
+def _require_partition_cols(df: DataFrame,
+                            partition_by: list[str] | None) -> None:
+    """Refuse a write whose frame lacks a partition column — checked
+    before any union that would NULL-fill it into the null partition."""
+    missing = [c for c in partition_by or () if c not in df.columns]
+    if missing:
+        raise ValueError(f"write to partitioned table omits partition "
+                         f"column(s) {missing}")
+
+
 def _stage_data_files(spark: SparkSession, df: DataFrame, path: str,
                       key: str, version_hint: int,
                       colmap: dict[str, str] | None = None,
@@ -706,12 +304,7 @@ def _stage_data_files(spark: SparkSession, df: DataFrame, path: str,
     values — the merge key's stats fall back to the partition value
     when the key IS a partition column (partition files do not store
     the column physically)."""
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"write to partitioned table omits partition "
-                f"column(s) {missing}")
+    _require_partition_cols(df, partition_by)
     pv_types = _pv_types(df.schema, partition_by) if partition_by \
         else {}
     df = _to_physical(df, colmap)
@@ -899,35 +492,6 @@ def _read_files(spark: SparkSession, path: str, schema: StructType,
     return df
 
 
-def _interval_hit(stats: dict, col: str, op: str, val) -> bool:
-    """Can a file with these per-column stats contain a row satisfying
-    ``col <op> val``?  True (keep the file) whenever the answer is
-    not provably no — missing stats, un-stats'd column, or a type
-    mismatch all keep the file (skipping is an optimization, never a
-    correctness lever)."""
-    iv = (stats.get("cols") or {}).get(col)
-    if iv is None:
-        return True
-    lo, hi = _stats_decode(iv[0]), _stats_decode(iv[1])
-    try:
-        if op == "=":
-            return lo <= val <= hi
-        if op == "<":
-            return lo < val
-        if op == "<=":
-            return lo <= val
-        if op == ">":
-            return hi > val
-        if op == ">=":
-            return hi >= val
-        if op == "in":
-            # an IN list can match iff ANY member falls in [lo, hi]
-            return any(lo <= v <= hi for v in val)
-    except TypeError:
-        return True                 # incomparable literal: no pruning
-    return True                     # unknown op: no pruning
-
-
 def _pv_hit(stats: dict, col: str, op: str, val, dtype) -> bool:
     """Partition pruning for one conjunct: the file's recorded
     partition value is an EXACT [v, v] interval — no footer, no
@@ -982,34 +546,6 @@ def prune_files(snap: Snapshot,
                    for c, o, v in part)
             and all(_interval_hit(snap.files[n], c, o, v)
                     for c, o, v in rest)]
-
-
-def resolve_timestamp(path: str, ts: float) -> int:
-    """``timestampAsOf`` resolution (r12, Delta's rule): the LATEST
-    version whose commit landed at or before ``ts`` (epoch seconds),
-    judged by the commit FILE's modification time — the same authority
-    Delta uses (no clock is recorded in the payload; the log file IS
-    the commit event).  Non-monotonic mtimes (clock skew between
-    racing writers, file copies) are adjusted upward like Delta's
-    monotonization: each version's effective time is the running max,
-    so version order always wins over clock order.  Raises if ``ts``
-    predates the first retained commit (after truncate_history the
-    honest answer is "unknown", not version 0)."""
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no txnlog table at {path}")
-    eff = []
-    run = float("-inf")
-    for v in versions:
-        m = os.stat(os.path.join(_log_dir(path), _commit_name(v))).st_mtime
-        run = max(run, m)
-        eff.append((v, run))
-    if ts < eff[0][1]:
-        raise ValueError(
-            f"timestampAsOf {ts} predates the first retained commit "
-            f"(version {eff[0][0]} at {eff[0][1]}); earlier history "
-            f"is truncated or never existed")
-    return max(v for v, m in eff if m <= ts)
 
 
 def read_table(spark: SparkSession, path: str,
@@ -1323,13 +859,14 @@ def widen_column_type(spark: SparkSession, path: str, *, column: str,
     type widening): the logged schema records the WIDER type; no data
     file is rewritten — existing files keep their narrow physical
     type and every read path already widens at scan time (Spark's
-    vectorized reader for the native path; the Arrow ``cast`` in the
-    three DataSource mirrors).  Only transitions in the safe matrix
-    (:func:`_is_safe_widening`) are allowed — byte→short→int→long,
-    float→double, decimal same-scale precision increase; anything
-    lossy refuses.  Subsequent writes must carry the wide type (the
-    retype guard enforces it); :func:`compact` physically normalizes
-    old files to the wide type as a side effect of its rewrite.
+    vectorized reader for the native path; the Arrow ``cast`` in
+    logcore.read_file for the DataSources).  Only transitions in the
+    safe matrix (:func:`_is_safe_widening`) are allowed —
+    byte→short→int→long, float→double, decimal same-scale precision
+    increase; anything lossy refuses.  Subsequent writes must carry
+    the wide type (the retype guard enforces it); :func:`compact`
+    physically normalizes old files to the wide type as a side
+    effect of its rewrite.
     Reference analogue: ``ALTER TABLE ... ALTER COLUMN TYPE`` on
     stock Postgres (a full-table rewrite there; a log entry here)."""
     from pyspark.sql.types import StructField, _parse_datatype_string
@@ -1501,7 +1038,7 @@ def append(spark: SparkSession, df: DataFrame, path: str, *,
             # a WIDENED schema (re-adding the column under a fresh
             # physical name) even though the caller never opted into
             # evolution.  Delta raises a concurrent-metadata conflict
-            # here; so does the txnbatch mirror (plan_colmap check).
+            # here; so does the txnbatch writer (plan_colmap check).
             _drop_files(path, adds)
             raise CommitConflictError(
                 f"append: a concurrent schema change removed "
@@ -1730,6 +1267,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
                     f"append(evolve_schema=True)")
             _check_types(snap, batch, "merge")
             _check_constraints(snap, batch, "merge")
+            _require_partition_cols(batch, snap.partition_by)
             schema = StructType.fromJson(json.loads(snap.schema_json))
             dv_actions = fold = None
             if touched and n_keys <= MERGE_KEYS_COLLECT_MAX:
@@ -1907,6 +1445,8 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
                     f"append(evolve_schema=True)")
             _check_types(snap, ups, "apply_changes")
             _check_constraints(snap, ups, "apply_changes")
+            if not ups_empty:
+                _require_partition_cols(ups, snap.partition_by)
             touched = [n for n, s in snap.files.items() if hits(s)]
             schema = StructType.fromJson(json.loads(snap.schema_json))
             dv_actions = fold = None
@@ -2738,44 +2278,29 @@ def truncate_history(path: str, *, keep_last: int = 10,
     # version v ≥ cut loads this checkpoint and applies commits
     # cut..v, all of which are retained.
     pre = cut - 1
-    snap = snapshot(path, pre)
+    _core.write_checkpoint(path, snapshot(path, pre))
     log = _log_dir(path)
-    tmp = os.path.join(log, f".ckpt-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump({"version": pre, "files": snap.files,
-                   "schema": snap.schema_json, "txns": snap.txns,
-                   "constraints": snap.constraints,
-                   "colmap": snap.colmap, "key": snap.key,
-                   "partition_by": snap.partition_by}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(log, _ckpt_name(pre)))
     # Publish the truncation floor BEFORE deleting any commit file
     # (r15, post-review): _try_commit refuses claims below it with an
     # O(1) read, and RE-CHECKS it after winning a link — closing the
     # check-then-act window where a stalled writer passes the
     # pre-check, truncation lands, and the writer links a freed
     # number anyway.  Monotonic: the floor only ever rises.
-    mark = os.path.join(log, _TRUNC_MARK)
-    floor = max(cut, _truncated_floor(path))
+    mark = os.path.join(log, _core.TRUNC_MARK)
+    floor = max(cut, _core.truncated_floor(path))
     mtmp = os.path.join(log, f".trunc-{uuid.uuid4().hex}")
     with open(mtmp, "w") as f:
         f.write(str(floor))
         f.flush()
         os.fsync(f.fileno())
     os.replace(mtmp, mark)
-    dropped = 0
-    for n in os.listdir(log):
-        if not n.endswith(".json") or n.startswith("."):
-            continue
-        v = int(n[:_W])
-        if n.endswith(".ckpt.json"):
-            if v < pre:
-                os.remove(os.path.join(log, n))
-        elif v < cut:
-            os.remove(os.path.join(log, n))
-            dropped += 1
-    return {"dropped_versions": dropped, "cut": cut,
+    for v in _core.checkpoint_versions(path):
+        if v < pre:
+            os.remove(os.path.join(log, _ckpt_name(v)))
+    dropped = [v for v in _list_versions(path) if v < cut]
+    for v in dropped:
+        os.remove(os.path.join(log, _commit_name(v)))
+    return {"dropped_versions": len(dropped), "cut": cut,
             "removed_files": vacuum(
                 path, retention_seconds=retention_seconds)}
 
@@ -2857,8 +2382,7 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     # evolution in that very commit — the oldest retained commit must
     # be compared against pre-commit state.
     prev_cols: set[str] | None = None
-    for cv in sorted((int(n[:_W]) for n in os.listdir(_log_dir(path))
-                      if n.endswith(".ckpt.json")), reverse=True):
+    for cv in reversed(_core.checkpoint_versions(path)):
         if cv < versions[0]:
             with open(os.path.join(_log_dir(path), _ckpt_name(cv))) as f:
                 ck = json.load(f)
@@ -2911,17 +2435,13 @@ def vacuum(path: str, *,
     import time as _time
 
     referenced: set[str] = set()
-    log = _log_dir(path)
-    for n in os.listdir(log):
-        if n.startswith(".") or not n.endswith(".json"):
-            continue
-        with open(os.path.join(log, n)) as f:
-            c = json.load(f)
-        if n.endswith(".ckpt.json"):
-            referenced |= set(c.get("files", {}))
-        else:
-            referenced |= {a["file"] for a in c.get("add", [])}
-            referenced |= set(c.get("remove", []))
+    for v in _core.checkpoint_versions(path):
+        with open(os.path.join(_log_dir(path), _ckpt_name(v))) as f:
+            referenced |= set(json.load(f).get("files", {}))
+    for v in _list_versions(path):
+        c = _core.read_commit(path, v)
+        referenced |= {a["file"] for a in c.get("add", [])}
+        referenced |= set(c.get("remove", []))
     now = _time.time()
 
     def aged(p: str) -> bool:

@@ -30,19 +30,12 @@ re-deliver history; skipping the whole commit under-delivers instead,
 which is the documented Delta trade-off), while pure appends keep
 flowing.
 
-DEPLOYMENT CONSTRAINT (the reason this module is self-contained and
-registered for pickle-BY-VALUE below): Spark plans a Python data
-source in a dedicated ``python_streaming_source_runner`` process that
-unpickles the DataSource/reader WITHOUT applying ``addPyFile``
-includes — unlike regular UDF workers, it cannot import
-``docker_aktin_dwh_spark`` when the driver found the repo only via
-its own sys.path (the correctness driver's situation; reproduced:
-ModuleNotFoundError from ``worker_util.read_command``).  So (a) this
-module duplicates the ~20 lines of commit-log reading it needs
-instead of importing ``txnlog`` (kept byte-compatible by
-tests/test_txnlog.py, which drives both against the same tables), and
-(b) ``cloudpickle.register_pickle_by_value`` makes the classes travel
-as definitions, not references.  read() on executors needs only
+Import rule: this module imports nothing from the package except
+sources/logcore.py, the one definition of the txnlog format.  Spark
+plans a Python streaming source in a dedicated
+``python_streaming_source_runner`` process that unpickles the
+DataSource without the package on its path, so both modules travel to
+it pickled by value (see logcore); read() on executors needs only
 stdlib + pyarrow.
 
 Reference analogue: the broker's incremental poll loop
@@ -55,74 +48,12 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
-                                    InputPartition)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import LongType, StructField, StructType
 
-#: mirrors txnlog's layout constants — self-contained on purpose (see
-#: module docstring); byte-compatibility pinned in tests.
-_LOG = "_txnlog"
-_W = 20
-
-
-def _commit_path(table: str, version: int) -> str:
-    return os.path.join(table, _LOG, f"{version:0{_W}d}.json")
-
-
-def _versions(table: str) -> list[int]:
-    try:
-        names = os.listdir(os.path.join(table, _LOG))
-    except FileNotFoundError:
-        return []
-    return sorted(int(n[:_W]) for n in names
-                  if n.endswith(".json") and not n.endswith(".ckpt.json")
-                  and not n.startswith("."))
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path: str, version: int,
-                 pv: dict | None = None):
-        self.path = path
-        self.version = version
-        #: raw hive partition-value fragments from the add action
-        #: (r14 partitioned tables) — decoded executor-side
-        self.pv = pv
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _pv_constant(raw, n, arrow_type):
-    """Partition column as a typed constant Arrow column (r14): the
-    raw hive fragment unescapes and casts through Arrow's string
-    parser; the null marker yields nulls."""
-    import pyarrow as pa
-    from urllib.parse import unquote
-    if raw is None or raw == _HIVE_NULL:
-        return pa.nulls(n, arrow_type)
-    return pa.array([unquote(raw)] * n).cast(arrow_type)
-
-
-def _latest_colmap(table: str) -> dict | None:
-    """The newest logical → physical column map (r13 column mapping),
-    replayed the same way schema() replays the schema — None for
-    identity tables.  Physical names are rename-stable, so the latest
-    map correctly projects files of EVERY commit."""
-    colmap = None
-    seeded = False
-    for v in _versions(table):
-        with open(_commit_path(table, v)) as f:
-            c = json.load(f)
-        if "colmap" in c:
-            colmap = c["colmap"]
-            seeded = True
-    if not seeded:
-        log = os.path.join(table, _LOG)
-        for n in sorted(os.listdir(log)):
-            if n.endswith(".ckpt.json"):
-                with open(os.path.join(log, n)) as f:
-                    colmap = json.load(f).get("colmap", colmap)
-    return colmap
+from .logcore import (FilePartition, arrow_schema, list_versions,
+                      read_commit, read_file, register as _register,
+                      replay, ship_by_value)
 
 
 class TxnlogStreamReader(DataSourceStreamReader):
@@ -138,16 +69,15 @@ class TxnlogStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self._path)
+        vs = list_versions(self._path)
         if not vs:
             raise FileNotFoundError(f"no txnlog table at {self._path}")
         return {"version": vs[-1]}
 
     def partitions(self, start: dict, end: dict):
-        parts: list[_FilePartition] = []
+        parts: list[FilePartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            with open(_commit_path(self._path, v)) as f:
-                c = json.load(f)
+            c = read_commit(self._path, v)
             if c.get("data_change") is False:
                 # the commit declares its rows IDENTICAL to the prior
                 # version (compact/OPTIMIZE, or a synced foreign
@@ -174,12 +104,12 @@ class TxnlogStreamReader(DataSourceStreamReader):
                     f"(txnlog.table_changes) "
                     f"or option('skipChangeCommits', 'true')")
             for a in c.get("add", []):
-                parts.append(_FilePartition(
-                    os.path.join(self._path, a["file"]), v,
-                    a.get("pv")))
+                parts.append(FilePartition(
+                    os.path.join(self._path, a["file"]), a.get("pv"),
+                    version=v))
         return parts
 
-    def read(self, partition: _FilePartition):
+    def read(self, partition: FilePartition):
         # executor-side: one parquet file -> Arrow batches with the
         # commit version appended (vectorized, no per-row Python).
         # Files store PHYSICAL column names under column mapping and
@@ -188,27 +118,11 @@ class TxnlogStreamReader(DataSourceStreamReader):
         # the batch DataSource's read.
         import pyarrow as pa
         import pyarrow.parquet as pq
-        t = pq.read_table(partition.path)
-        if self._schema_json is not None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-            from pyspark.sql.types import StructType as _ST
-            target = to_arrow_schema(_ST.fromJson(
-                json.loads(self._schema_json)))
-            cm = self._colmap or {}
-            pv = partition.pv or {}
-            cols = []
-            for field in target:
-                phys = cm.get(field.name, field.name)
-                if phys in t.column_names:
-                    cols.append(t.column(phys).cast(field.type))
-                elif phys in pv:
-                    # r14 partitioned tables: the column lives in the
-                    # directory name, not the file
-                    cols.append(_pv_constant(pv[phys], t.num_rows,
-                                             field.type))
-                else:
-                    cols.append(pa.nulls(t.num_rows, field.type))
-            t = pa.table(dict(zip(target.names, cols)), schema=target)
+        if self._schema_json is None:
+            t = pq.read_table(partition.path)
+        else:
+            t = read_file(partition.path, arrow_schema(self._schema_json),
+                          self._colmap, partition.pv)
         ver = pa.nulls(t.num_rows, pa.int64()).fill_null(partition.version)
         t = t.append_column("_commit_version", ver)
         yield from t.to_batches()
@@ -226,21 +140,8 @@ class TxnlogStreamDataSource(DataSource):
         return "txnlog_stream"
 
     def schema(self) -> StructType:
-        # replay the schema from the newest commit that recorded one
-        # (create/replace record it; the planner process cannot import
-        # txnlog.snapshot — see module docstring)
-        schema_json = None
         table = self.options["path"]
-        for v in _versions(table):
-            with open(_commit_path(table, v)) as f:
-                schema_json = json.load(f).get("schema", schema_json)
-        if schema_json is None:
-            # fall back to any checkpoint (history may be truncated)
-            log = os.path.join(table, _LOG)
-            for n in sorted(os.listdir(log)):
-                if n.endswith(".ckpt.json"):
-                    with open(os.path.join(log, n)) as f:
-                        schema_json = json.load(f).get("schema")
+        schema_json = replay(table).schema_json
         if schema_json is None:
             # no retained commit or checkpoint records a schema —
             # name the table instead of json.loads(None)'s opaque
@@ -264,37 +165,13 @@ class TxnlogStreamDataSource(DataSource):
                                   skip_change_commits=skip.lower()
                                   == "true",
                                   schema_json=logical.json(),
-                                  colmap=_latest_colmap(
-                                      self.options["path"]))
+                                  colmap=replay(
+                                      self.options["path"]).colmap)
 
 
 def register(spark) -> None:
-    """Idempotently register the stream source — once per session
-    under a lock: DataSourceManager.register REPLACES an existing
-    entry, so re-registering from a pooled worker thread opens a
-    lookup-miss window for queries mid-plan on other threads (see
-    txnbatch.register)."""
-    with _REGISTER_LOCK:
-        if spark not in _REGISTERED:
-            spark.dataSource.register(TxnlogStreamDataSource)
-            _REGISTERED.add(spark)
+    """Idempotently register the stream source (logcore.register)."""
+    _register(spark, TxnlogStreamDataSource)
 
 
-_REGISTER_LOCK = __import__("threading").Lock()
-_REGISTERED = __import__("weakref").WeakSet()
-
-
-def _register_by_value() -> None:
-    """Make this module's classes cloudpickle BY VALUE so the data
-    source survives processes that never see our package on sys.path
-    (the streaming-source runner; any executor without the pyFiles
-    zip applied)."""
-    import sys
-    try:
-        from pyspark import cloudpickle
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:                       # pragma: no cover - old API
-        pass
-
-
-_register_by_value()
+ship_by_value(__name__)

@@ -939,3 +939,93 @@ def test_streaming(outcomes, name):
     err = outcomes[name]
     if err is not None:
         raise err
+
+
+class _Writer:
+    """writeStream stand-in: every builder call returns itself, and
+    each start() hands out the next scripted query."""
+
+    def __init__(self, queries):
+        self.queries, self.starts = list(queries), 0
+
+    def format(self, *_, **__):
+        return self
+
+    option = outputMode = trigger = format
+
+    def start(self):
+        self.starts += 1
+        return self.queries.pop(0)
+
+
+class _Query:
+    def __init__(self, error=None, progress=()):
+        self.error, self.recentProgress = error, list(progress)
+
+    def awaitTermination(self):
+        if self.error is not None:
+            raise self.error
+
+
+class _Frame:
+    def __init__(self, writer):
+        self.writeStream = writer
+        self.sparkSession = self
+
+    @property
+    def conf(self):
+        return self
+
+    def get(self, _key):
+        return "8"
+
+
+def _stream_failure(cause):
+    from pyspark.errors import StreamingQueryException
+    return StreamingQueryException(
+        message=f"[STREAM_FAILED] terminated with exception: {cause}")
+
+
+def test_append_sink_retries_worker_connect_back_timeout(tmp_path):
+    """A Python DataSource stream that dies in INITIALIZING on Spark's
+    10 s worker connect-back is restarted; the restarted query's
+    progress is what the replay stash records."""
+    from docker_aktin_dwh_spark.operators import streamnative
+
+    timeout = _stream_failure("Python worker failed to connect back.")
+    done = _Query(progress=[{"batchId": 0}])
+    w = _Writer([_Query(timeout), _Query(timeout), done])
+    assert streamnative.start_append_sink(_Frame(w), str(tmp_path)) is done
+    assert w.starts == 3
+    assert streamnative.last_replay_progress() == [{"batchId": 0}]
+
+
+@pytest.mark.parametrize("first", [
+    _Query(_stream_failure("division by zero")),
+    _Query(_stream_failure("Python worker failed to connect back."),
+           progress=[{"batchId": 0}]),
+], ids=["other_error", "after_progress"])
+def test_append_sink_does_not_retry_other_failures(tmp_path, first):
+    """Only a start that logged no progress is retried, and only for
+    the connect-back timeout: any other failure surfaces at once."""
+    from pyspark.errors import StreamingQueryException
+
+    from docker_aktin_dwh_spark.operators import streamnative
+
+    w = _Writer([first, _Query()])
+    with pytest.raises(StreamingQueryException):
+        streamnative.start_append_sink(_Frame(w), str(tmp_path))
+    assert w.starts == 1
+
+
+def test_append_sink_gives_up_after_bounded_attempts(tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    from docker_aktin_dwh_spark.operators import streamnative
+
+    timeout = _stream_failure("Python worker failed to connect back.")
+    n = streamnative._START_ATTEMPTS
+    w = _Writer([_Query(timeout) for _ in range(n + 1)])
+    with pytest.raises(StreamingQueryException):
+        streamnative.start_append_sink(_Frame(w), str(tmp_path))
+    assert w.starts == n > 1

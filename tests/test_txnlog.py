@@ -489,44 +489,36 @@ def _body_truncate_history_retention(spark, tdir):
 
 
 def test_txnstream_layout_constants_match_txnlog():
-    """txnstream is deliberately self-contained (the data-source
-    runner process can't import the package — module docstring); its
-    duplicated layout constants and commit listing must stay
-    byte-compatible with txnlog's."""
-    from docker_aktin_dwh_spark.sources import txnstream
+    """The layout constants exist once, in logcore: txnlog re-exports
+    them and the stream source keeps no copy of its own."""
+    from docker_aktin_dwh_spark.sources import logcore, txnstream
 
-    assert txnstream._LOG == txnlog._LOG
-    assert txnstream._W == txnlog._W
+    assert txnlog._LOG == logcore.LOG == "_txnlog"
+    assert logcore.W == 20
+    assert not hasattr(txnstream, "_LOG") and not hasattr(txnstream, "_W")
 
 
 def test_datasource_replays_match_txnlog_snapshot():
-    """txnbatch and cdcstream duplicate the checkpoint-bounded replay
-    and the range subtraction for self-containment (their planner
-    processes can't import the package) — the duplicates must stay
-    byte-compatible with txnlog's: same layout constants, same file
-    set, same DV ranges, same schema, and identical range
-    subtraction on every edge shape."""
-    from docker_aktin_dwh_spark.sources import cdcstream, txnbatch
+    """The DataSources replay through logcore — the same replay
+    txnlog.snapshot runs: on a synthetic (sparkless) log the core
+    yields the expected file set, DV ranges, stats, schema and
+    colmap at every version, and range subtraction gives the expected
+    result on every edge shape."""
+    from docker_aktin_dwh_spark.sources import logcore
 
-    assert txnbatch._LOG == txnlog._LOG and txnbatch._W == txnlog._W
-    assert cdcstream._LOG == txnlog._LOG and cdcstream._W == txnlog._W
-
-    # range subtraction equivalence on edge shapes
     cases = [
-        ([[0, 10]], [[3, 5]]),
-        ([[0, 10]], []),
-        ([], [[1, 2]]),
-        ([[0, 3], [7, 9]], [[2, 8]]),
-        ([[0, 100]], [[0, 100]]),
-        ([[5, 5], [7, 7]], [[6, 6]]),
+        ([[0, 10]], [[3, 5]], [[0, 2], [6, 10]]),
+        ([[0, 10]], [], [[0, 10]]),
+        ([], [[1, 2]], []),
+        ([[0, 3], [7, 9]], [[2, 8]], [[0, 1], [9, 9]]),
+        ([[0, 100]], [[0, 100]], []),
+        ([[5, 5], [7, 7]], [[6, 6]], [[5, 5], [7, 7]]),
     ]
-    for a, b in cases:
-        assert cdcstream._sub_ranges(a, b) == txnlog._ranges_subtract(
-            a, b), (a, b)
+    for a, b, want in cases:
+        assert logcore.ranges_subtract(a, b) == want, (a, b)
 
-    # replay equivalence against a real (sparkless) synthetic log:
-    # commits with adds, removes, dv actions, schema evolution and a
-    # checkpoint — written with txnlog's own primitives
+    # a synthetic log: commits with adds, removes, dv actions and a
+    # column-mapping change — written with txnlog's own primitives
     import tempfile as _tf
 
     with _tf.TemporaryDirectory() as d:
@@ -548,31 +540,34 @@ def test_datasource_replays_match_txnlog_snapshot():
         txnlog._try_commit(tbl, 3, {
             "op": "rename_column", "add": [], "remove": [],
             "schema": sc0, "colmap": {"x": "y"}, "key": "x"})
-        for v in (0, 1, 2, 3):
+        a0 = {"rows": 10, "kmin": 0, "kmax": 9}
+        a1 = {**a0, "dv": [[3, 4]]}
+        want = {0: ({"a.parquet": a0}, None),
+                1: ({"a.parquet": a1,
+                     "b.parquet": {"rows": 2, "kmin": 3, "kmax": 4}},
+                    None),
+                2: ({"a.parquet": a1}, None),
+                3: ({"a.parquet": a1}, {"x": "y"})}
+        for v, (files, colmap) in want.items():
+            core = logcore.replay(tbl, v)
             snap = txnlog.snapshot(tbl, v)
-            for mod in (txnbatch, cdcstream):
-                files, schema_json, colmap = mod._replay(tbl, v)
-                assert set(files) == set(snap.files), (mod, v)
-                assert colmap == snap.colmap, (mod, v)
-                for n in files:
-                    assert (files[n].get("dv") or []) == (
-                        snap.files[n].get("dv") or []), (mod, v, n)
-                import json as _json
-                assert (_json.loads(schema_json)["fields"]
-                        == _json.loads(sc0)["fields"])
-        assert txnlog.snapshot(tbl, 2).colmap is None
-        assert txnlog.snapshot(tbl, 3).colmap == {"x": "y"}
+            assert core.files == snap.files == files, v
+            assert core.colmap == snap.colmap == colmap, v
+            assert json.loads(core.schema_json)["fields"] == []
         assert txnlog.snapshot(tbl, 3).key == "x"
 
 
 def _body_txnstream_versions_match_txnlog_listing(spark, tdir):
-    from docker_aktin_dwh_spark.sources import txnstream
+    from docker_aktin_dwh_spark.sources import logcore
 
     txnlog.create_table(spark, _mk(spark, 0, 10), tdir, key="k")
     txnlog.append(spark, _mk(spark, 10, 20, tag="b"), tdir, key="k")
-    assert txnstream._versions(tdir) == txnlog._list_versions(tdir)
-    assert txnstream._commit_path(tdir, 1).endswith(
-        txnlog._commit_name(1))
+    assert logcore.list_versions(tdir) == txnlog._list_versions(tdir) \
+        == [0, 1]
+    assert logcore.commit_name(1) == txnlog._commit_name(1) \
+        == "00000000000000000001.json"
+    assert os.path.exists(os.path.join(
+        txnlog._log_dir(tdir), logcore.commit_name(1)))
 
 
 def _body_schema_evolution_append(spark, tdir):
@@ -1479,7 +1474,7 @@ def _body_writer_datasource_create_append_overwrite(spark, tdir):
     txnbatch.register(spark)
     (_mk(spark, 0, 100).write.format("txnlog")
      .option("path", tdir).option("key", "k").mode("append").save())
-    assert txnbatch._replay_meta(tdir, None)[4] == "k", \
+    assert txnlog.snapshot(tdir).key == "k", \
         "create-by-write records the merge key"
     assert txnlog.read_table(spark, tdir).count() == 100
     (_mk(spark, 100, 150, tag="b").write.format("txnlog")
@@ -2343,7 +2338,8 @@ def test_file_stats_attributes_by_leaf_path(tmp_path):
     intervals once a struct/list column appears — z would inherit
     s.y's [20, 20] and a filter z = 100 would prune EVERY file (silent
     wrong answer).  Stats must key by path_in_schema, top-level
-    primitives only, and the txnbatch mirror must agree byte-for-byte."""
+    primitives only, and the DataSource writer must use the same
+    function."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2360,7 +2356,7 @@ def test_file_stats_attributes_by_leaf_path(tmp_path):
     assert st["cols"]["a"] == [1, 3]
     assert "s" not in st["cols"] and "emb" not in st["cols"], \
         "nested columns are unprunable, never misattributed"
-    assert txnbatch._file_stats(p, "a") == st
+    assert txnbatch.file_stats is txnlog._file_stats
     assert txnlog._interval_hit(st, "z", "=", 100)
     assert not txnlog._interval_hit(st, "z", ">", 300)
     assert txnlog._interval_hit(st, "s", "=", 5), \
@@ -2546,11 +2542,10 @@ def test_legacy_checkpoint_without_key_recovers_from_create(
 
 
 def test_legacy_checkpoint_txnbatch_replay_matches(spark, tdir):
-    """ADVICE r14: the txnbatch mirror's _replay_meta must apply the
-    SAME pre-r13-checkpoint key/colmap recovery as txnlog.snapshot —
-    otherwise the two replays (whose equality the module pins) diverge
-    on legacy tables and the DataSource writer stages logical-named
-    files into a physically-mapped layout."""
+    """ADVICE r14: the DataSource writer's replay must apply the SAME
+    pre-r13-checkpoint key/colmap recovery as txnlog.snapshot —
+    otherwise it stages logical-named files into a physically-mapped
+    layout.  Both now run logcore.replay."""
     from docker_aktin_dwh_spark.sources import txnbatch
 
     txnlog.create_table(spark, _mk(spark, 0, 10), tdir, key="k")
@@ -2568,11 +2563,10 @@ def test_legacy_checkpoint_txnbatch_replay_matches(spark, tdir):
     with open(ckpt, "w") as f:
         json.dump(ck, f)
     snap = txnlog.snapshot(tdir)
-    assert snap.key == "k" and snap.colmap
-    (_f, _s, _t, _c, bkey, bcolmap, _v,
-     _p) = txnbatch._replay_meta(tdir, None)
-    assert bkey == snap.key
-    assert bcolmap == snap.colmap
+    assert snap.key == "k" and snap.colmap == {"k": "k", "w": "v"}
+    meta = txnbatch._meta(tdir, None)
+    assert meta.key == snap.key
+    assert meta.colmap == snap.colmap
 
 
 # ------------------------------------------------ partitioned tables (r14)
@@ -2582,6 +2576,28 @@ def _mkp(spark, lo, hi, tag="a", nparts=4):
         F.col("id").alias("k"),
         (F.col("id") % nparts).cast("int").alias("region"),
         F.concat(F.lit(tag), F.col("id").cast("string")).alias("v")))
+
+
+def test_merge_refuses_missing_partition_column_on_every_arm(spark,
+                                                              tdir):
+    """ADVICE r16: a MERGE batch missing a partition column raised only
+    when the DV arm folded no file; with a fold, the union NULL-filled
+    the column and wrote the batch into the null partition.  Every arm
+    now refuses before anything is staged."""
+    txnlog.create_table(spark, _mkp(spark, 0, 100), tdir, key="k",
+                        partition_by=["region"])
+
+    def narrow(lo, hi, step):
+        return spark.range(lo, hi, step).coalesce(1).select(
+            F.col("id").alias("k"), F.lit("x").alias("v"))
+
+    # every region-0 key: the DV arm folds those files (their whole
+    # rows are dead); keys of no existing row: nothing is folded
+    for batch in (narrow(0, 100, 4), narrow(1000, 1004, 1)):
+        with pytest.raises(ValueError, match="omits partition column"):
+            txnlog.merge(spark, tdir, batch, key="k")
+    assert txnlog.snapshot(tdir).version == 0
+    assert txnlog.read_table(spark, tdir).count() == 100
 
 
 def test_partitioned_create_read_prune(spark, tdir):
@@ -2895,14 +2911,15 @@ def test_truncation_never_frees_version_numbers(spark, tdir):
     # window (pre-check saw no floor, post-check sees it) and assert
     # the writer self-reverts instead of resurrecting the number
     import unittest.mock as _mock
-    real_floor = txnlog._truncated_floor
+    from docker_aktin_dwh_spark.sources import logcore
+    real_floor = logcore.truncated_floor
     calls = {"n": 0}
 
     def raced(path):
         calls["n"] += 1
         return 0 if calls["n"] == 1 else real_floor(path)
 
-    with _mock.patch.object(txnlog, "_truncated_floor",
+    with _mock.patch.object(logcore, "truncated_floor",
                             side_effect=raced):
         assert not txnlog._try_commit(
             tdir, 3, {"op": "append", "add": [], "remove": []})
