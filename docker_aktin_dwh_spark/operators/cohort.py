@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..functions.determinism import dsum
 from ..registry import QuerySpec
+from ..session import local_frame
 from . import eav, ontology
 
 
@@ -414,7 +415,7 @@ def rep_01(spark, sf):
     scaffold + AGG-01 + FN-DT composition — the R-report analogue,
     reference R runtime installed via src/build.sh:273)."""
     months = spark.range(1, 13).select(F.col("id").cast("int").alias("m"))
-    classes = spark.createDataFrame([("I",), ("O",)], ["inout_cd"])
+    classes = local_frame(spark, [("I",), ("O",)], "inout_cd string")
     scaffold = months.crossJoin(classes)
     v = catalog.visit_dimension(spark, sf)
     counts = (v.filter((F.col("start_date") >= F.expr("timestamp_ntz'1996-01-01 00:00:00'"))

@@ -37,6 +37,7 @@ from .. import catalog
 from ..functions.barrier import materialize, scan_is_narrow, spread
 from ..functions.textfns import SQL_SHINGLES3, SQL_TOKENS, shingles, tokens
 from ..registry import QuerySpec
+from ..session import local_frame
 
 T = catalog.load
 
@@ -501,7 +502,7 @@ def incremental_minhash_pairs_from(corpus_index: DataFrame,
 
 
 def empty_minhash_index(spark) -> DataFrame:
-    return spark.createDataFrame([], MINHASH_INDEX_DDL)
+    return local_frame(spark, [], MINHASH_INDEX_DDL)
 
 
 #: declared-query split: the first 4/5 of the id space is the stored
@@ -793,8 +794,8 @@ def cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     # uniformly over [0, n_blocks)).
     n_vecs = e.agg(F.count("*")).collect()[0][0]
     if n_vecs == 0:
-        return emb.sparkSession.createDataFrame(
-            [], "i long, j long, cos double")
+        return local_frame(emb.sparkSession, [],
+                           "i long, j long, cos double")
     if n_vecs > COSINE_MAX_VECS:
         raise ValueError(
             f"exact cosine_pairs is capped at {COSINE_MAX_VECS} vectors "

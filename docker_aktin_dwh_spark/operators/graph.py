@@ -32,6 +32,7 @@ from .. import catalog
 from ..functions.barrier import materialize
 from ..functions.textfns import SQL_TOKENS
 from ..registry import QuerySpec
+from ..session import local_frame
 from .dedup import (JACCARD_THRESHOLD, SQL_SHINGLES3, minhash_dedup_pairs)
 
 T = catalog.load
@@ -54,7 +55,7 @@ def pagerank(edges: DataFrame, damping: float = PR_DAMPING,
     if n == 0:      # no near-dup pairs at this scale: empty, typed
         schema = StructType([StructField("v", edges.schema["src"].dataType),
                              StructField("pr", DoubleType())])
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     deg = edges.groupBy("src").agg(F.count("*").cast("double")
                                    .alias("deg"))
     e = materialize(edges.join(deg, "src"))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..functions.determinism import sql_dsum
 from ..registry import QuerySpec
+from ..session import local_frame
 from ..sources import p21_csv, upsert, xml_cda
 from ..streaming import broker
 from .streamnative import await_query
@@ -974,7 +975,7 @@ def stats_01(spark, sf):
         files = sorted(_os.path.join(path, n)
                        for n in _os.listdir(path)
                        if n.endswith(".parquet"))
-        fl = spark.createDataFrame([(f,) for f in files], "f string")
+        fl = local_frame(spark, [(f,) for f in files], "f string")
 
         def read_footers(it):
             import pandas as pd

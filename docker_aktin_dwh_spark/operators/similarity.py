@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..registry import QuerySpec
+from ..session import local_frame
 
 T = catalog.load
 
@@ -275,16 +276,17 @@ def _ivf_step(corpus: DataFrame, centroids) -> "np.ndarray":
     def partials(batches):
         psum = np.zeros((k, dim), dtype=np.int64)
         cnt = np.zeros(k, dtype=np.int64)
-        seen = False
+        seen = 0
+        peak = 0.0
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            seen = True
+            seen += n
             X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
             j = (Xn @ cn.T).argmax(axis=1)
-            XS = np.floor(X * KM_SUM_SCALE).astype(np.int64)
+            XS, peak = _scaled_sum_terms(X, peak, seen)
             np.add.at(psum, j, XS)
             np.add.at(cnt, j, 1)
         if seen:
@@ -609,7 +611,7 @@ def _pq_cb_frame(spark, cb: "np.ndarray") -> DataFrame:
     cmat = [[[float(v) for v in c] for c in sub] for sub in cb]
     nmat = [[float((np.asarray(c) ** 2).sum()) for c in sub]
             for sub in cb]
-    return spark.createDataFrame([(cmat, nmat)], schema)
+    return local_frame(spark, [(cmat, nmat)], schema)
 
 
 def _pq_encode_udf(cb: "np.ndarray"):
@@ -690,17 +692,18 @@ def _pq_step(e: DataFrame, cb: "np.ndarray") -> "np.ndarray":
     def partials(batches):
         psum = np.zeros((PQ_M, PQ_KS, PQ_DS), dtype=np.int64)
         cnt = np.zeros((PQ_M, PQ_KS), dtype=np.int64)
-        seen = False
+        seen = 0
+        peak = 0.0
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            seen = True
+            seen += n
             m = np.asarray(pdf["e"].tolist(), dtype=np.float64)
             sub = m.reshape(n, PQ_M, PQ_DS)
             d = ((sub[:, :, None, :] - cbm[None, :, :, :]) ** 2).sum(-1)
             codes = d.argmin(axis=2)                      # (n, M)
-            svs = np.floor(sub * KM_SUM_SCALE).astype(np.int64)
+            svs, peak = _scaled_sum_terms(sub, peak, seen)
             for mm in range(PQ_M):
                 np.add.at(psum[mm], codes[:, mm], svs[:, mm, :])
                 np.add.at(cnt[mm], codes[:, mm], 1)
@@ -807,7 +810,32 @@ KM_ITERS = 2
 #: the hash — the decimal-routing discipline without any decimal
 #: cast-rounding-mode exposure.
 KM_DIST_SCALE = 1e12
+#: The numpy Lloyd steps (_ivf_step, _pq_step) accumulate
+#: FLOOR(x·KM_SUM_SCALE) in int64, which stays exact only while
+#: (max|x| · KM_SUM_SCALE + 1) · rows < 2^63 ≈ 9.2e18 — for |x| ≤ 1
+#: that is ~9.2e9 rows per task, and a single |x| ≥ 9.3e9 breaks it
+#: alone.  Past the bound numpy wraps silently (a NaN casts to
+#: INT64_MIN), so :func:`_scaled_sum_terms` raises OverflowError first.
 KM_SUM_SCALE = 1e9
+
+
+def _scaled_sum_terms(x: "np.ndarray", peak: float, rows: int):
+    """``FLOOR(x·KM_SUM_SCALE)`` as int64 for an accumulator that has
+    summed ``rows`` rows (``x``'s included) whose largest magnitude
+    before ``x`` was ``peak``; returns ``(terms, new peak)``.  Raises
+    OverflowError on a non-finite value or once the accumulator's
+    int64 bound could be reached (see KM_SUM_SCALE)."""
+    if not np.isfinite(x).all():
+        raise OverflowError(
+            "KM_SUM_SCALE partial sums: non-finite embedding value; "
+            "FLOOR(x·KM_SUM_SCALE) needs finite x")
+    peak = max(peak, float(np.abs(x).max(initial=0.0)))
+    if (peak * KM_SUM_SCALE + 1) * rows >= 2.0 ** 63:
+        raise OverflowError(
+            f"KM_SUM_SCALE partial sums: max|x|={peak:g} over {rows} "
+            f"rows reaches the int64 bound (max|x|·KM_SUM_SCALE+1)·rows "
+            f"< 2^63")
+    return np.floor(x * KM_SUM_SCALE).astype(np.int64), peak
 
 
 def _km_pts(spark, sf):

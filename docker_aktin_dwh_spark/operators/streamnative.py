@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..registry import QuerySpec
+from ..session import local_frame
 
 _EV_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
 
@@ -666,8 +667,8 @@ def str17_sketch(spark: SparkSession, sf: str, base: str,
     ev = catalog.load(spark, sf, "events").select(*_EV_COLS)
     watch = _spill_chunks(ev, base, n_chunks, name="watch17")
     store = f"{base}/sketch17"
-    spark.createDataFrame([], "d int, w bigint, c bigint") \
-         .write.mode("overwrite").parquet(store)
+    local_frame(spark, [], "d int, w bigint, c bigint") \
+        .write.mode("overwrite").parquet(store)
     src = (spark.readStream.format("parquet").schema(ev.schema)
            .option("maxFilesPerTrigger", "1").load(watch))
     assert src.isStreaming
@@ -700,8 +701,8 @@ def str_17(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
         raise
     ev = catalog.load(spark, sf, "events")
-    ids = spark.createDataFrame([(int(i),) for i in STR17_QUERY_IDS],
-                                "user_id bigint")
+    ids = local_frame(spark, [(int(i),) for i in STR17_QUERY_IDS],
+                      "user_id bigint")
     probes = ids.select(
         "user_id",
         F.explode(F.array(*[F.lit(i) for i in range(STR17_D)]))
@@ -856,8 +857,8 @@ def str18_summary(spark: SparkSession, sf: str, base: str,
         catalog.load(spark, sf, "events").select(*_EV_COLS))
     watch = _spill_chunks(ev, base, n_chunks, name="watch18")
     store = f"{base}/mg18"
-    spark.createDataFrame([], "user_id bigint, c bigint") \
-         .write.mode("overwrite").parquet(store)
+    local_frame(spark, [], "user_id bigint, c bigint") \
+        .write.mode("overwrite").parquet(store)
     src = (spark.readStream.format("parquet").schema(ev.schema)
            .option("maxFilesPerTrigger", "1").load(watch))
     assert src.isStreaming
@@ -1282,8 +1283,8 @@ def str20_sample(spark: SparkSession, sf: str, base: str,
         for j, pq in enumerate(sorted(out.glob("*.parquet"))):
             _sh.copy(pq, watch / f"{b:02d}_{j}.parquet")
     store = f"{base}/sample20"
-    spark.createDataFrame([], "doc_id bigint, lang string, pr string") \
-         .write.mode("overwrite").parquet(store)
+    local_frame(spark, [], "doc_id bigint, lang string, pr string") \
+        .write.mode("overwrite").parquet(store)
     src = (spark.readStream.format("parquet").schema(docs.schema)
            .option("maxFilesPerTrigger", "1").load(str(watch)))
     assert src.isStreaming

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..functions.textfns import SQL_TOKENS, tokens
 from ..registry import QuerySpec
+from ..session import local_frame
 
 T = catalog.load
 
@@ -424,8 +425,8 @@ def bpe_01(spark, sf):
     wf = (d.select(F.explode(tokens("text")).alias("token"))
             .groupBy("token").agg(F.count("*").alias("freq")))
     merges = bpe_train(wf, BPE_MERGES)
-    return spark.createDataFrame(
-        [(i, l, r, l + r) for i, (l, r) in enumerate(merges)],
+    return local_frame(
+        spark, [(i, l, r, l + r) for i, (l, r) in enumerate(merges)],
         "rank int, left string, right string, merged string"
     ).orderBy("rank")
 
@@ -596,7 +597,7 @@ def cms_frame(spark, sf, w: int = CMS_W, dd: int = CMS_D):
     sketch = (rows.groupBy("d", cell.alias("w"))
               .agg(F.count("*").alias("c")))
 
-    q = spark.createDataFrame([(t,) for t in CMS_QUERIES], "t string")
+    q = local_frame(spark, [(t,) for t in CMS_QUERIES], "t string")
     probes = q.select(
         "t", F.explode(F.array(*[F.lit(i) for i in range(dd)]))
               .alias("d"))
@@ -783,8 +784,8 @@ def nb_margin_frame(base: DataFrame, v_top: int = QC_VOCAB) -> DataFrame:
              .join(lbl, "doc_id").filter("is_train"))
     cls = tr.groupBy("y").agg(F.sum("k").alias("tot"))
     counts = tr.groupBy("t", "y").agg(F.sum("k").alias("cnt"))
-    classes = base.sparkSession.createDataFrame(
-        [(True,), (False,)], "y boolean")
+    classes = local_frame(base.sparkSession, [(True,), (False,)],
+                          "y boolean")
     model = (vocab.crossJoin(classes)
              .join(counts, ["t", "y"], "left")
              .join(cls, "y")

@@ -24,12 +24,16 @@ Scale posture (100 TB design point):
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 #: Read parquet TIMESTAMP(NANOS) columns (the `events` fixture) as raw
 #: int64 nanoseconds; catalog.load() converts them to TIMESTAMP_NTZ.
@@ -107,6 +111,44 @@ def apply_runtime_policy(spark: SparkSession) -> SparkSession:
                    str(default_parallelism()))
     ship_package(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples; structs as
+    tuples; an empty list is allowed) typed by ``schema`` (DDL string
+    or StructType) — the engine's one way to build a driver-side frame.
+
+    The rows go to the JVM as a pyarrow Table, which Spark turns into a
+    ``LocalRelation``: building it runs no job, and scanning or
+    broadcasting it starts no Python worker.  (Past
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes Spark
+    keeps the Arrow batches in a JVM-side RDD instead — still no
+    Python worker.)  ``createDataFrame(list)`` instead plans a
+    PythonRDD, so every scan of it — an empty one included — costs a
+    job of Python-worker tasks.  Independent of the Arrow conf, so it
+    behaves the same on externally created sessions.
+
+    Naive top-level TIMESTAMP values are read as local time of this
+    process, the rule ``createDataFrame(list)`` applies."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    fields = schema.fields
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(f"local_frame: row {r!r} has {len(r)} "
+                             f"values for {len(fields)} field(s)")
+    arrow = to_arrow_schema(schema)
+    cols = []
+    for i, (f, af) in enumerate(zip(fields, arrow)):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, TimestampType):
+            vals = [v.astimezone(datetime.timezone.utc)
+                    if isinstance(v, datetime.datetime) and v.tzinfo is None
+                    else v for v in vals]
+        cols.append(pa.array(vals, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow),
+                                 schema)
 
 
 def ship_package(spark: SparkSession) -> None:

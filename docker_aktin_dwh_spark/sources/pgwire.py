@@ -13,7 +13,7 @@ code speak it for trust-authenticated connections.
 Scope is the COMPAT arm, deliberately: a driver-side fetch of
 modest administrative/import tables (the reference's i2b2 config and
 staging tables — src/docker/database), surfaced as a Spark DataFrame
-via ``createDataFrame``.  The 100 TB scan path stays the JVM JDBC
+via ``session.local_frame``.  The 100 TB scan path stays the JVM JDBC
 reader with a real driver jar (catalog.jdbc_reader — partitioned
 predicate-pushdown reads); this client refuses result sets beyond
 ``ROWS_MAX`` rather than pretending to be one.
@@ -34,6 +34,8 @@ import datetime
 import socket
 import struct
 from decimal import Decimal
+
+from ..session import local_frame
 
 #: refuse driver-side fetches beyond this many rows — the compat arm
 #: is for control-plane tables, not corpus scans (use the JDBC jar
@@ -595,7 +597,7 @@ def pg_native_load(spark, query: str, *, unix_dir: str | None = None,
                           for f, dec in zip(r, decoders))
                     for r in raw]
     schema = ", ".join(f"`{n}` {t}" for n, t in zip(names, ddl))
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def quote_ident(ident: str) -> str:

@@ -83,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from . import logcore as _core
 from .logcore import (CHECKPOINT_EVERY, LOG as _LOG, Snapshot,
                       ckpt_name as _ckpt_name, commit_name as _commit_name,
@@ -426,9 +427,9 @@ def _with_rowmeta(df: DataFrame) -> DataFrame:
 def _dv_frame(spark: SparkSession, dvmap: dict[str, list]) -> DataFrame:
     rows = [(n, [(int(s), int(e)) for s, e in rg])
             for n, rg in sorted(dvmap.items())]
-    return spark.createDataFrame(
-        rows, f"{_FILE_META} string, __dv_ranges array<struct<s: bigint,"
-              " e: bigint>>")
+    return local_frame(
+        spark, rows, f"{_FILE_META} string, __dv_ranges array<struct<"
+                     "s: bigint, e: bigint>>")
 
 
 def _apply_dv(spark: SparkSession, df: DataFrame,
@@ -437,9 +438,12 @@ def _apply_dv(spark: SparkSession, df: DataFrame,
     """Mask (or, for CDC, SELECT) the rows a deletion vector covers.
     One broadcast hash join on the file basename against the
     churn-sized DV table, then a codegen'd ``exists`` over the range
-    structs — no explode, no Python, cost ∝ scanned rows with a
-    few-entry array probe each.  ``keep_dead=True`` inverts the filter
-    (only DV'd rows survive — the CDC delta read)."""
+    structs — no explode, cost ∝ scanned rows with a few-entry array
+    probe each.  The DV table is a ``LocalRelation`` built by
+    :func:`~docker_aktin_dwh_spark.session.local_frame`, so neither
+    the mask nor its broadcast starts a Python worker.
+    ``keep_dead=True`` inverts the filter (only DV'd rows survive —
+    the CDC delta read)."""
     cols = df.columns
     base = _with_rowmeta(df)
     j = base.join(F.broadcast(_dv_frame(spark, dvmap)),
@@ -583,7 +587,7 @@ def read_table(spark: SparkSession, path: str,
     schema = StructType.fromJson(json.loads(snap.schema_json))
     keep = prune_files(snap, filters) if filters else sorted(snap.files)
     if not keep:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _read_files(spark, path, schema, keep, snap.files,
                        snap.colmap, snap.partition_by)
 
@@ -2047,7 +2051,7 @@ def table_changes(spark: SparkSession, path: str, v_from: int,
 
     def side(names: list[str], snap: Snapshot) -> DataFrame:
         if not names:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         # read under the WIDER logged schema of the endpoint version,
         # never file inference: across a schema-evolving commit the
         # old side's files lack the new columns (they NULL-fill here),
@@ -2413,8 +2417,8 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
             txn["app"] if txn else None,
             txn["version"] if txn else None,
             len(dv), sum(d.get("n_new", 0) for d in dv)))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "version long, op string, n_added int, n_removed int, "
         "rows_added long, schema_changed boolean, "
         "new_columns array<string>, txn_app string, txn_version long, "

@@ -53,6 +53,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from . import txnlog
 
 _TABLE_REF = re.compile(r"txnlog\.`([^`]+)`")
@@ -451,7 +452,8 @@ def _insert(spark: SparkSession, stmt: str,
                     f"{len(cols)} column(s) {cols}")
             rows.append(dict(zip(cols, vals)))
         by_name = {f.name: f for f in schema.fields}
-        frame = spark.createDataFrame(
+        frame = local_frame(
+            spark,
             [tuple(str(r[c]) if r[c] is not None else None
                    for c in cols) for r in rows],
             ", ".join(f"`{c}` string" for c in cols))

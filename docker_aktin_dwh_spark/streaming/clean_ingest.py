@@ -48,6 +48,7 @@ from ..functions.barrier import materialize
 from ..functions.textfns import tokens
 from ..operators.prep import MAX_STOP_RATIO, MIN_TOKENS
 from ..operators.textops import (PII_EMAIL, PII_IPV4, PII_PHONE, STOPWORDS)
+from ..session import local_frame
 from ..sources import txnlog
 
 DOCS_DDL = "doc_id bigint, lang string, text string"
@@ -99,7 +100,7 @@ def _ensure_table(spark: SparkSession, path: str, ddl: str,
     creating empty and routing ALL data through txn-idempotent appends
     closes that."""
     if not _is_txn(path):
-        txnlog.create_table(spark, spark.createDataFrame([], ddl), path,
+        txnlog.create_table(spark, local_frame(spark, [], ddl), path,
                             key=key)
 
 
@@ -129,7 +130,7 @@ def process_batch(spark, batch: DataFrame, batch_id: int, store_path: str,
                     .filter(F.col("batch_id") != batch_id)
                     .select("h").distinct())
         else:
-            seen = spark.createDataFrame([], "h string")
+            seen = local_frame(spark, [], "h string")
     else:
         _ensure_table(spark, store_path, DOCS_DDL, "doc_id")
         _ensure_table(spark, hash_store, _HASH_DDL, "doc_id")

@@ -836,6 +836,30 @@ def test_pq_step_equals_encode_mean_composition(spark):
         emb.unpersist()
 
 
+@pytest.mark.parametrize("bad", [1e10, float("nan")], ids=["1e10", "nan"])
+@pytest.mark.parametrize("step", ["ivf", "pq"])
+def test_km_sum_scale_headroom_raises_instead_of_wrapping(spark, step,
+                                                          bad):
+    """One vector past the int64 headroom of the FLOOR(x·KM_SUM_SCALE)
+    partial sums (1e10·1e9 > 2^63), or holding a NaN, must raise
+    OverflowError from the Lloyd step — numpy's cast and np.add.at
+    would otherwise wrap it into a silently wrong centroid."""
+    dim = similarity.DIM
+    ok = spark.range(8).select(F.array_repeat(
+        ((F.col("id") + 1) / 10).cast("double"), dim).alias("x"))
+    corpus = ok.unionByName(spark.range(1).select(
+        F.array_repeat(F.lit(bad), dim).alias("x"))).coalesce(1)
+    rng = np.random.RandomState(7)
+    with pytest.raises(Exception, match="OverflowError: KM_SUM_SCALE"):
+        if step == "ivf":
+            similarity._ivf_step(corpus.select(F.col("x").alias(
+                "embedding")), rng.rand(4, dim))
+        else:
+            similarity._pq_step(corpus.select(F.col("x").alias("e")),
+                                rng.rand(similarity.PQ_M, similarity.PQ_KS,
+                                         similarity.PQ_DS))
+
+
 def test_cosine_pairs_recover_cluster_structure(spark):
     """ded_embed's pair engine on the clustered fixture: at τ=0.7 the
     blocked-matmul pair set must be ≈exactly the in-cluster pair set

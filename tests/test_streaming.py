@@ -835,6 +835,7 @@ def _body_cdf_stream_across_drop_partition(spark, stream_dir, tmp):
     while still delivering commits that land after the drop."""
     import os
 
+    from docker_aktin_dwh_spark.operators.streamnative import await_query
     from docker_aktin_dwh_spark.sources import cdcstream, txnlog
 
     path = str(tmp / "cdp_tbl")
@@ -860,13 +861,13 @@ def _body_cdf_stream_across_drop_partition(spark, stream_dir, tmp):
     rows: list = []
 
     def run_stream():
-        q = (spark.readStream.format("txnlog_cdc")
-             .option("path", path).option("key", "k").load()
-             .writeStream.foreachBatch(
-                 lambda df, _b: rows.extend(df.collect()))
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        await_query(lambda: (
+            spark.readStream.format("txnlog_cdc")
+            .option("path", path).option("key", "k").load()
+            .writeStream.foreachBatch(
+                lambda df, _b: rows.extend(df.collect()))
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True).start()))
 
     run_stream()
     dropped_keys = {k for k in range(80) if k % 4 == 2}

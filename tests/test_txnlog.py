@@ -14,6 +14,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from docker_aktin_dwh_spark.operators.streamnative import await_query
 from docker_aktin_dwh_spark.sources import txnlog
 
 
@@ -1811,15 +1812,15 @@ def _body_stream_replication_source_to_sink(spark, tdir):
     txnlog.append(spark, _mk(spark, 60, 100, tag="b"), tdir, key="k")
 
     def run(ck):
-        q = (spark.readStream.format("txnlog_stream")
-             .option("path", tdir).load()
-             .drop("_commit_version")
-             .writeStream.format("txnlog")
-             .option("path", replica).option("key", "k")
-             .option("txnAppId", "repl")
-             .option("checkpointLocation", os.path.join(base, ck))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        await_query(lambda: (
+            spark.readStream.format("txnlog_stream")
+            .option("path", tdir).load()
+            .drop("_commit_version")
+            .writeStream.format("txnlog")
+            .option("path", replica).option("key", "k")
+            .option("txnAppId", "repl")
+            .option("checkpointLocation", os.path.join(base, ck))
+            .trigger(availableNow=True).start()))
 
     run("ck1")
     got = txnlog.read_table(spark, replica)
@@ -2039,14 +2040,14 @@ def _body_colmap_cdc_and_stream_sources(spark, tdir):
     cdcstream.register(spark)
     base = os.path.dirname(tdir)
     rows = []
-    q = (spark.readStream.format("txnlog_cdc")
-         .option("path", tdir).option("key", "k")
-         .load()
-         .writeStream.foreachBatch(
-             lambda df, _b: rows.extend(df.collect()))
-         .option("checkpointLocation", os.path.join(base, "cdc_ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    await_query(lambda: (
+        spark.readStream.format("txnlog_cdc")
+        .option("path", tdir).option("key", "k")
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _b: rows.extend(df.collect()))
+        .option("checkpointLocation", os.path.join(base, "cdc_ck"))
+        .trigger(availableNow=True).start()))
     got = {(r.k, r.change_type): r.val for r in rows}
     assert got[(7, "update_preimage")] == "a7"
     assert got[(7, "update_postimage")] == "m7"
@@ -2055,14 +2056,14 @@ def _body_colmap_cdc_and_stream_sources(spark, tdir):
     txnlog.append(spark, _mk3(spark, 60, 70, tag="n")
                   .withColumnRenamed("v", "val"), tdir, key="k")
     srows = []
-    q2 = (spark.readStream.format("txnlog_stream")
-          .option("path", tdir)
-          .option("skipChangeCommits", "true").load()
-          .writeStream.foreachBatch(
-              lambda df, _b: srows.extend(df.collect()))
-          .option("checkpointLocation", os.path.join(base, "st_ck"))
-          .trigger(availableNow=True).start())
-    q2.awaitTermination()
+    await_query(lambda: (
+        spark.readStream.format("txnlog_stream")
+        .option("path", tdir)
+        .option("skipChangeCommits", "true").load()
+        .writeStream.foreachBatch(
+            lambda df, _b: srows.extend(df.collect()))
+        .option("checkpointLocation", os.path.join(base, "st_ck"))
+        .trigger(availableNow=True).start()))
     svals = {r.k: r.val for r in srows}
     assert svals[65] == "n65" and svals[0] == "a0"
 
