@@ -486,8 +486,8 @@ def ivm_02(spark, sf):
 
     Scale shape: each micro-batch touches churn-sized frames plus the
     group-cardinality-sized view — never the base table; the view
-    read-merge-overwrite is the single-writer upsert discipline
-    (a table-format MERGE on a real lake).  The applier is the
+    read-merge-overwrite is the plain-parquet form of a table-format
+    MERGE (ivm_03 runs the txnlog form).  The applier is the
     batch-id-idempotent :func:`make_idempotent_applier`, so
     foreachBatch retries of an already-applied batch are no-ops."""
     import pathlib
@@ -563,23 +563,6 @@ def make_txn_applier(view_table: str, app: str = "ivm"):
                                 txn=(app, batch_id))
 
     return apply_delta
-
-
-def make_applier(view_path: str, app: str = "ivm"):
-    """The DEFAULT applier seam (r10): dispatch on the view's own
-    layout — a txnlog table gets :func:`make_txn_applier` (exactly-once
-    by atomic content+batch-id commit); only a pre-existing plain
-    parquet view falls back to :func:`make_idempotent_applier` and its
-    documented marker-after-view residual window.  New views should be
-    created with ``txnlog.create_table`` so maintenance runs on the
-    ACID path by default."""
-    import os as _os
-
-    from ..sources import txnlog as _t
-
-    if _os.path.isdir(_os.path.join(view_path, _t._LOG)):
-        return make_txn_applier(view_path, app)
-    return make_idempotent_applier(view_path)
 
 
 def ivm_03(spark, sf):

@@ -24,7 +24,7 @@ from .. import catalog
 from ..functions.determinism import sql_dsum
 from ..registry import QuerySpec
 from ..session import local_frame
-from ..sources import p21_csv, upsert, xml_cda
+from ..sources import p21_csv, xml_cda
 from ..streaming import broker
 from .streamnative import await_query
 
@@ -162,62 +162,26 @@ FROM orders WHERE o_orderkey < 500
 
 # ------------------------------------------------------- SNK-01/STR-09 upsert
 
-def ups_01(spark, sf):
+def _ups(spark, sf, files: int, prefix: str):
     """SNK-01 + STR-09: delete+insert-by-encounter upsert through the
-    DEFAULT store (sources/upsert — since r10 that is the txnlog ACID
-    format underneath: write_initial creates a commit-log table and
-    merge_upsert routes to txnlog.merge; the same seam foreachBatch
-    ingestion uses, streaming/ingest.py).  The batch moves encounters'
-    start_date by +40 days — under the legacy month-partitioned
-    fallback that was the cross-month correction case; under txnlog
-    it exercises MERGE data skipping instead.  Oracle = the
-    delete+insert semantics in SQL (reference re-import semantics:
-    aktin_init.sql, src/docker/database/Dockerfile:33) — UNCHANGED
-    from the lock-based rounds, so the hash certifies the txnlog
-    route computes the identical result."""
-    base = (catalog.visit_dimension(spark, sf)
-            .filter(F.col("encounter_num") < 400)
-            .select("encounter_num", "patient_num", "start_date", "inout_cd"))
-    tmp = tempfile.mkdtemp(prefix="spark_ups01_")
-    try:
-        path = tmp + "/store"
-        upsert.write_initial(base, path)
-        batch = (base.filter((F.col("encounter_num") >= 100)
-                             & (F.col("encounter_num") < 200))
-                 .select("encounter_num", "patient_num",
-                         (F.col("start_date") + F.expr("INTERVAL 40 DAYS"))
-                          .alias("start_date"),
-                         F.lit("U").alias("inout_cd")))
-        upsert.merge_upsert(spark, path, batch)
-        return _snap_off_tmp(
-            upsert.read_store(spark, path)
-                  .select("encounter_num", "patient_num", "start_date",
-                          "inout_cd"), tmp).orderBy("encounter_num")
-    except BaseException:
-        _rmtree(tmp)
-        raise
-
-
-def ups_02(spark, sf):
-    """SNK-01 upsert through the TRANSACTIONAL commit-log table format
-    (sources/txnlog.py): same re-import delete+insert semantics as
-    ups_01, but the merge is an atomic log commit with footer-stats
-    data skipping instead of a lock-guarded partition overwrite — the
-    ACID MERGE arm VERDICT r8 item 3 asked for, implemented on the
-    Delta-style protocol rather than env-blocked on a package.  Shares
-    ups_01's oracle: a hash match certifies the format's MERGE computes
-    exactly the lock-based path's result."""
+    txnlog ACID format (sources/txnlog.py) — the same create/merge
+    verbs foreachBatch ingestion uses (streaming/ingest.py).  The
+    initial store is range-packed into ``files`` data files by key so
+    MERGE's footer-stats data skipping starts tight; the batch moves
+    encounters' start_date by +40 days.  Oracle = the delete+insert
+    semantics in SQL (reference re-import semantics: aktin_init.sql,
+    src/docker/database/Dockerfile:33)."""
     from ..sources import txnlog
 
     base = (catalog.visit_dimension(spark, sf)
             .filter(F.col("encounter_num") < 400)
             .select("encounter_num", "patient_num", "start_date",
                     "inout_cd"))
-    tmp = tempfile.mkdtemp(prefix="spark_ups02_")
+    tmp = tempfile.mkdtemp(prefix=prefix)
     try:
         path = tmp + "/tbl"
         txnlog.create_table(
-            spark, base.repartitionByRange(4, "encounter_num"), path,
+            spark, base.repartitionByRange(files, "encounter_num"), path,
             key="encounter_num")
         batch = (base.filter((F.col("encounter_num") >= 100)
                              & (F.col("encounter_num") < 200))
@@ -233,6 +197,17 @@ def ups_02(spark, sf):
     except BaseException:
         _rmtree(tmp)
         raise
+
+
+def ups_01(spark, sf):
+    """:func:`_ups` over an 8-file initial store."""
+    return _ups(spark, sf, 8, "spark_ups01_")
+
+
+def ups_02(spark, sf):
+    """:func:`_ups` over a 4-file initial store: the same result from a
+    coarser file layout (different data-skipping footprint)."""
+    return _ups(spark, sf, 4, "spark_ups02_")
 
 
 def ds_01(spark, sf):
@@ -1797,10 +1772,11 @@ _DOCS = {
     "src_02": "SRC-02 SQL-script ingest (multi-statement run_sql_script)",
     "src_03": "SRC-03 CDA-XML shred roundtrip (mapInPandas parse)",
     "src_04": "SRC-04 P21 semicolon-CSV parse roundtrip (zip stays string)",
-    "ups_01": "SNK-01/STR-09 cross-month upsert roundtrip (partitioned store)",
+    "ups_01": "SNK-01/STR-09 +40-day upsert roundtrip through txnlog "
+              "MERGE (8-file range-packed store)",
     "ups_02": "SNK-01 upsert through the transactional commit-log "
               "table format (txnlog ACID MERGE, footer-stats data "
-              "skipping) — result ≡ ups_01's lock-based merge",
+              "skipping) over a 4-file store — result ≡ ups_01",
     "ds_01": "SRC-12 batch DataSource + SQL surface over the txnlog "
              "format (spark.read.format('txnlog'), versionAsOf time "
              "travel, DV masking in the source; v0 arm through plain "

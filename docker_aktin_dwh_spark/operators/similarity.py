@@ -808,9 +808,13 @@ KM_ITERS = 2
 #: integer-scaled arithmetic (FLOOR(x·SCALE) summed as BIGINT): exact
 #: and associative on both engines, so partial-agg order cannot move
 #: the hash — the decimal-routing discipline without any decimal
-#: cast-rounding-mode exposure.
+#: cast-rounding-mode exposure.  A squared distance
+#: Σ_dim FLOOR(diff²·KM_DIST_SCALE) stays exact in int64 only while
+#: dim · (max diff² · KM_DIST_SCALE + 1) < 2^63 — at DIM=64 that is
+#: |diff| < ~380; past it :func:`_scaled_sq_dists` raises
+#: OverflowError instead of wrapping.
 KM_DIST_SCALE = 1e12
-#: The numpy Lloyd steps (_ivf_step, _pq_step) accumulate
+#: The numpy Lloyd steps (_ivf_step, _pq_step, _km_step) accumulate
 #: FLOOR(x·KM_SUM_SCALE) in int64, which stays exact only while
 #: (max|x| · KM_SUM_SCALE + 1) · rows < 2^63 ≈ 9.2e18 — for |x| ≤ 1
 #: that is ~9.2e9 rows per task, and a single |x| ≥ 9.3e9 breaks it
@@ -836,6 +840,24 @@ def _scaled_sum_terms(x: "np.ndarray", peak: float, rows: int):
             f"rows reaches the int64 bound (max|x|·KM_SUM_SCALE+1)·rows "
             f"< 2^63")
     return np.floor(x * KM_SUM_SCALE).astype(np.int64), peak
+
+
+def _scaled_sq_dists(diff: "np.ndarray") -> "np.ndarray":
+    """Σ over the last axis of ``FLOOR(diff²·KM_DIST_SCALE)`` as int64.
+    Raises OverflowError on a non-finite value or once the sum's int64
+    bound could be reached (see KM_DIST_SCALE)."""
+    sq = diff * diff * KM_DIST_SCALE
+    if not np.isfinite(sq).all():
+        raise OverflowError(
+            "KM_DIST_SCALE distances: non-finite difference; "
+            "FLOOR(diff²·KM_DIST_SCALE) needs finite values")
+    top = float(sq.max(initial=0.0))
+    if diff.shape[-1] * (top + 1) >= 2.0 ** 63:
+        raise OverflowError(
+            f"KM_DIST_SCALE distances: max diff²·KM_DIST_SCALE={top:g} "
+            f"over dim {diff.shape[-1]} reaches the int64 bound "
+            f"dim·(max diff²·KM_DIST_SCALE+1) < 2^63")
+    return np.floor(sq).astype(np.int64).sum(axis=-1)
 
 
 def _km_pts(spark, sf):
@@ -925,9 +947,7 @@ def _km_assign(pts, cents):
         step = max(1, (1 << 23) // max(C.shape[0] * C.shape[1], 1))
         for s in range(0, n, step):
             xb = X[s:s + step]
-            diff = xb[:, None, :] - C[None, :, :]
-            d = np.floor(diff * diff * KM_DIST_SCALE) \
-                  .astype(np.int64).sum(axis=2)
+            d = _scaled_sq_dists(xb[:, None, :] - C[None, :, :])
             j = np.argmin(d, axis=1)
             dists[s:s + len(xb)] = d[np.arange(len(xb)), j]
             cc[s:s + len(xb)] = cids[j]
@@ -993,20 +1013,20 @@ def _km_step(pts, cents) -> list[tuple[int, list[float]]]:
     def partials(batches):
         psum = np.zeros((K, dim), dtype=np.int64)
         cnt = np.zeros(K, dtype=np.int64)
-        seen = False
+        seen = 0
+        peak = 0.0
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            seen = True
+            seen += n
             X = np.stack([np.asarray(v, dtype=np.float64)
                           for v in pdf["x"].to_numpy()])
-            XS = np.floor(X * KM_SUM_SCALE).astype(np.int64)
+            XS, peak = _scaled_sum_terms(X, peak, seen)
             step = max(1, (1 << 23) // max(K * dim, 1))
             for s in range(0, n, step):
                 xb = X[s:s + step]
-                d = np.floor((xb[:, None, :] - C[None, :, :]) ** 2
-                             * KM_DIST_SCALE).astype(np.int64).sum(axis=2)
+                d = _scaled_sq_dists(xb[:, None, :] - C[None, :, :])
                 j = np.argmin(d, axis=1)
                 np.add.at(psum, j, XS[s:s + len(xb)])
                 np.add.at(cnt, j, 1)

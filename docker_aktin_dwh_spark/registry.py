@@ -36,72 +36,9 @@ class QuerySpec:
 #: (operators/combined.py), source/sink roundtrips
 #: (operators/roundtrips.py), and the LLM operators.  Fine-grained
 #: legacy keys follow after position 50 and stay locally oracle-tested
-#: (tests/test_t2_oracle.py runs ALL keys).  Round 6: jn_04 folded
-#: into jn_misc as its "louter" branch, freeing the slot for llm_all
-#: (pack/mix/chunk/vocab/decon/dupcc tagged union) so the round-5 LLM
-#: batch operators are driver-certified too.  Round-6 second half:
-#: str_tw + str_sd consolidated into str_win (same four branches,
-#: fine-grained keys stay post-50), freeing a slot for maint_all
-#: (cdc/scd/lay/dq/rollup/fed_hll/hh/lm tagged union) so the
-#: maintenance/federation family is driver-certified as well; then
-#: coh_enc+coh_tmp → coh_misc and udf_01+udf_04 → udf_px, freeing
-#: slots for ext_all (seq/ts/lm/orc/mapInArrow/pipe_03 union) and the
-#: streaming-native str_11 stream-stream join.  Round 7: ded_exact
-#: (semantics ⊂ pipe_03's exact-dedup stage, certified via ext_all's
-#: rel branch) → fin_all (dupsel/pack2/shuf/split/bplate/jsonl/prof/
-#: priv/fed/agg12 union) and mm_01 (⊂ mm_decode's stub lane) →
-#: str_out (streaming-native str_12 + str_13).  Round 8 (VERDICT r7
-#: item 1): the 9 r7 post-50 keys enter the window — r7_all
-#: (bm25/er/pr/win07/srcevo/dq2/mix2 batch union) and str_out grows
-#: str_14 + str_15 branches; slots freed by ann_lsh+ann_ivf → ann_bx
-#: and pipe_01 (⊂ pipe_02/pipe_03's gated chain, certified via
-#: ext_all's pipe_03 branch; stays post-50); r8_all certifies
-#: NEW round-8 operators in the same round they land.  Round 9
-#: (VERDICT r8 item 5's slot economy): mm_04 donates its slot to
-#: r9_all, which certifies the new mm_jpg baseline-JPEG decode AND
-#: carries mm_04/emb_01/ded_incr as verbatim-builder branches — the
-#: three fold-ins stay driver-certified; emb_01's own banked slot
-#: then goes to r9b_all (second-wave round-9 union: blm_01 / kw_01 /
-#: er_03 / ann_pq), so every round-9 operator certifies same-round.
-#: Round 10 (VERDICT r9 item 7's slot economy): ann_topk and
-#: ded_simhash fold into r10_all as verbatim-builder branches and
-#: str_07's batch form folds into str_out ("st7"), freeing three
-#: slots for r10_all (pvt_01 / gsets_01 / smp_04 / curr_01 + the two
-#: fold-ins), cdc_04 (atomic CDC apply on the txnlog format) and
-#: str_20 (streaming deterministic bottom-k sample); ded_incr — whose
-#: builder already rides r9_all's "dinc" branch verbatim — donates its
-#: redundant direct slot to r10b_all (jn_11 / reg_01 / cpd_01), so
-#: every round-10 operator certifies same-round.  Round 11 (VERDICT
-#: r10 item 7's slot economy, the named folds): str_01 + str_05
-#: consolidate into str_rep (both builders verbatim — one slot,
-#: both streaming contracts) and ded_minhash folds into r11_all as a
-#: verbatim branch; the two freed slots go to ds_01 (the txnlog batch
-#: DataSource + SQL surface, VERDICT r10 item 3's driver-certified
-#: key) and r11_all (sdd_01 SemDeDup + the ded_minhash fold-in), so
-#: every round-11 operator certifies same-round.  Round 12 (VERDICT
-#: r11 item 1 + the slot-economy discipline): str_20 folds into
-#: str_out as its "kmv20" branch (builder verbatim — the streaming
-#: KMV sample stays driver-certified) and the freed slot goes to
-#: ds_02, the txnlog WRITER surface (df.write.format +
-#: writeStream exactly-once sink + stats-pruned read-back).  Second
-#: half: udf_02 folds into udf_px as its "gstat" branch (builder
-#: verbatim — jn_09 was tried first but its oracle is DuckDB-dialect
-#: (epoch_ns//1000) and jn_misc must stay ANSI-parity; udf_02's is
-#: dual-dialect) and the freed slot goes to r12_all (var_01 Spark 4
-#: VariantType analytics + sdd_02 incremental SemDeDup), so every
-#: r12 operator certifies same-round.  Round 13 (VERDICT r12 item 1 +
-#: the slot-economy discipline): cdc_04 folds into r13_all as its
-#: "cdc4" branch (builder verbatim — the atomic CDC apply stays
-#: driver-certified) and the slot carries colmap_01 too: column
-#: mapping (rename/drop as metadata-only txnlog commits, merge on the
-#: renamed column, time travel across the rename, fresh-physical
-#: re-add with no resurrection, CDC across all of it).  Round 14
-#: (VERDICT r13 item 1 + the slot-economy discipline): ups_01 folds
-#: into r14_all as its "ups" branch (builder verbatim — the upsert
-#: sink stays driver-certified) and the slot carries part_01 too:
-#: partitioned txnlog tables (hive-layout create, partition-scoped
-#: merge, plan-asserted partition-pruned read, metadata-only DROP
-#: PARTITION, time travel + CDC across all of it).
+#: (tests/test_t2_oracle.py runs ALL keys).  NOTES.md ("Registry
+#: slot economy") records which keys folded into which union, round
+#: by round, to free these positions.
 CORE50 = (
     "flt_all", "jn_03", "llm_all", "jn_misc", "jn_08", "jn_09",
     "agg_core", "agg_olap", "agg_03", "win_all", "set_all",

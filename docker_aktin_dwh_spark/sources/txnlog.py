@@ -4,8 +4,9 @@ The container has no Delta/Iceberg package, and VERDICT r8 item 3 asks
 for the real thing rather than a writer lock: this module implements
 the log-structured commit protocol those formats use — the same
 design as Delta Lake's ``_delta_log`` (public protocol spec) — on a
-POSIX filesystem, so `merge_upsert`'s single-writer lock genuinely
-"disappears into the format's commit protocol" (sources/upsert.py:46).
+POSIX filesystem.  It is the only store format the write sinks use
+(upsert, streaming ingest, clean ingest): optimistic concurrency on
+the log replaces any writer lock.
 
 Layout::
 
@@ -33,15 +34,13 @@ Protocol invariants (each one is a test in tests/test_txnlog.py):
 - **Crash safety**: a writer that dies after staging data files but
   before its commit leaves orphans that no snapshot references —
   readers are unaffected; :func:`vacuum` reclaims them.  There is no
-  half-committed state to repair (contrast FailedMergeError in the
-  lock-based path).
+  half-committed state to repair.
 - **MERGE with data skipping**: the commit log records per-file row
   counts and merge-key min/max (read from parquet footers, the same
   statistics a lakehouse catalog serves); MERGE rewrites only the
   files whose key interval intersects the batch — at 100 TB that is
   the handful of files holding the corrected encounters, not the
-  table, and unlike the month-partition emulation it needs no
-  physical partitioning choice made up front.
+  table, and it needs no physical partitioning choice made up front.
 - **Bounded log replay**: every CHECKPOINT_EVERY commits the full
   file list is checkpointed; a snapshot reads one checkpoint plus the
   commits after it, so open cost stays O(recent commits) no matter
@@ -380,7 +379,16 @@ def create_table(spark: SparkSession, df: DataFrame, path: str, *,
     cannot be renamed, dropped, or type-widened afterwards (their
     values are baked into directory names) — pick coarse, stable
     columns (the reference partitions its fact tables by month for
-    the same reason)."""
+    the same reason).
+
+    ``path`` must be absent or an empty directory: :func:`vacuum`
+    reclaims every unreferenced ``.parquet`` under the table, so
+    building a table over a directory that already holds files would
+    later delete them — raises FileExistsError instead."""
+    if os.path.isdir(path) and os.listdir(path):
+        raise FileExistsError(
+            f"create_table: {path} is not empty; a txnlog table needs "
+            "an absent or empty directory")
     partition_by = list(partition_by) if partition_by else None
     if partition_by:
         names = [f.name for f in df.schema.fields]
@@ -1169,8 +1177,8 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
           key: str,
           partition_filter: dict[str, object] | None = None) -> Snapshot:
     """Delete+insert MERGE keyed on ``key`` (the reference's re-import
-    semantics, same contract as upsert.merge_upsert): rows whose key
-    appears in the batch are replaced, everything else inserted.
+    semantics): rows whose key appears in the batch are replaced,
+    everything else inserted.
 
     Data skipping: only files whose footer [kmin, kmax] interval
     contains a batch key are considered; disjoint files carry over by

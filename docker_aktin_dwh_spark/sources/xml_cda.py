@@ -7,7 +7,7 @@ evidenced by the healthcheck URL at src/docker/template.yml:57).
 
 Spark re-design: binaryFile/text batch source (or STR-01 streaming
 directory watch) → Arrow-batched mapInPandas parse with the stdlib XML
-parser → exploded fact rows → merge_upsert (SNK-01) for idempotent
+parser → exploded fact rows → txnlog.merge (SNK-01) for idempotent
 re-submission.  Parsing is per-document and embarrassingly parallel —
 partition count scales with input file count; no driver-side XML work.
 

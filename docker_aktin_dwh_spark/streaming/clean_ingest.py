@@ -10,21 +10,15 @@ drop-folder import loop (documents arriving under /var/lib/aktin,
 reference src/docker/template.yml:51), upgraded to the corpus-ingest
 shape a training pipeline runs continuously.
 
-DEFAULT STORAGE (r10): both the survivor store and the seen-hash index
-are txnlog ACID tables (sources/txnlog.py), and each micro-batch lands
-as a txn-idempotent APPEND — the batch id commits in the same atomic
-log entry as the files, so a replayed batch is skipped by the log
-itself and a crashed batch leaves only invisible orphans (no
-half-state for the next attempt to exclude).  The store is appended
-BEFORE the hash index: every partial-failure state then recomputes the
-identical survivor set on replay (the seen-index read can only be
-missing the batch's own hashes, never contain them ahead of the store).
-
-FALLBACK: a pre-existing PLAIN store keeps the batch_id-partitioned
-dynamic-overwrite discipline (the same replay-idempotence primitive as
-dedup_ingest), including the seen-index read excluding the current
-batch_id so a half-committed prior attempt cannot feed its own rows
-back.
+STORAGE: both the survivor store and the seen-hash index are txnlog
+ACID tables (sources/txnlog.py), and each micro-batch lands as a
+txn-idempotent APPEND — the batch id commits in the same atomic log
+entry as the files, so a replayed batch is skipped by the log itself
+and a crashed batch leaves only invisible orphans (no half-state for
+the next attempt to exclude).  The store is appended BEFORE the hash
+index: every partial-failure state then recomputes the identical
+survivor set on replay (the seen-index read can only be missing the
+batch's own hashes, never contain them ahead of the store).
 
 Scale shape: the seen-hash index stores one md5 per accepted doc (the
 smallest possible dedup state); each batch is rejected against it with
@@ -79,19 +73,6 @@ def clean_batch(batch: DataFrame) -> DataFrame:
             .select("doc_id", "lang", scrub.alias("text")))
 
 
-def _is_txn(path: str) -> bool:
-    return os.path.isdir(os.path.join(path, txnlog._LOG))
-
-
-def read_clean_store(spark: SparkSession, path: str) -> DataFrame:
-    """Read the survivor store (or hash index) under its own layout —
-    txnlog tables go through the snapshot; legacy stores read as the
-    batch_id-partitioned parquet they are."""
-    if _is_txn(path):
-        return txnlog.read_table(spark, path)
-    return spark.read.parquet(path)
-
-
 def _ensure_table(spark: SparkSession, path: str, ddl: str,
                   key: str) -> None:
     """Create an EMPTY txnlog table if absent.  Empty-first matters for
@@ -99,57 +80,29 @@ def _ensure_table(spark: SparkSession, path: str, ddl: str,
     txn action recorded), a replayed batch 0 would append a duplicate —
     creating empty and routing ALL data through txn-idempotent appends
     closes that."""
-    if not _is_txn(path):
+    if not os.path.isdir(os.path.join(path, txnlog._LOG)):
         txnlog.create_table(spark, local_frame(spark, [], ddl), path,
                             key=key)
-
-
-def _overwrite_batch_partition(df: DataFrame, path: str,
-                               batch_id: int) -> None:
-    (df.withColumn("batch_id", F.lit(batch_id))
-       .write.mode("overwrite")
-       .option("partitionOverwriteMode", "dynamic")
-       .partitionBy("batch_id")
-       .parquet(path))
 
 
 def process_batch(spark, batch: DataFrame, batch_id: int, store_path: str,
                   hash_store: str) -> None:
     """One micro-batch: gate → scrub → exact dedup vs the seen-hash
-    index AND within the batch (keep-first on doc_id), then append
-    through the store's own idempotence primitive — txn-idempotent
-    txnlog append (default) or batch_id partition overwrite (legacy
-    plain store)."""
-    legacy = os.path.isdir(store_path) and not _is_txn(store_path)
+    index AND within the batch (keep-first on doc_id), then
+    txn-idempotent txnlog appends."""
     cleaned = materialize(clean_batch(batch))
     hashed = cleaned.select("doc_id", "lang", "text",
                             F.md5("text").alias("h"))
-    if legacy:
-        if os.path.isdir(hash_store):
-            seen = (spark.read.parquet(hash_store)
-                    .filter(F.col("batch_id") != batch_id)
-                    .select("h").distinct())
-        else:
-            seen = local_frame(spark, [], "h string")
-    else:
-        _ensure_table(spark, store_path, DOCS_DDL, "doc_id")
-        _ensure_table(spark, hash_store, _HASH_DDL, "doc_id")
-        seen = (txnlog.read_table(spark, hash_store)
-                .select("h").distinct())
+    _ensure_table(spark, store_path, DOCS_DDL, "doc_id")
+    _ensure_table(spark, hash_store, _HASH_DDL, "doc_id")
+    seen = (txnlog.read_table(spark, hash_store)
+            .select("h").distinct())
     fresh = hashed.join(seen, "h", "left_anti")
     # within-batch keep-first: smallest doc_id per content hash wins
     w_first = (fresh.groupBy("h").agg(F.min("doc_id").alias("doc_id")))
     surv = materialize(
         fresh.join(w_first, ["h", "doc_id"], "left_semi")
              .select("doc_id", "lang", "text", "h"))
-    if legacy:
-        _overwrite_batch_partition(surv.select("doc_id", "lang", "text"),
-                                   store_path, batch_id)
-        # survivors' hashes join the seen index (dropped dups are
-        # already represented by the survivor that shadowed them)
-        _overwrite_batch_partition(surv.select("doc_id", "h"),
-                                   hash_store, batch_id)
-        return
     # STORE FIRST, hashes second (see module docstring): every partial
     # state replays to the identical survivor set
     txnlog.append(spark, surv.select("doc_id", "lang", "text"),

@@ -13,28 +13,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.upsert import merge_upsert, write_initial
+from ..sources import txnlog
 
 
 def stream_merge_to_table(stream: DataFrame, table_path: str,
                           checkpoint: str, *,
-                          key: str = "encounter_num",
-                          ts_col: str = "start_date") -> StreamingQuery:
+                          key: str = "encounter_num") -> StreamingQuery:
     """writeStream.foreachBatch(MERGE) — upsert semantics of SNK-01 in
     streaming.  Exactly-once per batch via the checkpoint + the merge
-    being idempotent by key.  The table is the txnlog ACID format by
-    default (write_initial's r10 default): every micro-batch MERGE is
-    an atomic log commit, so a batch retried after a crash re-merges
-    idempotently and readers never observe a half-applied rewrite."""
+    being idempotent by key.  The table is a txnlog ACID table: the
+    first micro-batch creates it, every later one is a
+    :func:`txnlog.merge` — an atomic log commit, so a batch retried
+    after a crash re-merges idempotently and readers never observe a
+    half-applied rewrite."""
     spark = stream.sparkSession
     state = {"initialized": False}
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         import os
         if not state["initialized"] and not os.path.isdir(table_path):
-            write_initial(batch, table_path, ts_col, key=key)
+            txnlog.create_table(spark, batch, table_path, key=key)
         else:
-            merge_upsert(spark, table_path, batch, key=key, ts_col=ts_col)
+            txnlog.merge(spark, table_path, batch, key=key)
         state["initialized"] = True
 
     return (stream.writeStream.foreachBatch(handle)

@@ -837,7 +837,7 @@ def test_pq_step_equals_encode_mean_composition(spark):
 
 
 @pytest.mark.parametrize("bad", [1e10, float("nan")], ids=["1e10", "nan"])
-@pytest.mark.parametrize("step", ["ivf", "pq"])
+@pytest.mark.parametrize("step", ["ivf", "pq", "km"])
 def test_km_sum_scale_headroom_raises_instead_of_wrapping(spark, step,
                                                           bad):
     """One vector past the int64 headroom of the FLOOR(x·KM_SUM_SCALE)
@@ -854,10 +854,32 @@ def test_km_sum_scale_headroom_raises_instead_of_wrapping(spark, step,
         if step == "ivf":
             similarity._ivf_step(corpus.select(F.col("x").alias(
                 "embedding")), rng.rand(4, dim))
-        else:
+        elif step == "pq":
             similarity._pq_step(corpus.select(F.col("x").alias("e")),
                                 rng.rand(similarity.PQ_M, similarity.PQ_KS,
                                          similarity.PQ_DS))
+        else:
+            similarity._km_step(corpus, [(c, list(rng.rand(dim)))
+                                         for c in range(4)])
+
+
+@pytest.mark.parametrize("step", ["assign", "km"])
+def test_km_dist_scale_headroom_raises_instead_of_wrapping(spark, step):
+    """Squared distances Σ FLOOR(diff²·KM_DIST_SCALE) in int64: a
+    vector 400 away from its centroid in every dimension (64 · 1.6e17
+    > 2^63) is well inside KM_SUM_SCALE's headroom yet would wrap the
+    distance sum — k-means assignment and the Lloyd step must raise
+    OverflowError instead of picking a centroid from a wrapped value."""
+    dim = similarity.DIM
+    pts = spark.range(4).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat(F.lit(400.0), dim).alias("x")).coalesce(1)
+    cents = [(0, [0.0] * dim), (1, [1.0] * dim)]
+    with pytest.raises(Exception, match="OverflowError: KM_DIST_SCALE"):
+        if step == "assign":
+            similarity._km_assign(pts, cents).collect()
+        else:
+            similarity._km_step(pts, cents)
 
 
 def test_cosine_pairs_recover_cluster_structure(spark):

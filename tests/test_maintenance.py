@@ -383,22 +383,3 @@ def test_table_row_count_reads_footers_not_data(spark, tmp_path):
 
     assert C.table_row_count("jdbc:postgresql://x/db", "orders") is None
     assert C.table_row_count(str(tmp_path), "nope") is None
-
-
-def test_make_applier_dispatches_on_view_layout(spark, tmp_path):
-    """r10 default-storage seam: make_applier hands a txnlog view the
-    exactly-once txn applier and a plain parquet view the legacy
-    marker applier — the ACID path is the default for new views."""
-    from docker_aktin_dwh_spark.operators import maintenance as M
-    from docker_aktin_dwh_spark.sources import txnlog
-
-    _, view_old = M._cdc_feed_and_view(spark, SF_SMOKE)
-    tbl = str(tmp_path / "txn_view")
-    txnlog.create_table(spark, view_old, tbl, key="c_nationkey")
-    plain = str(tmp_path / "plain_view")
-    view_old.write.mode("overwrite").parquet(plain)
-
-    assert (M.make_applier(tbl).__qualname__
-            == M.make_txn_applier(tbl).__qualname__)
-    assert (M.make_applier(plain).__qualname__
-            == M.make_idempotent_applier(plain).__qualname__)

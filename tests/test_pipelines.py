@@ -12,242 +12,43 @@ from pyspark.sql import functions as F
 from conftest import SF_SMOKE
 
 from docker_aktin_dwh_spark import catalog
-from docker_aktin_dwh_spark.sources import p21_csv, upsert, xml_cda
+from docker_aktin_dwh_spark.sources import p21_csv, txnlog, xml_cda
 from docker_aktin_dwh_spark.streaming import broker
 
 
 @pytest.fixture(scope="module")
 def fact(spark):
-    # computed once and pinned in block storage: the upsert tests read
+    # computed once and pinned in block storage: the tests below read
     # this frame's lineage many times over
     return catalog.observation_fact(spark, SF_SMOKE).localCheckpoint()
 
 
-@pytest.mark.parametrize("fmt", ["txnlog", "parquet"])
-def test_merge_upsert_idempotent(spark, fact, tmp_path, fmt):
-    """SNK-01: importing the same batch twice leaves the table
-    unchanged — on BOTH storage layouts: the txnlog default (r10) and
-    the legacy month-partitioned fallback.  merge_upsert dispatches on
-    the store's own layout.  A 300-encounter slice carries the full
-    semantics (batch keys < 100, multiple months) at a fraction of
-    the four-merge wall time."""
+def test_merge_upsert_idempotent(spark, fact, tmp_path):
+    """SNK-01: importing the same batch twice leaves the txnlog table
+    unchanged, and an updated batch replaces its encounters' rows.  A
+    300-encounter slice carries the full semantics (batch keys < 100,
+    multiple months) at a fraction of the four-merge wall time."""
     fact = fact.filter(F.col("encounter_num") < 300).localCheckpoint()
     table = str(tmp_path / "fact")
-    upsert.write_initial(fact, table, format=fmt)
-    assert upsert.is_txnlog_store(table) == (fmt == "txnlog")
-    before = upsert.read_store(spark, table).count()
+    txnlog.create_table(spark, fact, table, key="encounter_num")
+    before = txnlog.read_table(spark, table).count()
     assert before == fact.count()
 
     batch = fact.filter(F.col("encounter_num") < 100)
-    upsert.merge_upsert(spark, table, batch)
-    after1 = upsert.read_store(spark, table).count()
-    upsert.merge_upsert(spark, table, batch)
-    after2 = upsert.read_store(spark, table).count()
+    txnlog.merge(spark, table, batch, key="encounter_num")
+    after1 = txnlog.read_table(spark, table).count()
+    txnlog.merge(spark, table, batch, key="encounter_num")
+    after2 = txnlog.read_table(spark, table).count()
     assert before == after1 == after2
 
     # and an updated batch actually replaces (not appends)
     updated = batch.withColumn("tval_char", F.lit("UPDATED"))
-    upsert.merge_upsert(spark, table, updated)
-    got = upsert.read_store(spark, table)
+    txnlog.merge(spark, table, updated, key="encounter_num")
+    got = txnlog.read_table(spark, table)
     assert got.count() == before
     assert (got.filter(F.col("encounter_num") < 100)
                .filter(F.col("tval_char") != "UPDATED")
                .filter(F.col("tval_char").isNotNull()).count() == 0)
-
-
-def test_merge_upsert_single_writer_lock(spark, fact, tmp_path):
-    """The enforced single-writer contract (VERDICT r7 item 7): while
-    one writer holds the store lock, a second merge RAISES with the
-    holder named instead of interleaving partition overwrites; the
-    lock is released after a successful merge (and names the pid in
-    the error) — the seam a transactional table format replaces."""
-    import os
-
-    import pytest as _pytest
-
-    table = str(tmp_path / "fact")
-    upsert.write_initial(fact, table, format="parquet")  # lock = legacy path
-    batch = fact.filter(F.col("encounter_num") < 100)
-
-    # simulate a concurrent writer holding the lock
-    with upsert._writer_lock(table):
-        with _pytest.raises(upsert.ConcurrentWriterError,
-                            match="locked by another writer"):
-            upsert.merge_upsert(spark, table, batch)
-    # holder released: merge proceeds and removes its own lock after
-    upsert.merge_upsert(spark, table, batch)
-    assert not os.path.exists(os.path.join(table, upsert._LOCK_DIR))
-    assert spark.read.parquet(table).count() == fact.count()
-
-
-def test_writer_lock_lease_expiry_breaks_crashed_holder(tmp_path):
-    """A crashed writer (lock dir present, heartbeat older than the
-    lease) is USURPED: the next writer breaks the stale lock and
-    claims it (VERDICT r8 item 3 — stale locks no longer need manual
-    cleanup).  A FRESH heartbeat still blocks (live holder is never
-    usurped), and a truncated owner.json (the claim/json.dump race,
-    ADVICE r8) raises ConcurrentWriterError — not JSONDecodeError."""
-    import os
-    import time as _time
-
-    import pytest as _pytest
-
-    table = str(tmp_path / "store")
-    os.makedirs(table)
-    lock = os.path.join(table, upsert._LOCK_DIR)
-
-    # crashed holder: stale heartbeat -> lock broken, claim succeeds
-    os.makedirs(lock)
-    hb = os.path.join(lock, upsert._HEARTBEAT)
-    with open(hb, "w") as f:
-        f.write("0")
-    old = _time.time() - 10_000
-    os.utime(hb, (old, old))
-    with upsert._writer_lock(table, lease=60):
-        assert os.path.exists(os.path.join(lock, "owner.json"))
-    assert not os.path.exists(lock)
-
-    # live holder: fresh heartbeat -> still refused
-    os.makedirs(lock)
-    with open(os.path.join(lock, upsert._HEARTBEAT), "w") as f:
-        f.write(str(_time.time()))
-    with open(os.path.join(lock, "owner.json"), "w") as f:
-        f.write('{"pid": 1,')          # truncated mid-write
-    with _pytest.raises(upsert.ConcurrentWriterError,
-                        match="locked by another writer"):
-        with upsert._writer_lock(table, lease=60):
-            pass
-    import shutil as _sh
-    _sh.rmtree(lock)
-
-
-def test_writer_lock_failed_merge_leaves_marked_lock(tmp_path):
-    """A merge body that RAISES leaves the lock in place with a
-    ``failed`` marker (the store may be half-rewritten); subsequent
-    writers get FailedMergeError until the operator removes the lock
-    (ADVICE r8 — the old finally-rmtree unlocked a possibly corrupt
-    store)."""
-    import os
-
-    import pytest as _pytest
-
-    table = str(tmp_path / "store")
-    os.makedirs(table)
-    lock = os.path.join(table, upsert._LOCK_DIR)
-
-    with _pytest.raises(RuntimeError, match="boom"):
-        with upsert._writer_lock(table, lease=60):
-            raise RuntimeError("boom")
-    assert os.path.exists(os.path.join(lock, upsert._FAILED))
-
-    with _pytest.raises(upsert.FailedMergeError, match="FAILED previous"):
-        with upsert._writer_lock(table, lease=60):
-            pass
-
-    # operator repaired the store and removed the lock: writers resume
-    import shutil as _sh
-    _sh.rmtree(lock)
-    with upsert._writer_lock(table, lease=60):
-        pass
-    assert not os.path.exists(lock)
-
-
-def test_writer_lock_fencing_token_blocks_usurped_holder(tmp_path):
-    """ADVICE r9: a holder stalled past its lease and USURPED (a
-    contender rewrote owner.json with its own acquisition token) must
-    not clean up on exit — rmtree would delete the NEW holder's lock
-    and invite a third writer — nor write a failed marker into it.
-    The stalled holder raises UsurpedLockError; the usurper's lock
-    survives byte-intact."""
-    import json as _json
-    import os
-
-    import pytest as _pytest
-
-    table = str(tmp_path / "store")
-    os.makedirs(table)
-    lock = os.path.join(table, upsert._LOCK_DIR)
-
-    with _pytest.raises(upsert.UsurpedLockError, match="broken mid-merge"):
-        with upsert._writer_lock(table, lease=60):
-            # simulate the usurpation mid-body: the contender broke
-            # the lease and wrote ITS owner.json (fresh token)
-            with open(os.path.join(lock, "owner.json"), "w") as f:
-                f.write('{"pid": 999, "token": "usurper-token"}')
-    assert os.path.isdir(lock), "usurper's lock must survive"
-    assert not os.path.exists(os.path.join(lock, upsert._FAILED))
-    with open(os.path.join(lock, "owner.json")) as f:
-        assert _json.load(f)["token"] == "usurper-token"
-
-    # a RAISING body under usurpation also leaves the new lock clean
-    import shutil as _sh
-    _sh.rmtree(lock)
-    with _pytest.raises(RuntimeError, match="boom"):
-        with upsert._writer_lock(table, lease=60):
-            with open(os.path.join(lock, "owner.json"), "w") as f:
-                f.write('{"pid": 999, "token": "usurper-token"}')
-            raise RuntimeError("boom")
-    assert not os.path.exists(os.path.join(lock, upsert._FAILED)), (
-        "failed marker belongs to the holder, never the usurper's lock")
-
-
-def test_grab_release_is_atomic_wrt_usurpers(tmp_path):
-    """ADVICE r10: the release path used to check _owns(lock, token)
-    and THEN rmtree — a contender breaking the lease in that window
-    had its fresh lock dir deleted (the third-writer hazard again).
-    _grab_release renames the dir aside FIRST (atomic grab), verifies
-    the token on the grabbed dir, and either deletes (ours) or renames
-    back intact (a usurper's live lock)."""
-    import json as _json
-    import os
-
-    lock = str(tmp_path / upsert._LOCK_DIR)
-
-    # arm 1: our own lock -> released, True
-    os.makedirs(lock)
-    with open(os.path.join(lock, "owner.json"), "w") as f:
-        _json.dump({"token": "tok-A"}, f)
-    assert upsert._grab_release(lock, "tok-A") is True
-    assert not os.path.exists(lock)
-
-    # arm 2: a usurper's lock -> handed back byte-intact, False
-    os.makedirs(lock)
-    with open(os.path.join(lock, "owner.json"), "w") as f:
-        _json.dump({"token": "usurper"}, f)
-    with open(os.path.join(lock, upsert._HEARTBEAT), "w") as f:
-        f.write("123")
-    assert upsert._grab_release(lock, "tok-A") is False
-    assert os.path.isdir(lock), "usurper's lock must be restored"
-    with open(os.path.join(lock, "owner.json")) as f:
-        assert _json.load(f)["token"] == "usurper"
-    assert os.path.exists(os.path.join(lock, upsert._HEARTBEAT))
-
-    # arm 3: lock vanished entirely -> False, no crash
-    import shutil as _sh
-    _sh.rmtree(lock)
-    assert upsert._grab_release(lock, "tok-A") is False
-
-
-def test_merge_upsert_touches_only_batch_partitions(spark, fact, tmp_path):
-    table = str(tmp_path / "fact")
-    upsert.write_initial(fact, table, format="parquet")  # layout-specific
-    files_before = {str(p.relative_to(table))
-                    for p in Path(table).glob("p_month=*/*.parquet")}
-    one_enc = fact.filter(F.col("encounter_num") == 1)
-    months = {r[0] for r in upsert.with_partition(one_enc)
-              .select("p_month").distinct().collect()}
-    upsert.merge_upsert(spark, table, one_enc)
-    files_after = {str(p.relative_to(table))
-                   for p in Path(table).glob("p_month=*/*.parquet")}
-    # data files have UUID names: a rewritten partition gets new names,
-    # an untouched one keeps its files verbatim
-    untouched_before = {f for f in files_before
-                        if f.split("=")[1].split("/")[0] not in months}
-    assert untouched_before, "expected untouched partitions to exist"
-    assert untouched_before <= files_after
-    rewritten = {f for f in files_before
-                 if f.split("=")[1].split("/")[0] in months}
-    assert rewritten and not (rewritten & files_after)
 
 
 def test_xml_shred_roundtrip(spark, fact, tmp_path):

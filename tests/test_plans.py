@@ -76,10 +76,10 @@ def test_partition_pruning_on_upsert_table(spark, tmp_path):
     """FLT-03 at scale: a month predicate on the p_month-partitioned
     fact table must prune at planning time (PartitionFilters on the
     scan), not read-and-filter."""
-    from docker_aktin_dwh_spark.sources import upsert
     fact = catalog.observation_fact(spark, SF_SMOKE)
     table = str(tmp_path / "fact")
-    upsert.write_initial(fact, table, format="parquet")  # p_month layout
+    (fact.withColumn("p_month", F.date_format("start_date", "yyyy-MM"))
+         .write.partitionBy("p_month").parquet(table))
     df = (spark.read.parquet(table)
           .filter(F.col("p_month") == "1996-03")
           .select("encounter_num", "concept_cd"))

@@ -14,6 +14,8 @@ exception (including Skipped)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -192,14 +194,15 @@ def _body_str09_stream_merge_idempotent(spark, stream_dir, tmp):
     table = str(tmp / "table")
     q = ingest.stream_merge_to_table(stream, table, str(tmp / "ckpt1"))
     q.awaitTermination()
-    from docker_aktin_dwh_spark.sources import upsert as _ups
-    assert _ups.is_txnlog_store(table), "ingest must default to txnlog"
-    n1 = _ups.read_store(spark, table).count()
+    from docker_aktin_dwh_spark.sources import txnlog
+    assert os.path.isdir(os.path.join(table, "_txnlog")), \
+        "ingest must default to txnlog"
+    n1 = txnlog.read_table(spark, table).count()
     # replay everything again (fresh checkpoint = full re-delivery)
     stream2 = (spark.readStream.schema(fact.schema).parquet(str(watch)))
     q2 = ingest.stream_merge_to_table(stream2, table, str(tmp / "ckpt2"))
     q2.awaitTermination()
-    n2 = _ups.read_store(spark, table).count()
+    n2 = txnlog.read_table(spark, table).count()
     assert n1 == n2 == fact.count()
 
 
@@ -431,11 +434,10 @@ def _body_clean_ingest_matches_batch_clean(spark, stream_dir, tmp):
     q = clean_ingest(src, store, str(tmp / "cckpt"))
     q.awaitTermination()
 
-    from docker_aktin_dwh_spark.streaming.clean_ingest import (
-        read_clean_store)
-    from docker_aktin_dwh_spark.sources.upsert import is_txnlog_store
-    assert is_txnlog_store(store), "clean ingest must default to txnlog"
-    got = {(r.doc_id, r.text) for r in read_clean_store(spark, store)
+    from docker_aktin_dwh_spark.sources import txnlog
+    assert os.path.isdir(os.path.join(store, "_txnlog")), \
+        "clean ingest must default to txnlog"
+    got = {(r.doc_id, r.text) for r in txnlog.read_table(spark, store)
            .select("doc_id", "text").collect()}
 
     cleaned = clean_batch(docs).withColumn("h", F.md5("text"))
@@ -452,31 +454,22 @@ def _body_clean_ingest_matches_batch_clean(spark, stream_dir, tmp):
 def _body_clean_ingest_replay_is_idempotent(spark, stream_dir, tmp):
     """Replaying a batch (simulated failure between write and
     checkpoint commit) must not duplicate rows in either store."""
-    from docker_aktin_dwh_spark.streaming.clean_ingest import (
-        process_batch, read_clean_store)
+    from docker_aktin_dwh_spark.sources import txnlog
+    from docker_aktin_dwh_spark.streaming.clean_ingest import process_batch
 
     docs = catalog.load(spark, SF_SMOKE, "documents") \
                   .select("doc_id", "lang", "text").filter(F.col("doc_id") < 60)
     store = str(tmp / "s")
     hstore = store + "_content_hashes"
     process_batch(spark, docs, 0, store, hstore)
-    first = sorted(r.doc_id for r in read_clean_store(spark, store).collect())
+    assert os.path.isdir(os.path.join(store, "_txnlog")), \
+        "clean ingest must default to txnlog"
+    first = sorted(r.doc_id for r in txnlog.read_table(spark, store).collect())
     process_batch(spark, docs, 0, store, hstore)      # replay same batch
-    again = sorted(r.doc_id for r in read_clean_store(spark, store).collect())
+    again = sorted(r.doc_id for r in txnlog.read_table(spark, store).collect())
     assert first == again
-    hashes = read_clean_store(spark, hstore).select("h").collect()
+    hashes = txnlog.read_table(spark, hstore).select("h").collect()
     assert len(hashes) == len({r.h for r in hashes})
-
-    # legacy plain store keeps the partition-overwrite idempotence
-    lstore = str(tmp / "ls")
-    lh = lstore + "_content_hashes"
-    import os as _os
-    _os.makedirs(lstore)                 # pre-existing PLAIN dir
-    process_batch(spark, docs, 0, lstore, lh)
-    l1 = sorted(r.doc_id for r in read_clean_store(spark, lstore).collect())
-    process_batch(spark, docs, 0, lstore, lh)
-    l2 = sorted(r.doc_id for r in read_clean_store(spark, lstore).collect())
-    assert l1 == l2 == first
 
 
 def _scd_snapshot(spark, v: int):

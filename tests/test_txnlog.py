@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 import threading
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -3483,33 +3485,25 @@ def test_delete_where_conjunction(spark, tdir):
         txnlog.delete_where(spark, tdir, key="k", filters=[])
 
 
-def test_partitioned_streaming_sink_and_default_store(spark, tdir,
-                                                      tmp_path):
-    """r14: the default SNK-01 store accepts partition_by (txnlog
-    underneath), merge_upsert rides partition staging transparently,
-    and a foreachBatch streaming append into a PARTITIONED table lands
-    hive-laid files with partition values logged (the exactly-once
-    ingest path on a partitioned table)."""
-    from docker_aktin_dwh_spark.sources import upsert
-
+def test_partitioned_streaming_sink_and_default_store(spark, tdir):
+    """r14: the SNK-01 store accepts partition_by, merge rides
+    partition staging transparently, and a foreachBatch streaming
+    append into a PARTITIONED table lands hive-laid files with
+    partition values logged (the exactly-once ingest path on a
+    partitioned table)."""
     base = _mkp(spark, 0, 80).withColumnRenamed("k", "encounter_num")
-    upsert.write_initial(base, tdir, key="encounter_num",
-                         partition_by=["region"])
+    txnlog.create_table(spark, base.repartitionByRange(8, "encounter_num"),
+                        tdir, key="encounter_num", partition_by=["region"])
     snap = txnlog.snapshot(tdir)
     assert snap.partition_by == ["region"]
     batch = (spark.range(0, 10).coalesce(1).select(
         F.col("id").alias("encounter_num"),
         (F.col("id") % 4).cast("int").alias("region"),
         F.lit("m").alias("v")))
-    upsert.merge_upsert(spark, tdir, batch, key="encounter_num")
-    got = upsert.read_store(spark, tdir)
+    txnlog.merge(spark, tdir, batch, key="encounter_num")
+    got = txnlog.read_table(spark, tdir)
     assert got.count() == 80
     assert got.filter("encounter_num = 5").first().v == "m"
-    # legacy format refuses the option rather than ignoring it
-    with pytest.raises(ValueError, match="txnlog format"):
-        upsert.write_initial(base, str(tmp_path / "x"),
-                             key="encounter_num", format="parquet",
-                             partition_by=["region"])
     # streaming micro-batches append into the partitioned table with
     # txn idempotence (replayed batch is a no-op)
     txnlog.append(spark, _mkp(spark, 100, 110, tag="s")
@@ -3522,7 +3516,31 @@ def test_partitioned_streaming_sink_and_default_store(spark, tdir,
     snap2 = txnlog.snapshot(tdir)
     new = [n for n in snap2.files if n not in snap.files]
     assert new and all("region=" in n for n in new)
-    assert upsert.read_store(spark, tdir).count() == 90
+    assert txnlog.read_table(spark, tdir).count() == 90
+
+
+def test_create_table_refuses_non_empty_directory(spark, tmp_path):
+    """create_table over a directory that already holds files (here a
+    batch_id-partitioned plain parquet store) must raise, naming the
+    path: a table built there would let vacuum reclaim the foreign
+    files as unreferenced.  Absent and empty directories stay fine."""
+    foreign = str(tmp_path / "plain")
+    (spark.range(12).withColumn("batch_id", F.col("id") % 3)
+     .repartition(4).write.partitionBy("batch_id").parquet(foreign))
+    before = sorted(p.relative_to(foreign)
+                    for p in Path(foreign).rglob("*.parquet"))
+    with pytest.raises(FileExistsError, match=re.escape(foreign)):
+        txnlog.create_table(spark, _mk(spark, 0, 5), foreign, key="k")
+    assert not os.path.exists(os.path.join(foreign, "_txnlog"))
+    assert sorted(p.relative_to(foreign)
+                  for p in Path(foreign).rglob("*.parquet")) == before
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (str(empty), str(tmp_path / "absent")):
+        assert txnlog.create_table(spark, _mk(spark, 0, 5), path,
+                                   key="k").version == 0
+        assert txnlog.read_table(spark, path).count() == 5
 
 
 def test_partitioned_with_column_mapping(spark, tdir):
