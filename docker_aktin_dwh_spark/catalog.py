@@ -16,10 +16,14 @@ join-on-key) and Catalyst pushes filters beneath them.
 
 from __future__ import annotations
 
+import copy
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import NANOS_AS_LONG
 
@@ -98,8 +102,86 @@ def jdbc_reader(spark: SparkSession, spec: str, table: str):
     return reader
 
 
+#: Session confs whose values change how Spark maps parquet footers
+#: (and partition directory names) to a Catalyst schema: each is part of
+#: the schema memo key, so toggling one re-infers.
+_SCHEMA_CONFS = (
+    NANOS_AS_LONG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: entries kept in the schema memo (ten fixture tables per scale
+#: directory); the oldest entry goes first once it is full
+_SCHEMA_MEMO_MAX = 256
+_schema_memo: dict[tuple, StructType] = {}
+_schema_memo_lock = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple | None:
+    """``(inode, size, mtime_ns)`` of a file, or the sorted
+    ``(relpath, inode, size, mtime_ns)`` of every file under a
+    directory, so an in-place rewrite, a Spark ``mode("overwrite")``
+    and a new ``partitionBy`` directory all change it.  ``None`` when
+    the path cannot be stat'ed."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        entries = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                fs = os.stat(full)
+                entries.append((os.path.relpath(full, path), fs.st_ino,
+                                fs.st_size, fs.st_mtime_ns))
+        return tuple(sorted(entries))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` under a memoized Spark-inferred
+    schema.  A schemaless parquet read makes Spark infer the schema
+    with a job that reads footers (``mergeSchemasInParallel``), even
+    for one file; with a schema given, the read plans without a job.
+    The first read of a path runs the plain read and memoizes
+    ``df.schema`` — Spark's own inference, so NTZ, nanos and decimal
+    mapping are exact.  Later reads pass it while the key matches:
+    the absolute path, :func:`_file_identity` and the values of
+    :data:`_SCHEMA_CONFS`.  The identity is taken before the read, so
+    a file changing under the first read is re-inferred next time.  A
+    path that cannot be stat'ed gets the plain read (and Spark's
+    own "Path does not exist" error)."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), ident,
+           tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    schema = _schema_memo.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    # a private copy: df.schema is the caller's object to mutate
+    schema = copy.deepcopy(df.schema)
+    with _schema_memo_lock:
+        if len(_schema_memo) >= _SCHEMA_MEMO_MAX:
+            del _schema_memo[next(iter(_schema_memo))]
+        _schema_memo[key] = schema
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalizes the `events` nanos timestamp.
+
+    Parquet tables are read through :func:`_read_parquet`: the schema
+    Spark inferred on the first load is cached per (absolute path,
+    file identity, parquet inference confs), so a repeated load of an
+    unchanged table runs no Spark job — a schemaless read runs a
+    footer-reading inference job every time.
 
     ``sf_dir`` may also be a ``jdbc:`` table spec (see
     :func:`parse_jdbc_spec`) — then each table is a parallel JDBC scan
@@ -133,11 +215,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return jdbc_reader(spark, sf_dir, name).load()
     if name == "events":
         spark.conf.set(NANOS_AS_LONG, "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/events.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr(_NANOS_TO_NTZ))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -147,21 +229,26 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def table_row_count(sf_dir: str, name: str) -> int | None:
     """Row count of a fixture table from parquet FOOTER metadata — no
     Spark job, no data scan (ADVICE r8: a size-gate's control-plane
-    scalar must not cost an O(table) pass).  Parquet footers carry
-    exact row counts per file; summing them is a metadata read, the
-    same statistic a lakehouse catalog serves.  Returns ``None`` when
-    the source has no footer to read (JDBC specs, missing path) so
-    callers fall back to their exact arm / a real count."""
+    scalar must not cost an O(table) pass).  Returns ``None`` for JDBC
+    specs, which have no footer, so callers fall back to their exact
+    arm / a real count; see :func:`parquet_row_count` for paths."""
     if sf_dir.startswith("jdbc:"):
         return None
+    return parquet_row_count(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def parquet_row_count(path: str) -> int | None:
+    """Rows of a parquet file, or of the ``*.parquet`` files directly
+    under a directory (a Spark write), summed from their footers.
+    Parquet footers carry exact row counts per file; summing them is a
+    metadata read, the same statistic a lakehouse catalog serves.
+    Returns ``None`` when there is no footer to read (missing path)."""
     import pyarrow.parquet as pq
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
+            return pq.read_metadata(path).num_rows
         if os.path.isdir(path):
-            return sum(pq.ParquetFile(os.path.join(path, f))
-                       .metadata.num_rows
+            return sum(pq.read_metadata(os.path.join(path, f)).num_rows
                        for f in os.listdir(path) if f.endswith(".parquet"))
     except OSError:
         return None

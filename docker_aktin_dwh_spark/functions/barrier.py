@@ -88,13 +88,12 @@ def scan_is_narrow(df: DataFrame) -> bool:
     so the decision scales with input size, not a tuned constant: a
     100 TB table reports wide and the helpers are no-ops.  Streaming
     frames and frames with no file provenance (in-memory, checkpoints,
-    Python data sources) report wide — never touched."""
+    Python data sources) report wide — never touched: ``inputFiles()``
+    returns no files for them, so an error it raises is a real one and
+    propagates."""
     if df.isStreaming:
         return False
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return False
+    files = df.inputFiles()
     if not files:
         return False
     import os
@@ -109,11 +108,8 @@ def scan_is_narrow(df: DataFrame) -> bool:
     # million files on an NFS/Lustre-visible cluster path.
     if len(files) > 4 * p:
         return False
-    try:
-        raw = sess.conf.get("spark.sql.files.maxPartitionBytes")
-        max_pb = _parse_bytes(raw)
-    except Exception:
-        max_pb = 0
+    max_pb = _parse_bytes(
+        sess.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     threshold = p * (max_pb or 128 * 1024 * 1024)
     total = 0
     for f in files:

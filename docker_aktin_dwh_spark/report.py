@@ -55,10 +55,11 @@ def pseudonymize(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
 def run_report(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Materialize every report frame to parquet under `out_dir`
     (SNK-02).  Returns row counts per artifact (the bookkeeping row the
-    aktin schema keeps per generated report)."""
+    aktin schema keeps per generated report), summed from the footers
+    of the files just written — no read-back job."""
     counts: dict[str, int] = {}
     for name, df in monthly_report(spark, sf_dir).items():
         path = str(Path(out_dir) / name)
         df.write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        counts[name] = catalog.parquet_row_count(path)
     return counts

@@ -24,7 +24,7 @@ class _FakeConf:
     def __init__(self, raw):
         self._raw = raw
 
-    def get(self, key):
+    def get(self, key, default=None):
         return self._raw
 
 
@@ -109,3 +109,15 @@ def test_unit_suffixed_conf_keeps_threshold(tmp_path):
 def test_missing_file_reports_wide(tmp_path):
     assert barrier.scan_is_narrow(
         _FakeDF([str(tmp_path / "absent.parquet")])) is False
+
+
+class _RaisingDF(_FakeDF):
+    def inputFiles(self):
+        raise RuntimeError("file index listing failed")
+
+
+def test_input_files_failure_raises():
+    """A failing ``inputFiles()`` is an error, not a "wide" verdict:
+    frames without file provenance return an empty list instead."""
+    with pytest.raises(RuntimeError, match="file index listing failed"):
+        barrier.scan_is_narrow(_RaisingDF([]))

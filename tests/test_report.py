@@ -22,6 +22,26 @@ def test_run_report_materializes_all_frames(spark, tmp_path):
     assert again == counts
 
 
+def test_run_report_counts_rows_without_a_job(spark, tmp_path, monkeypatch):
+    """The per-artifact row count is read from the footers of the files
+    just written: the counting step submits no Spark job."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    real = catalog.parquet_row_count
+    jobs = []
+
+    def counting(path):
+        j0 = dag.nextJobId()
+        n = real(path)
+        jobs.append(dag.nextJobId() - j0)
+        return n
+
+    monkeypatch.setattr(catalog, "parquet_row_count", counting)
+    counts = report.run_report(spark, SF_SMOKE, str(tmp_path))
+    assert jobs == [0, 0, 0]
+    assert counts == {name: spark.read.parquet(str(tmp_path / name)).count()
+                      for name in counts}
+
+
 def test_ont02_rollup_respects_tree_invariants(spark):
     """ont_02's hierarchy invariants beyond the hash: the root node
     counts every fact and every distinct patient of the corpus;

@@ -6,7 +6,10 @@ per-key medians plus load-invariant work counters: job count, executor task
 time, input bytes, shuffle read/write bytes, task count — diffed around the
 LAST (steady-state) run, so control-plane optimizations (fewer driver
 round-trips) leave artifact evidence, not just wall-clock prose (VERDICT r15
-item 7).
+item 7).  ``build_jobs`` counts the jobs submitted while ``fn(spark, sf)``
+builds the frame, before any action (eager control-plane work such as
+schema inference or a materialize barrier).  A counter whose status-store
+read fails is written as null, never as 0.
 """
 import os, sys, time, json
 sys.path.insert(0, "/root/repo")
@@ -14,6 +17,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 from docker_aktin_dwh_spark.registry import build_registry
 from docker_aktin_dwh_spark.session import build_session
 from pyspark.sql import functions as F
+from py4j.protocol import Py4JError
 import pandas as pd
 
 suffix = sys.argv[1]
@@ -42,8 +46,9 @@ def _counters():
         sc._jsc.sc().listenerBus().waitUntilEmpty()
     except Exception:
         time.sleep(0.2)
-    out = {"task_time_ms": 0, "input_bytes": 0, "shuffle_read_bytes": 0,
-           "shuffle_write_bytes": 0, "tasks": 0, "jobs": 0}
+    executor_fields = ("task_time_ms", "input_bytes", "shuffle_read_bytes",
+                       "shuffle_write_bytes", "tasks")
+    out = dict.fromkeys(executor_fields, 0)
     try:
         store = sc._jsc.sc().statusStore()
         lst = store.executorList(False)
@@ -54,13 +59,23 @@ def _counters():
             out["shuffle_read_bytes"] += e.totalShuffleRead()
             out["shuffle_write_bytes"] += e.totalShuffleWrite()
             out["tasks"] += e.totalTasks()
-    except Exception:
-        pass
-    try:
-        out["jobs"] = int(sc._jsc.sc().dagScheduler().nextJobId())
-    except Exception:
-        pass
+    except Py4JError:
+        out = dict.fromkeys(executor_fields)
+    out["jobs"] = _job_id()
     return out
+
+
+def _job_id():
+    """The DAGScheduler's next job id (monotone: a diff is a job count),
+    or None when the read fails."""
+    try:
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+    except Py4JError:
+        return None
+
+
+def _diff(a, b):
+    return None if a is None or b is None else b - a
 
 
 os.makedirs(plans_dir, exist_ok=True)
@@ -72,12 +87,15 @@ for key in keys:
     for i in range(3):
         c0 = _counters() if i == 2 else None
         t0 = time.perf_counter()
+        j0 = _job_id()
         df = fn(spark, sf)
+        build_jobs = _diff(j0, _job_id())
         df.count()
         runs.append(time.perf_counter() - t0)
         if i == 2:
             c1 = _counters()
-            work = {k: c1[k] - c0[k] for k in c1}
+            work = {k: _diff(c0[k], c1[k]) for k in c1}
+            work["build_jobs"] = build_jobs
     # plan of the last build (cheap: _explainString, no execution)
     try:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -96,7 +114,7 @@ for key in keys:
     out[key] = {"med": round(runs[1], 3), "min": round(runs[0], 3),
                 "max": round(runs[2], 3), "work": work}
     print(f"{key:16s} med={runs[1]:7.3f} min={runs[0]:7.3f} max={runs[2]:7.3f}"
-          f" jobs={work['jobs']:3d} task_ms={work['task_time_ms']:7d}",
-          flush=True)
+          f" jobs={work['jobs']} build_jobs={work['build_jobs']}"
+          f" task_ms={work['task_time_ms']}", flush=True)
 print(json.dumps(out))
 spark.stop()
