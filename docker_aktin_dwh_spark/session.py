@@ -120,8 +120,12 @@ def local_frame(spark: SparkSession, rows: list[tuple],
     or StructType) — the engine's one way to build a driver-side frame.
 
     The rows go to the JVM as a pyarrow Table, which Spark turns into a
-    ``LocalRelation``: building it runs no job, and scanning or
-    broadcasting it starts no Python worker.  (Past
+    ``LocalRelation``: building or collecting it runs no job, and
+    scanning or broadcasting it starts no Python worker.  Broadcasting
+    it does run one Spark job of up to ``defaultParallelism`` tasks:
+    ``BroadcastExchangeExec`` collects its child through
+    ``executeCollectIterator``, which ``LocalTableScanExec`` does not
+    override, so the rows are parallelized and collected back.  (Past
     ``spark.sql.execution.arrow.localRelationThreshold`` bytes Spark
     keeps the Arrow batches in a JVM-side RDD instead — still no
     Python worker.)  ``createDataFrame(list)`` instead plans a

@@ -77,10 +77,11 @@ import json
 import os
 import shutil
 import uuid
+import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..session import local_frame
 from . import logcore as _core
@@ -140,11 +141,14 @@ def snapshot(path: str, version: int | None = None) -> Snapshot:
     if b is not None and hasattr(b, "recover_table"):
         try:
             b.recover_table(_log_dir(path))
-        except Exception:
+        except Exception as e:
             # repair is best-effort on the READ path: a broken
-            # coordinator must not take reads down with it — writers
-            # will surface it loudly on the next claim
-            pass
+            # coordinator must not take reads down with it, but it
+            # must not fail silently either
+            warnings.warn(f"txnlog.snapshot: recover_table failed for "
+                          f"{path}: {type(e).__name__}: {e}; reading "
+                          f"the log without the repair",
+                          RuntimeWarning, stacklevel=2)
     return _core.replay(path, version)
 
 
@@ -1038,7 +1042,9 @@ def append(spark: SparkSession, df: DataFrame, path: str, *,
             _check_types(snap, df, "append")
             if snap.constraints != prev_constraints:
                 _check_constraints(snap, df, "append")
-        except Exception:
+        except BaseException:
+            # an interrupt during a constraint job must not leave the
+            # staged files behind either
             _drop_files(path, adds)
             raise
         logged = {f.name for f in StructType.fromJson(
@@ -1101,6 +1107,70 @@ DV_MAX_FILE_FRACTION = 0.5
 DV_ROWS_COLLECT_MAX = 1_000_000
 
 
+#: the one NaN every NaN key is mapped to: set membership tests
+#: identity before equality, so NaN keys then dedupe as Spark groups them
+_NAN = float("nan")
+
+
+def _group_key(v):
+    """``v`` under Spark's grouping equality, as a hashable Python
+    value: every NaN is one value and -0.0 equals 0.0 (Spark normalises
+    both before it hashes a grouping or join key); binary and array
+    values become bytes and tuples."""
+    if isinstance(v, float):
+        if v != v:
+            return _NAN
+        return 0.0 if v == 0.0 else v
+    if isinstance(v, bytearray):
+        return bytes(v)
+    if isinstance(v, (list, tuple)):
+        return tuple(_group_key(x) for x in v)
+    return v
+
+
+#: key column types whose collected Java values Spark turns back into
+#: literals of the same type, by ``simpleString`` → ``Encoders`` factory
+_INLIST_ENCODERS = {
+    "tinyint": "BYTE", "smallint": "SHORT", "int": "INT",
+    "bigint": "LONG", "float": "FLOAT", "double": "DOUBLE",
+    "boolean": "BOOLEAN", "string": "STRING", "binary": "BINARY",
+    "date": "LOCALDATE", "timestamp": "INSTANT",
+    "timestamp_ntz": "LOCALDATETIME"}
+
+#: up to this many driver-held keys, key membership is an IN list
+#: rather than a broadcast join: broadcasting a LocalRelation runs a
+#: Spark job, an IN list runs none, but its planning cost grows with
+#: the list — level with the job at about a thousand keys (NOTES.md)
+KEY_INLIST_MAX = 1_000
+
+
+def _key_join(spark: SparkSession, key: str, keys: list,
+              field: StructField):
+    """``join(df, how)`` semi- (``how="left_semi"``) or anti-
+    (``"left_anti"``) joins ``df`` on ``key`` against the driver-held
+    ``keys`` — the DV hit scan and the fold's kept rows.  The keys
+    reach the JVM once, as a ``LocalRelation`` typed with the batch's
+    key field.  Up to KEY_INLIST_MAX keys of a listed type they come
+    back JVM-side as typed values (no Py4J call per key) and become an
+    IN list; otherwise the relation is broadcast.  Either way matches
+    like the join: NaN equals NaN, -0.0 equals 0.0, a NULL key never
+    matches."""
+    kf = local_frame(spark, [(k,) for k in keys], StructType([field]))
+    enc = _INLIST_ENCODERS.get(field.dataType.simpleString())
+    if enc is None or len(keys) > KEY_INLIST_MAX:
+        kf = F.broadcast(kf)
+        return lambda df, how: df.join(kf, key, how)
+    encoders = spark._jvm.org.apache.spark.sql.Encoders
+    vals = getattr(kf._jdf, "as")(getattr(encoders, enc)()) \
+        .collectAsList()
+
+    def join(df: DataFrame, how: str) -> DataFrame:
+        hit = F.coalesce(Column(df[key]._jc.isInCollection(vals)),
+                         F.lit(False))
+        return df.filter(hit if how == "left_semi" else ~hit)
+    return join
+
+
 def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
                 touched: list[str], hit_rows, key: str):
     """Plan the merge-on-read arm for one commit attempt: which touched
@@ -1108,11 +1178,13 @@ def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
 
     ``hit_rows(df)`` filters a frame of the touched files to the rows
     the operation deletes (key ∈ batch for merge, the range predicate
-    for delete).  Returns ``(dv_actions, fold_files)`` or ``(None,
-    None)`` when the deletion is too large to plan as bitmaps (caller
-    falls back to copy-on-write).  Driver memory is bounded by
-    DV_ROWS_COLLECT_MAX int pairs — same discipline as the merge key
-    collect cap."""
+    for delete).  Returns ``(dv_actions, fold_files, dead_hit)`` or
+    ``(None, None, None)`` when the deletion is too large to plan as
+    bitmaps (caller falls back to copy-on-write).  ``dead_hit`` tells
+    whether any hit row was already dead under the snapshot's DVs;
+    when it is False the raw scan's hits are exactly the live ones.
+    Driver memory is bounded by DV_ROWS_COLLECT_MAX int pairs — same
+    discipline as the merge key collect cap."""
     schema = StructType.fromJson(json.loads(snap.schema_json))
     raw = _scan(spark, path, schema, touched, snap.colmap,
                 snap.partition_by)
@@ -1126,13 +1198,14 @@ def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
     # one bounded job: cap + 1 rows proves "too big" without a second scan
     got = hits.limit(DV_ROWS_COLLECT_MAX + 1).collect()
     if len(got) > DV_ROWS_COLLECT_MAX:
-        return None, None
+        return None, None, None
     rev = {os.path.basename(n): n for n in touched}
     per: dict[str, list[int]] = {}
     for fn, ri in got:
         per.setdefault(rev[fn], []).append(ri)
     dv_actions: list[dict] = []
     fold: list[str] = []
+    dead_hit = False
     for fname in sorted(per):
         st = snap.files[fname]
         old_rg = st.get("dv") or []
@@ -1140,6 +1213,9 @@ def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
             sorted(per[fname])))
         n_total = _ranges_count(new_rg)
         n_new = n_total - _ranges_count(old_rg)
+        # a file's row indexes are distinct, so fewer new than hit rows
+        # means some hit row was dead already
+        dead_hit = dead_hit or n_new < len(per[fname])
         if n_new == 0:
             continue            # every hit row was already dead
         if n_total >= DV_MAX_FILE_FRACTION * st["rows"]:
@@ -1147,7 +1223,7 @@ def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
         else:
             dv_actions.append({"file": fname, "ranges": new_rg,
                                "n": n_total, "n_new": n_new})
-    return dv_actions, fold
+    return dv_actions, fold, dead_hit
 
 
 def _rewrite_unaffected(s0: Snapshot, s1: Snapshot,
@@ -1213,18 +1289,29 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
     between partitions — at the cost of key-interval conflict scope."""
     batch = batch.cache()
     try:
-        dk = batch.select(key).distinct()
-        # ONE driver round-trip decides the arm (r15: was count() THEN
-        # collect() — two sequential jobs on the common path): collect
-        # at most cap+1 keys; fewer than that IS the full key set
-        head = dk.limit(MERGE_KEYS_COLLECT_MAX + 1).collect()
-        n_keys = len(head)
+        # One bounded collect with no shuffle decides the arm: at most
+        # cap+1 key values straight off the cached batch.  Up to the
+        # cap they are the exact key set, deduplicated here under
+        # Spark's grouping equality; the same driver-held keys then
+        # prune files, find the DV hits and filter the fold, so the
+        # batch is never aggregated.  Past the cap, a distinct collect
+        # tells a duplicate-heavy batch (still narrow) from a wide one
+        # (the envelope arm).
+        kcol = batch.select(key)
+        head = kcol.limit(MERGE_KEYS_COLLECT_MAX + 1).collect()
+        if len(head) > MERGE_KEYS_COLLECT_MAX:
+            dk = kcol.distinct()
+            head = dk.limit(MERGE_KEYS_COLLECT_MAX + 1).collect()
+        uniq = {_group_key(r[0]) for r in head}
+        n_keys = len(uniq)
         if not n_keys:
             return append(spark, batch, path, key=key)
         if n_keys <= MERGE_KEYS_COLLECT_MAX:
-            keys = sorted(r[0] for r in head)
+            keys = sorted(uniq)
             def key_hits(s): return _interval_hits(s, keys)
-            anti_keys = F.broadcast(dk)
+            # DV hits and the fold join against the driver-held keys:
+            # a broadcast of batch.distinct() would re-run the distinct
+            key_join = _key_join(spark, key, keys, kcol.schema[0])
         else:
             lo, hi = dk.agg(F.min(key), F.max(key)).first()
             def key_hits(s): return _envelope_hits(s, lo, hi)
@@ -1233,7 +1320,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
             # through the driver and onto every executor, defeating
             # the bounded-driver-memory goal of the envelope arm.
             # Let it run as a shuffle anti-join instead.
-            anti_keys = dk
+            def key_join(df, how): return df.join(dk, key, how)
         hits = key_hits
         if partition_filter:
             snap0 = snapshot(path)
@@ -1283,10 +1370,9 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
             schema = StructType.fromJson(json.loads(snap.schema_json))
             dv_actions = fold = None
             if touched and n_keys <= MERGE_KEYS_COLLECT_MAX:
-                dv_actions, fold = _compute_dv(
+                dv_actions, fold, _ = _compute_dv(
                     spark, path, snap, touched,
-                    lambda df: df.join(F.broadcast(dk), key,
-                                       "left_semi"), key)
+                    lambda df: key_join(df, "left_semi"), key)
             if dv_actions is not None:
                 # merge-on-read: the commit is the batch's own files,
                 # per-file deletion vectors for the replaced rows, and
@@ -1302,7 +1388,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
                     live = _read_files(spark, path, schema, fold,
                                        snap.files, snap.colmap,
                                        snap.partition_by)
-                    kept = live.join(anti_keys, key, "left_anti")
+                    kept = key_join(live, "left_anti")
                     to_stage = kept.unionByName(
                         batch, allowMissingColumns=True)
                 else:
@@ -1321,7 +1407,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
                     old = _read_files(spark, path, schema, touched,
                                       snap.files, snap.colmap,
                                       snap.partition_by)
-                    kept = old.join(anti_keys, key, "left_anti")
+                    kept = key_join(old, "left_anti")
                     # a batch NARROWER than the evolved schema
                     # NULL-fills its missing columns (delete+insert
                     # semantics: the replacing row version simply has
@@ -1384,32 +1470,47 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
     two-call merge+delete_range emulation has exactly that window)."""
     feed = feed.cache()
     try:
-        # both feed validations in ONE job (r15: was a dup-key count
-        # THEN a bad-op count — two sequential actions): per-key row
-        # counts and per-key invalid-op counts fold in one groupBy,
-        # then one 2-column reduce
         valid_ops = tuple(upsert_ops) + (delete_op,)
-        bad_pred = (F.col(op_col).isNull()
-                    | ~F.col(op_col).isin(*valid_ops))
-        # r16 (guide §5): the SAME aggregate also answers every other
-        # control-plane question the verb needs — exact distinct-key
-        # count (the arm gate), whether any upsert row exists (was a
-        # separate isEmpty job), and the key envelope (was a separate
-        # agg job on the wide arm) — so the wide arm now decides with
-        # ZERO extra actions and the narrow arm with one (the bounded
-        # key-values collect below).
-        dup, n_bad, n_keys, n_ups, env_lo, env_hi = (
-            feed.groupBy(key)
-                .agg(F.count("*").alias("c"),
-                     F.count_if(bad_pred).alias("b"),
-                     # NULL op counts as neither (matches the ups
-                     # filter, where NULL != delete_op is not true)
-                     F.count_if(F.col(op_col) != delete_op).alias("u"))
-                .agg(F.count_if(F.col("c") > 1),
-                     F.sum("b"),
-                     F.count(F.lit(1)),
-                     F.count_if(F.col("u") > 0),
-                     F.min(key), F.max(key)).first())
+        # One bounded collect with no shuffle: at most cap+1 (key, op)
+        # rows straight off the cached feed.  Up to the cap the driver
+        # answers every control-plane question from them — duplicate
+        # keys (under Spark's grouping equality), bad ops, the key
+        # count, whether any upsert row exists — and the same key set
+        # then prunes files, finds the DV hits and filters the fold.
+        kops = feed.select(key, op_col)
+        head = kops.limit(MERGE_KEYS_COLLECT_MAX + 1).collect()
+        per_key = None
+        if len(head) <= MERGE_KEYS_COLLECT_MAX:
+            per_key = {}
+            n_bad = n_ups = 0
+            for k, op in head:
+                g = _group_key(k)
+                per_key[g] = per_key.get(g, 0) + 1
+                n_bad += op is None or op not in valid_ops
+                # NULL op counts as neither, as in the aggregate below
+                # (rows here, keys there: only n_ups == 0 is used)
+                n_ups += op is not None and op != delete_op
+            dup = sum(1 for c in per_key.values() if c > 1)
+            n_keys = len(per_key)
+        else:
+            # past the cap, both feed validations and the envelope in
+            # ONE two-level aggregate: per-key row counts and per-key
+            # invalid-op counts fold in one groupBy, then one reduce
+            bad_pred = (F.col(op_col).isNull()
+                        | ~F.col(op_col).isin(*valid_ops))
+            dup, n_bad, n_keys, n_ups, env_lo, env_hi = (
+                feed.groupBy(key)
+                    .agg(F.count("*").alias("c"),
+                         F.count_if(bad_pred).alias("b"),
+                         # NULL op counts as neither (matches the ups
+                         # filter, where NULL != delete_op is not true)
+                         F.count_if(F.col(op_col) != delete_op)
+                         .alias("u"))
+                    .agg(F.count_if(F.col("c") > 1),
+                         F.sum("b"),
+                         F.count(F.lit(1)),
+                         F.count_if(F.col("u") > 0),
+                         F.min(key), F.max(key)).first())
         if dup:
             raise ValueError(
                 f"apply_changes: feed carries {dup} keys with more "
@@ -1425,25 +1526,25 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
                 f"{op_col!r} is NULL or not in {sorted(valid_ops)} — "
                 f"refusing to guess (a NULL op would silently delete "
                 f"its key)")
-        dk = feed.select(key).distinct()
         if not n_keys:
             return snapshot(path)
-        if n_keys <= MERGE_KEYS_COLLECT_MAX:
-            # narrow arm: ONE bounded driver round-trip for the key
-            # VALUES (the count came with the validation aggregate)
-            keys = sorted(r[0] for r in dk.collect())
+        if per_key is not None:
+            keys = sorted(per_key)
             def hits(s): return _interval_hits(s, keys)
-            anti_keys = F.broadcast(dk)
+            key_join = _key_join(spark, key, keys, kops.schema[0])
         else:
+            # past the cap a feed with one row per key has more keys
+            # than the cap: the envelope arm, no broadcast (see merge)
             def hits(s): return _envelope_hits(s, env_lo, env_hi)
-            anti_keys = dk        # wide batch: no broadcast (see merge)
+            dk = feed.select(key).distinct()
+            def key_join(df, how): return df.join(dk, key, how)
         ups = feed.filter(F.col(op_col) != delete_op).drop(op_col)
         # a delete-only feed stages NOTHING — without this guard the
         # empty upsert frame still walks _stage_data_files, which on a
         # partitioned table refuses a feed that (legitimately) carries
         # only the key column (r15: the MERGE ... WHEN MATCHED THEN
         # DELETE SQL shape is exactly such a feed).  Answered by the
-        # validation aggregate — no isEmpty job (r16).
+        # validation above — no isEmpty job.
         ups_empty = n_ups == 0
         for _ in range(MERGE_MAX_ATTEMPTS):
             snap = snapshot(path)
@@ -1463,10 +1564,9 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
             schema = StructType.fromJson(json.loads(snap.schema_json))
             dv_actions = fold = None
             if touched and n_keys <= MERGE_KEYS_COLLECT_MAX:
-                dv_actions, fold = _compute_dv(
+                dv_actions, fold, _ = _compute_dv(
                     spark, path, snap, touched,
-                    lambda df: df.join(F.broadcast(dk), key,
-                                       "left_semi"), key)
+                    lambda df: key_join(df, "left_semi"), key)
             if dv_actions is not None:
                 # merge-on-read: deletes AND replaced update rows are
                 # bitmapped; only the upsert rows (and any fold) stage
@@ -1477,7 +1577,7 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
                     live = _read_files(spark, path, schema, fold,
                                        snap.files, snap.colmap,
                                        snap.partition_by)
-                    kept = live.join(anti_keys, key, "left_anti")
+                    kept = key_join(live, "left_anti")
                     to_stage = kept if ups_empty else kept.unionByName(
                         ups, allowMissingColumns=True)
                 elif not ups_empty:
@@ -1493,7 +1593,7 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
                     old = _read_files(spark, path, schema, touched,
                                       snap.files, snap.colmap,
                                       snap.partition_by)
-                    kept = old.join(anti_keys, key, "left_anti")
+                    kept = key_join(old, "left_anti")
                     merged = kept if ups_empty else kept.unionByName(
                         ups, allowMissingColumns=True)
                 else:
@@ -1702,8 +1802,8 @@ def delete_range(spark: SparkSession, path: str, *, key,
         schema = StructType.fromJson(json.loads(snap.schema_json))
         # merge-on-read first: a sparse erasure (one id band in a
         # 100 TB table) commits bitmaps, zero data rewrite
-        dv_actions, fold = _compute_dv(spark, path, snap, touched,
-                                       pred, key)
+        dv_actions, fold, _ = _compute_dv(spark, path, snap, touched,
+                                          pred, key)
         if dv_actions is not None:
             adds = []
             if fold:
@@ -1844,14 +1944,21 @@ def update_where(spark: SparkSession, path: str, *, key: str,
                          if hits(s))
         if not touched:
             return snap                   # statically nothing matches
-        live = _read_files(spark, path, schema, touched, snap.files,
-                           snap.colmap, snap.partition_by)
-        updated = assign(live.filter(pred)).select(
+        dv_actions, fold, dead_hit = _compute_dv(
+            spark, path, snap, touched, lambda df: df.filter(pred), key)
+        # the touched files through their DV mask — or, when no
+        # matching row was dead already, without it (an empty stats
+        # map): the raw matches ARE the live ones then, and the mask's
+        # broadcast job is saved.  Copy-on-write keeps every live row,
+        # so it always reads masked.
+        masked = dv_actions is None or dead_hit
+        src = _read_files(spark, path, schema, touched,
+                          snap.files if masked else {}, snap.colmap,
+                          snap.partition_by)
+        updated = assign(src.filter(pred)).select(
             *[f.name for f in schema.fields])
         _check_types(snap, updated, "update_where")
         _check_constraints(snap, updated, "update_where")
-        dv_actions, fold = _compute_dv(spark, path, snap, touched,
-                                       lambda df: df.filter(pred), key)
         if dv_actions is not None:
             if not dv_actions and not fold:
                 return snap   # footer false positive: nothing matches
@@ -1870,7 +1977,7 @@ def update_where(spark: SparkSession, path: str, *, key: str,
             if dv_actions:
                 payload["dv"] = dv_actions
         else:
-            merged = live.filter(~pred).unionByName(updated)
+            merged = src.filter(~pred).unionByName(updated)
             adds = _stage_data_files(spark, merged, path, key,
                                      snap.version + 1, snap.colmap,
                                      snap.partition_by)
@@ -1912,8 +2019,8 @@ def delete_where(spark: SparkSession, path: str, *, key: str,
         touched = sorted(n for n, s in snap.files.items() if hits(s))
         if not touched:
             return snap                   # statically nothing matches
-        dv_actions, fold = _compute_dv(spark, path, snap, touched,
-                                       lambda df: df.filter(pred), key)
+        dv_actions, fold, _ = _compute_dv(
+            spark, path, snap, touched, lambda df: df.filter(pred), key)
         if dv_actions is not None:
             if not dv_actions and not fold:
                 return snap   # footer false positive: nothing matches

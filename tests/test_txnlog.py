@@ -3585,3 +3585,309 @@ def test_partitioned_with_column_mapping(spark, tdir):
                         assignments={"val": F.lit("u5")})
     assert txnlog.read_table(spark, tdir).filter("k = 5") \
         .first().val == "u5"
+
+
+# ------------------------------------- one bounded decision per commit
+def _job_ids(spark, fn):
+    """Job ids of the Spark jobs ``fn`` submits from this thread.  A
+    job group scopes them (broadcast and AQE stage jobs inherit it), so
+    jobs of other threads in the shared session do not count."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_row_level_verbs_job_counts(spark, tdir):
+    """Each row-level verb decides from one bounded collect with no
+    shuffle and reuses the driver-held answer: merge and apply_changes
+    run 3 jobs (the key collect, the DV hit scan with the keys as an
+    IN list, the staging write), update_where 2 when no hit row was
+    dead already (the DV hit scan and the staging write — the
+    DV-masked re-read is skipped), delete_where 1.  Batches are one
+    partition each: Spark's limit collect runs one job per scale-up
+    round over a batch's partitions."""
+    txnlog.create_table(spark, _mk(spark, 0, 4000)
+                        .repartitionByRange(4, "k"), tdir, key="k")
+    # a DV on the first file: every later verb plans against a file
+    # holding dead rows
+    n = _job_ids(spark, lambda: txnlog.delete_where(
+        spark, tdir, key="k", filters=[("k", ">=", 500), ("k", "<", 503)]))
+    assert len(n) == 1, n
+    n = _job_ids(spark, lambda: txnlog.merge(
+        spark, tdir, _mk(spark, 10, 20, tag="m").coalesce(1), key="k"))
+    assert len(n) <= 3, n
+    feed = (_mk(spark, 100, 110, tag="u").withColumn("op", F.lit("update"))
+            .unionByName(_mk(spark, 200, 205).withColumn(
+                "op", F.lit("delete")))
+            .unionByName(_mk(spark, 5000, 5003, tag="i").withColumn(
+                "op", F.lit("insert"))).coalesce(1))
+    n = _job_ids(spark, lambda: txnlog.apply_changes(
+        spark, tdir, feed, key="k"))
+    assert len(n) <= 3, n
+    n = _job_ids(spark, lambda: txnlog.update_where(
+        spark, tdir, key="k", filters=[("k", ">=", 300), ("k", "<", 305)],
+        assignments={"v": "upper(v)"}))
+    assert len(n) <= 2, n
+    got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
+    assert len(got) == 4000 - 3 - 5 + 3
+    assert got[15] == "m15" and got[105] == "u105" and 202 not in got
+    assert got[5001] == "i5001" and got[302] == "A302" \
+        and got[305] == "a305" and 501 not in got
+
+
+@pytest.mark.parametrize("cap", [100_000, 3], ids=["driver", "aggregate"])
+def test_apply_changes_validation_same_on_both_arms(spark, tdir,
+                                                    monkeypatch, cap):
+    """The driver-side validation (feeds up to MERGE_KEYS_COLLECT_MAX
+    rows) and the two-level aggregate (past it) refuse the same feeds
+    with the same counts; nothing commits."""
+    monkeypatch.setattr(txnlog, "MERGE_KEYS_COLLECT_MAX", cap)
+    txnlog.create_table(spark, _mk(spark, 0, 20), tdir, key="k")
+
+    def feed(*parts):
+        out = None
+        for lo, hi, op in parts:
+            f = _mk(spark, lo, hi, tag="f").withColumn(
+                "op", F.lit(op).cast("string"))
+            out = f if out is None else out.unionByName(f)
+        return out
+
+    with pytest.raises(ValueError, match=r"carries 2 keys with more "
+                                         r"than one op"):
+        txnlog.apply_changes(spark, tdir, feed(
+            (3, 5, "update"), (4, 6, "delete"), (5, 7, "insert")),
+            key="k")
+    with pytest.raises(ValueError, match=r"carries 2 rows whose 'op' is "
+                                         r"NULL or not in"):
+        txnlog.apply_changes(spark, tdir, feed(
+            (3, 5, None), (7, 9, "update")), key="k")
+    with pytest.raises(ValueError, match=r"carries 3 rows whose 'op' is "
+                                         r"NULL or not in"):
+        txnlog.apply_changes(spark, tdir, feed(
+            (3, 6, "upsort"), (7, 9, "delete")), key="k")
+    assert txnlog.snapshot(tdir).version == 0
+    assert txnlog.read_table(spark, tdir).count() == 20
+
+
+def test_apply_changes_nan_and_signed_zero_keys_are_duplicates(spark,
+                                                               tdir):
+    """Keys compare as Spark's groupBy compares them: a feed holding a
+    NaN key twice, or 0.0 and -0.0, carries a duplicate key — the
+    driver-side count must equal Spark's own grouping count."""
+    from docker_aktin_dwh_spark.session import local_frame
+    nan = float("nan")
+    ddl = "k double, v string, op string"
+    txnlog.create_table(spark, local_frame(
+        spark, [(float(i), f"a{i}") for i in range(5)],
+        "k double, v string"), tdir, key="k")
+    feeds = {
+        "nan": [(nan, "x", "update"), (1.0, "y", "update"),
+                (nan, "z", "delete")],
+        "zero": [(0.0, "x", "update"), (-0.0, "y", "delete"),
+                 (2.0, "z", "update")],
+        "both": [(nan, "x", "update"), (nan, "y", "update"),
+                 (0.0, "z", "delete"), (-0.0, "w", "update")],
+    }
+    for name, rows in feeds.items():
+        f = local_frame(spark, rows, ddl)
+        spark_dups = f.groupBy("k").count().filter("count > 1").count()
+        assert spark_dups == (2 if name == "both" else 1)
+        with pytest.raises(ValueError,
+                           match=f"carries {spark_dups} keys with more"):
+            txnlog.apply_changes(spark, tdir, f, key="k")
+    assert txnlog.snapshot(tdir).version == 0
+
+
+def test_group_key_matches_spark_grouping_equality():
+    g = txnlog._group_key
+    nan1, nan2 = float("nan"), float("nan")
+    assert len({g(nan1), g(nan2), g(-0.0), g(0.0), g(1.5)}) == 3
+    assert g(-0.0) == 0.0 and str(g(-0.0)) == "0.0"
+    assert g(bytearray(b"ab")) == b"ab"
+    assert {g([1.0, nan1]), g([1.0, nan2])} == {(1.0, txnlog._NAN)}
+    assert g(None) is None and g("s") == "s" and g(7) == 7
+
+
+def test_apply_changes_delete_only_partitioned_stages_nothing(
+        spark, tdir, monkeypatch):
+    """A delete-only feed carrying only the key and op columns commits
+    deletion vectors and stages no data file on a partitioned table
+    (whose staging would refuse a frame without the partition column)."""
+    txnlog.create_table(spark, _mkp(spark, 0, 100), tdir, key="k",
+                        partition_by=["region"])
+    calls = []
+    real = txnlog._stage_data_files
+
+    def spy(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(txnlog, "_stage_data_files", spy)
+    dels = spark.range(10, 14).coalesce(1).select(
+        F.col("id").alias("k"), F.lit("delete").alias("op"))
+    snap = txnlog.apply_changes(spark, tdir, dels, key="k")
+    assert calls == []
+    assert snap.version == 1
+    assert {r.k for r in txnlog.read_table(spark, tdir).collect()} \
+        == set(range(100)) - {10, 11, 12, 13}
+
+
+def test_apply_changes_wide_feed_envelope_pruning(spark, tdir,
+                                                  monkeypatch):
+    """Past MERGE_KEYS_COLLECT_MAX feed rows apply_changes validates
+    and prunes through the two-level aggregate (envelope arm, copy-on-
+    write): files outside the feed's [min, max] carry over, and the
+    result equals the narrow arm's."""
+    monkeypatch.setattr(txnlog, "MERGE_KEYS_COLLECT_MAX", 5)
+    txnlog.create_table(spark, _mk(spark, 0, 400)
+                        .repartitionByRange(4, "k"), tdir, key="k")
+    before = txnlog.snapshot(tdir)
+    feed = (_mk(spark, 10, 25, tag="u").withColumn("op", F.lit("update"))
+            .unionByName(_mk(spark, 30, 45).withColumn(
+                "op", F.lit("delete"))))
+    after = txnlog.apply_changes(spark, tdir, feed, key="k")
+    assert len(set(before.files) & set(after.files)) == 3
+    assert not any(s.get("dv") for s in after.files.values())
+    got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
+    assert len(got) == 385
+    assert got[12] == "u12" and 35 not in got and got[50] == "a50"
+
+
+def _key_of(ddl, i):
+    import datetime
+    import decimal
+    return {
+        "bigint": lambda: i,
+        "int": lambda: i,
+        "string": lambda: f"k{i:03d}",
+        "date": lambda: datetime.date(2024, 1, 1)
+        + datetime.timedelta(days=i),
+        "timestamp": lambda: datetime.datetime(2024, 1, 1, 0, 30)
+        + datetime.timedelta(hours=i),
+        "timestamp_ntz": lambda: datetime.datetime(2024, 1, 1)
+        + datetime.timedelta(minutes=i),
+        "double": lambda: -0.0 if i == 0 else i / 4,
+        "binary": lambda: bytes([i, 7]),
+        "decimal(10,2)": lambda: decimal.Decimal(i) / 4,
+    }[ddl]()
+
+
+@pytest.mark.parametrize("ddl", ["bigint", "int", "string", "date",
+                                 "timestamp", "timestamp_ntz", "double",
+                                 "binary", "decimal(10,2)"])
+@pytest.mark.parametrize("inlist", [True, False],
+                         ids=["in_list", "broadcast"])
+def test_merge_key_join_every_key_type(spark, tdir, monkeypatch, inlist,
+                                       ddl):
+    """The driver-held key set joins the DV hit scan and the fold the
+    same way for every key type, whether it becomes an IN list or a
+    broadcast LocalRelation: each batch key replaces its row (0.0
+    replaces -0.0), no other row moves."""
+    from docker_aktin_dwh_spark.session import local_frame
+    if not inlist:
+        monkeypatch.setattr(txnlog, "KEY_INLIST_MAX", 0)
+    schema = f"k {ddl}, v string"
+    txnlog.create_table(spark, local_frame(
+        spark, [(_key_of(ddl, i), f"a{i}") for i in range(40)], schema)
+        .coalesce(2), tdir, key="k")
+    batch = [(0.0 if ddl == "double" and i == 0 else _key_of(ddl, i),
+              f"b{i}")
+             for i in (0, 3, 4, 17, 39, 45)]
+    snap = txnlog.merge(spark, tdir, local_frame(spark, batch, schema)
+                        .coalesce(1), key="k")
+    assert any(s.get("dv") for s in snap.files.values())
+    got = sorted((r.v for r in txnlog.read_table(spark, tdir).collect()))
+    want = sorted([f"a{i}" for i in range(40)
+                   if i not in (0, 3, 4, 17, 39)]
+                  + [v for _, v in batch])
+    assert got == want
+
+
+def test_update_where_over_dead_rows_matches_duckdb(spark, tdir):
+    """A second update_where over the same band hits rows the first
+    one already deleted (DV'd): it must take the DV-masked read, and
+    the table and change feed equal DuckDB's UPDATE replay."""
+    import duckdb
+    base = _mk(spark, 0, 400).repartitionByRange(4, "k")
+    txnlog.create_table(spark, base, tdir, key="k")
+    con = duckdb.connect()
+    con.register("b", base.toPandas())
+    con.execute("CREATE TABLE t AS SELECT * FROM b")
+    band = [("k", ">=", 10), ("k", "<", 16)]
+    versions = [txnlog.snapshot(tdir).version]
+    for expr, sql in (("concat('u', v)", "'u' || v"),
+                      ("concat('w', v)", "'w' || v")):
+        versions.append(txnlog.update_where(
+            spark, tdir, key="k", filters=band,
+            assignments={"v": expr}).version)
+        con.execute(f"CREATE TABLE s{len(versions) - 1} AS "
+                    f"SELECT * FROM t")
+        con.execute(f"UPDATE t SET v = {sql} WHERE k >= 10 AND k < 16")
+    got = sorted((r.k, r.v) for r in txnlog.read_table(spark, tdir)
+                 .collect())
+    assert got == sorted(con.execute("SELECT k, v FROM t").fetchall())
+    assert got[12] == (12, "wua12")
+    changes = txnlog.table_changes(spark, tdir, versions[1], versions[2],
+                                   key="k").collect()
+    pre = con.execute("SELECT k, v FROM s2 WHERE k >= 10 AND k < 16") \
+        .fetchall()
+    post = con.execute("SELECT k, v FROM t WHERE k >= 10 AND k < 16") \
+        .fetchall()
+    assert sorted((r.change_type, r.k, r.v) for r in changes) == sorted(
+        [("update_preimage", k, v) for k, v in pre]
+        + [("update_postimage", k, v) for k, v in post])
+    con.close()
+
+
+def test_snapshot_warns_when_recovery_fails(spark, tdir):
+    """A claim backend whose read-side recover_table raises must not
+    take reads down, and must not fail silently either."""
+    txnlog.create_table(spark, _mk(spark, 0, 10), tdir, key="k")
+
+    class Broken:
+        def __call__(self, tmp, target):  # pragma: no cover - no commit
+            raise AssertionError("no commit expected")
+
+        def recover_table(self, log_dir):
+            raise OSError("coordinator unreachable")
+
+    txnlog.set_claim_backend(Broken())
+    try:
+        with pytest.warns(RuntimeWarning,
+                          match="OSError: coordinator unreachable"):
+            snap = txnlog.snapshot(tdir)
+    finally:
+        txnlog.set_claim_backend(None)
+    assert snap.version == 0 and len(snap.files) == 2
+
+
+def test_append_interrupt_during_retry_drops_staged_files(spark, tdir,
+                                                          monkeypatch):
+    """An interrupt while append re-validates after a lost version race
+    drops the files it staged, like any other failure there."""
+    txnlog.create_table(spark, _mk(spark, 0, 10), tdir, key="k")
+    before = {p.name for p in Path(tdir).rglob("*.parquet")}
+    real_commit = txnlog._try_commit
+
+    def lose_once(path, version, payload):
+        monkeypatch.setattr(txnlog, "_try_commit", real_commit)
+
+        def interrupted(*a, **kw):
+            raise KeyboardInterrupt
+        monkeypatch.setattr(txnlog, "_check_types", interrupted)
+        return False
+
+    monkeypatch.setattr(txnlog, "_try_commit", lose_once)
+    with pytest.raises(KeyboardInterrupt):
+        txnlog.append(spark, _mk(spark, 10, 20), tdir, key="k")
+    assert {p.name for p in Path(tdir).rglob("*.parquet")} == before
+    assert txnlog.snapshot(tdir).version == 0

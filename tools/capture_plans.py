@@ -1,7 +1,8 @@
 """Capture explain('formatted') + warm timings + work counters for keys.
 
 Usage: python capture_plans.py <suffix> key1 key2 ...   (or 'ALL' for headline set)
-Writes $PLANS_DIR/<key>_<suffix>.txt (default /root/repo/plans/r16) and prints
+Writes $PLANS_DIR/<key>_<suffix>.txt (default plans/r16 in the checkout
+this script sits in, which is also the package it imports) and prints
 per-key medians plus load-invariant work counters: job count, executor task
 time, input bytes, shuffle read/write bytes, task count — diffed around the
 LAST (steady-state) run, so control-plane optimizations (fewer driver
@@ -12,7 +13,8 @@ schema inference or a materialize barrier).  A counter whose status-store
 read fails is written as null, never as 0.
 """
 import os, sys, time, json
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 from docker_aktin_dwh_spark.registry import build_registry
 from docker_aktin_dwh_spark.session import build_session
@@ -23,7 +25,7 @@ import pandas as pd
 suffix = sys.argv[1]
 keys = sys.argv[2:]
 sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-plans_dir = os.environ.get("PLANS_DIR", "/root/repo/plans/r16")
+plans_dir = os.environ.get("PLANS_DIR", os.path.join(REPO, "plans", "r16"))
 spark = build_session(app_name="plancap")
 registry = build_registry()
 if keys == ["ALL"]:
