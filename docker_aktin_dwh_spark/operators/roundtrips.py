@@ -400,29 +400,24 @@ FROM visit_dimension WHERE encounter_num < 400
 """
 
 
-def cdc_02(spark, sf):
-    """Change-data-feed over the commit-log table format
-    (sources/txnlog.table_changes — Delta-CDF shape computed from the
-    version-asymmetric file sets, no stored change column): v0 =
-    range-filed base (encounters < 400, 4 files), v1 = MERGE of
-    updates (100-199 moved +40 days, 'U') plus inserts (encounters
-    400-449), v2 = stats-skipped DELETE of the [0, 50) key range; the
-    feed diffs v0 → v2.  Every CDC arm is non-vacuous BY CONSTRUCTION:
-    0-49 delete, 100-199 update pre+post, 400-449 insert, and 50-99 —
-    rewritten byte-identical by the delete's file rewrite — must be
-    SUPPRESSED (physical rewrite is not logical change), while the
-    untouched 200-399 files are pruned before any I/O.  Oracle
-    recomputes both versions and the classified diff in SQL; a hash
-    match certifies the file-set-pruned feed equals the semantic
-    snapshot diff.  Reference analogue: audit trail of re-imported
-    encounters (delete+insert re-import, aktin_init.sql,
-    src/docker/database/Dockerfile:33)."""
+def _cdc_history(spark, sf, prefix: str, feed, *, reinsert: bool = True):
+    """The table history the change-feed keys read: cdc_02's v0-v2
+    (v1 MERGE of updates — 100-199 moved +40 days, 'U' — and inserts
+    400-449, v2 stats-skipped DELETE of [0, 50)) and, with
+    ``reinsert``, cdc_03's and str_21's v3 MERGE re-inserting
+    encounters 0-4 with their ORIGINAL values.  The endpoint diff
+    suppresses those (net no change); the per-version feed must show
+    delete@2 THEN insert@3 — the intermediate-visibility contract a
+    consumer replaying effects in order depends on, stated exactly by
+    the oracle's three pairwise-diff blocks.  ``feed(path, tmp)``
+    reads the feed (scratch files under ``tmp``); the keys differ only
+    there."""
     from ..sources import txnlog
 
     vis = catalog.visit_dimension(spark, sf).select(
         "encounter_num", "patient_num", "start_date", "inout_cd")
     base = vis.filter(F.col("encounter_num") < 400)
-    tmp = tempfile.mkdtemp(prefix="spark_cdc02_")
+    tmp = tempfile.mkdtemp(prefix=prefix)
     try:
         path = tmp + "/tbl"
         txnlog.create_table(
@@ -437,15 +432,41 @@ def cdc_02(spark, sf):
         ins = vis.filter((F.col("encounter_num") >= 400)
                          & (F.col("encounter_num") < 450))
         txnlog.merge(spark, path, ups.unionByName(ins),
-                     key="encounter_num")
+                     key="encounter_num")                        # v1
         txnlog.delete_range(spark, path, key="encounter_num",
-                            lo=0, hi=50)
-        out = txnlog.table_changes(spark, path, 0, key="encounter_num")
-        return _snap_off_tmp(out, tmp).orderBy("encounter_num",
-                                               "change_type")
+                            lo=0, hi=50)                         # v2
+        if reinsert:
+            txnlog.merge(spark, path,
+                         base.filter(F.col("encounter_num") < 5),
+                         key="encounter_num")                    # v3
+        return _snap_off_tmp(feed(path, tmp), tmp)
     except BaseException:
         _rmtree(tmp)
         raise
+
+
+def cdc_02(spark, sf):
+    """Change-data-feed over the commit-log table format
+    (sources/txnlog.table_changes — Delta-CDF shape computed from the
+    version-asymmetric file sets, no stored change column): the diff
+    v0 → v2 of :func:`_cdc_history` (v0 = 4 range-filed files of
+    encounters < 400).  Every CDC arm is non-vacuous BY CONSTRUCTION:
+    0-49 delete, 100-199 update pre+post, 400-449 insert, and 50-99 —
+    rewritten byte-identical by the delete's file rewrite — must be
+    SUPPRESSED (physical rewrite is not logical change), while the
+    untouched 200-399 files are pruned before any I/O.  Oracle
+    recomputes both versions and the classified diff in SQL; a hash
+    match certifies the file-set-pruned feed equals the semantic
+    snapshot diff.  Reference analogue: audit trail of re-imported
+    encounters (delete+insert re-import, aktin_init.sql,
+    src/docker/database/Dockerfile:33)."""
+    from ..sources import txnlog
+
+    return _cdc_history(
+        spark, sf, "spark_cdc02_",
+        lambda path, _tmp: txnlog.table_changes(
+            spark, path, 0, key="encounter_num"),
+        reinsert=False).orderBy("encounter_num", "change_type")
 
 
 def _cdc_02_oracle() -> str:
@@ -1022,46 +1043,14 @@ FROM ev
 
 def cdc_03(spark, sf):
     """Per-version change feed (sources/txnlog.table_changes_range —
-    Delta's readChangeFeed shape): cdc_02's table history plus a v3
-    MERGE that re-inserts encounters 0-4 with their ORIGINAL values.
-    The endpoint diff correctly suppresses those (net no change); the
-    per-version feed must show delete@2 THEN insert@3 — the
-    intermediate-visibility contract a downstream consumer replaying
-    effects in order depends on, stated exactly by the oracle's three
-    pairwise-diff blocks."""
+    Delta's readChangeFeed shape) of :func:`_cdc_history`."""
     from ..sources import txnlog
 
-    vis = catalog.visit_dimension(spark, sf).select(
-        "encounter_num", "patient_num", "start_date", "inout_cd")
-    base = vis.filter(F.col("encounter_num") < 400)
-    tmp = tempfile.mkdtemp(prefix="spark_cdc03_")
-    try:
-        path = tmp + "/tbl"
-        txnlog.create_table(
-            spark, base.repartitionByRange(4, "encounter_num"), path,
-            key="encounter_num")
-        ups = (base.filter((F.col("encounter_num") >= 100)
-                           & (F.col("encounter_num") < 200))
-               .select("encounter_num", "patient_num",
-                       (F.col("start_date") + F.expr("INTERVAL 40 DAYS"))
-                        .alias("start_date"),
-                       F.lit("U").alias("inout_cd")))
-        ins = vis.filter((F.col("encounter_num") >= 400)
-                         & (F.col("encounter_num") < 450))
-        txnlog.merge(spark, path, ups.unionByName(ins),
-                     key="encounter_num")                        # v1
-        txnlog.delete_range(spark, path, key="encounter_num",
-                            lo=0, hi=50)                         # v2
-        txnlog.merge(spark, path,
-                     base.filter(F.col("encounter_num") < 5),
-                     key="encounter_num")                        # v3
-        out = txnlog.table_changes_range(spark, path, 0,
-                                         key="encounter_num")
-        return _snap_off_tmp(out, tmp).orderBy(
-            "commit_version", "encounter_num", "change_type")
-    except BaseException:
-        _rmtree(tmp)
-        raise
+    return _cdc_history(
+        spark, sf, "spark_cdc03_",
+        lambda path, _tmp: txnlog.table_changes_range(
+            spark, path, 0, key="encounter_num")).orderBy(
+        "commit_version", "encounter_num", "change_type")
 
 
 def _cdc_03_oracle() -> str:

@@ -987,54 +987,24 @@ _STR_19_ORACLE = _str19_oracle()
 
 def str_21(spark: SparkSession, sf: str) -> DataFrame:
     """STR-21 streaming CHANGE-DATA-FEED from the transactional table
-    (sources/cdcstream — Delta's readChangeFeed as a stream): the
-    cdc_03 table history (v1 MERGE of updates+inserts, v2 stats-
-    skipped DELETE, v3 re-insert of original values) tailed as a
-    stream of CLASSIFIED per-version diffs — insert / delete /
-    update_preimage / update_postimage, version-tagged — computed on
-    executors from the version-asymmetric file sets and deletion-
-    vector deltas, never a full table read.  This is the CDC form the
-    append-only source's guard points rewrites at; it shares cdc_03's
-    oracle, so the hash certifies streamed ≡ the batch per-version
-    feed including intermediate visibility (delete@2 then insert@3
-    for the re-inserted keys)."""
-    from ..sources import cdcstream, txnlog
+    (sources/cdcstream — Delta's readChangeFeed as a stream): cdc_03's
+    table history (roundtrips._cdc_history) drained as a stream of
+    CLASSIFIED per-version diffs.  It shares cdc_03's oracle, so the
+    hash certifies streamed ≡ the batch per-version feed, including
+    intermediate visibility (delete@2 then insert@3)."""
+    from ..sources import cdcstream
+    from .roundtrips import _cdc_history
 
-    base = tempfile.mkdtemp(prefix="spark_str21_")
-    try:
-        path = base + "/tbl"
-        vis = catalog.visit_dimension(spark, sf).select(
-            "encounter_num", "patient_num", "start_date", "inout_cd")
-        tbl = vis.filter(F.col("encounter_num") < 400)
-        txnlog.create_table(
-            spark, tbl.repartitionByRange(4, "encounter_num"), path,
-            key="encounter_num")
-        ups = (tbl.filter((F.col("encounter_num") >= 100)
-                          & (F.col("encounter_num") < 200))
-               .select("encounter_num", "patient_num",
-                       (F.col("start_date") + F.expr("INTERVAL 40 DAYS"))
-                        .alias("start_date"),
-                       F.lit("U").alias("inout_cd")))
-        ins = vis.filter((F.col("encounter_num") >= 400)
-                         & (F.col("encounter_num") < 450))
-        txnlog.merge(spark, path, ups.unionByName(ins),
-                     key="encounter_num")                        # v1
-        txnlog.delete_range(spark, path, key="encounter_num",
-                            lo=0, hi=50)                         # v2
-        txnlog.merge(spark, path,
-                     tbl.filter(F.col("encounter_num") < 5),
-                     key="encounter_num")                        # v3
+    def feed(path: str, base: str) -> DataFrame:
         cdcstream.register(spark)
-        feed = (spark.readStream.format("txnlog_cdc")
-                .option("path", path)
-                .option("key", "encounter_num").load()
-                .withColumnRenamed("_commit_version", "commit_version"))
-        snap = _materialized(_run_to_parquet(feed, base), base)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
-    return snap.orderBy("commit_version", "encounter_num",
-                        "change_type")
+        return _run_to_parquet(
+            spark.readStream.format("txnlog_cdc")
+            .option("path", path).option("key", "encounter_num").load()
+            .withColumnRenamed("_commit_version", "commit_version"),
+            base)
+
+    return _cdc_history(spark, sf, "spark_str21_", feed).orderBy(
+        "commit_version", "encounter_num", "change_type")
 
 
 def str_01(spark: SparkSession, sf: str) -> DataFrame:

@@ -80,6 +80,13 @@ def list_versions(table: str) -> list[int]:
     return sorted(int(n[:W]) for n in names if _COMMIT_RE.fullmatch(n))
 
 
+def latest_version(table: str) -> int:
+    vs = list_versions(table)
+    if not vs:
+        raise FileNotFoundError(f"no txnlog table at {table}")
+    return vs[-1]
+
+
 def checkpoint_versions(table: str) -> list[int]:
     try:
         names = os.listdir(log_dir(table))
@@ -215,6 +222,18 @@ def replay(table: str, version: int | None = None) -> Snapshot:
                                  txns.get(t["app"], t["version"]))
     return Snapshot(target, files, schema_json, txns, constraints,
                     colmap, key, partition_by)
+
+
+def schema_snapshot(table: str, version: int | None = None) -> Snapshot:
+    """:func:`replay`, refusing a log that records no schema with an
+    error naming the table (not json.loads(None)'s opaque TypeError)."""
+    snap = replay(table, version)
+    if snap.schema_json is None:
+        raise FileNotFoundError(
+            f"no schema recorded in any retained commit or checkpoint "
+            f"of {table} — is this a txnlog table (created via "
+            f"txnlog.create_table)?")
+    return snap
 
 
 def write_checkpoint(table: str, snap: Snapshot) -> None:
@@ -421,7 +440,7 @@ def stats_encode(v):
     if isinstance(v, bool) or v is None:
         return None                 # boolean intervals never prune
     if isinstance(v, (int, float)):
-        return v
+        return None if v != v else v    # a NaN bound bounds nothing
     if isinstance(v, str):
         return v if len(v) <= STATS_STR_MAX else None
     if isinstance(v, datetime.datetime):
@@ -439,6 +458,15 @@ def stats_decode(v):
         if v.get("t") == "d":
             return datetime.date.fromisoformat(v["v"])
     return v
+
+
+def stats_bounds(lo, hi):
+    """One logged [min, max] interval, decoded — or None (missing
+    stats: keep the file) when an end is absent or NaN, which compares
+    false with everything (older logs may hold a NaN bound)."""
+    if lo is None or hi is None or lo != lo or hi != hi:
+        return None
+    return stats_decode(lo), stats_decode(hi)
 
 
 def file_stats(fpath: str, key: str | None) -> dict:
@@ -508,9 +536,10 @@ def interval_hit(stats: dict, col: str, op: str, val) -> bool:
     mismatch all keep the file (skipping is an optimization, never a
     correctness lever)."""
     iv = (stats.get("cols") or {}).get(col)
-    if iv is None:
+    bounds = None if iv is None else stats_bounds(*iv)
+    if bounds is None:
         return True
-    lo, hi = stats_decode(iv[0]), stats_decode(iv[1])
+    lo, hi = bounds
     try:
         if op == "=":
             return lo <= val <= hi

@@ -59,10 +59,11 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
 from pyspark.sql.types import StructType
 
 from .logcore import (FilePartition, arrow_schema, commit, file_stats,
-                      interval_hit, list_versions, log_dir,
-                      nullable_schema_json, posix_link_claim, pv_constant,
-                      pv_frag, read_file, replay, resolve_timestamp,
-                      ship_by_value, stats_encode)
+                      interval_hit, latest_version, list_versions,
+                      log_dir, nullable_schema_json, posix_link_claim,
+                      pv_constant, pv_frag, read_file, replay,
+                      resolve_timestamp, schema_snapshot, ship_by_value,
+                      stats_encode)
 from .logcore import register as _register
 
 
@@ -81,15 +82,8 @@ def _norm_path(p: str) -> str:
 
 _UNSET = object()
 
-
-def _meta(table: str, version: int | None):
-    """The replayed snapshot, refusing a log that records no schema."""
-    snap = replay(table, version)
-    if snap.schema_json is None:
-        raise FileNotFoundError(
-            f"txnlog: no schema recorded in any retained commit or "
-            f"checkpoint of {table}")
-    return snap
+#: the replayed snapshot, refusing a log that records no schema
+_meta = schema_snapshot
 
 
 class TxnlogBatchReader(DataSourceReader):
@@ -698,7 +692,7 @@ class TxnlogBatchDataSource(DataSource):
         # the schema came from.
         version = self._version()
         if version is None:
-            version = list_versions(_norm_path(self.options["path"]))[-1]
+            version = latest_version(_norm_path(self.options["path"]))
         snap = _meta(_norm_path(self.options["path"]), version)
         skipping = str(self.options.get("dataSkipping",
                                         "false")).lower() == "true"

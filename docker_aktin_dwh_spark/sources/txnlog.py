@@ -67,7 +67,8 @@ Protocol invariants (each one is a test in tests/test_txnlog.py):
   content when added, enforced on every write verb — NULL-filled
   omitted columns included).  SQL surfaces: sources/txnbatch.py (batch
   ``spark.read.format("txnlog")`` with versionAsOf) and
-  sources/cdcstream.py (streaming classified change feed).
+  sources/cdcstream.py (the classified change feed, as a stream and
+  as the batch read behind :func:`table_changes_range`).
 """
 
 from __future__ import annotations
@@ -95,6 +96,7 @@ from .logcore import (CHECKPOINT_EVERY, LOG as _LOG, Snapshot,
                       ranges_from_indexes as _ranges_from_indexes,
                       ranges_subtract as _ranges_subtract,
                       ranges_union as _ranges_union, resolve_timestamp,
+                      stats_bounds as _stats_bounds,
                       stats_decode as _stats_decode,
                       stats_encode as _stats_encode)
 
@@ -1308,7 +1310,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
             return append(spark, batch, path, key=key)
         if n_keys <= MERGE_KEYS_COLLECT_MAX:
             keys = sorted(uniq)
-            def key_hits(s): return _interval_hits(s, keys)
+            def key_hits(s): return _NAN in uniq or _interval_hits(s, keys)
             # DV hits and the fold join against the driver-held keys:
             # a broadcast of batch.distinct() would re-run the distinct
             key_join = _key_join(spark, key, keys, kcol.schema[0])
@@ -1530,7 +1532,7 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
             return snapshot(path)
         if per_key is not None:
             keys = sorted(per_key)
-            def hits(s): return _interval_hits(s, keys)
+            def hits(s): return _NAN in per_key or _interval_hits(s, keys)
             key_join = _key_join(spark, key, keys, kops.schema[0])
         else:
             # past the cap a feed with one row per key has more keys
@@ -1755,27 +1757,30 @@ def _interval_hits(stats: dict, keys: list) -> bool:
     keys: O(log B) per file, control-plane.  Endpoints are stored in
     their JSON encoding (date/timestamp keys encode as tagged dicts —
     _stats_encode) and decode before comparing; an incomparable pair
-    keeps the file (skipping is an optimization, never correctness)."""
+    keeps the file (skipping is an optimization, never correctness).
+    Callers keep every file for a key set holding NaN: footer bounds
+    do not reliably cover NaN, and NaN breaks the bisect's order."""
     import bisect
-    kmin, kmax = stats.get("kmin"), stats.get("kmax")
-    if kmin is None or kmax is None:
+    bounds = _stats_bounds(stats.get("kmin"), stats.get("kmax"))
+    if bounds is None:
         return True
     try:
-        i = bisect.bisect_left(keys, _stats_decode(kmin))
-        return i < len(keys) and keys[i] <= _stats_decode(kmax)
+        i = bisect.bisect_left(keys, bounds[0])
+        return i < len(keys) and keys[i] <= bounds[1]
     except TypeError:
         return True
 
 
 def _envelope_hits(stats: dict, lo, hi) -> bool:
     """Does the file's [kmin, kmax] intersect the batch's [lo, hi]
-    envelope (both ends inclusive)?  Missing stats → conservatively
-    true.  The coarse wide-batch pruning arm of :func:`merge`."""
-    kmin, kmax = stats.get("kmin"), stats.get("kmax")
-    if kmin is None or kmax is None:
+    envelope (both ends inclusive)?  Missing stats, or a NaN end (the
+    max of a batch holding NaN), → conservatively true.  The coarse
+    wide-batch pruning arm of :func:`merge`."""
+    bounds = _stats_bounds(stats.get("kmin"), stats.get("kmax"))
+    if bounds is None or lo != lo or hi != hi:
         return True
     try:
-        return _stats_decode(kmin) <= hi and _stats_decode(kmax) >= lo
+        return bounds[0] <= hi and bounds[1] >= lo
     except TypeError:
         return True
 
@@ -2104,11 +2109,11 @@ def _range_hits(stats: dict, lo, hi) -> bool:
     """Does the file's [kmin, kmax] interval intersect [lo, hi)?
     Missing stats → conservatively true; encoded endpoints decode
     first (see _interval_hits)."""
-    kmin, kmax = stats.get("kmin"), stats.get("kmax")
-    if kmin is None or kmax is None:
+    bounds = _stats_bounds(stats.get("kmin"), stats.get("kmax"))
+    if bounds is None:
         return True
     try:
-        return _stats_decode(kmin) < hi and _stats_decode(kmax) >= lo
+        return bounds[0] < hi and bounds[1] >= lo
     except TypeError:
         return True
 
@@ -2429,52 +2434,29 @@ def table_changes_range(spark: SparkSession, path: str, v_from: int,
                         key: str) -> DataFrame:
     """Per-version CDC feed (Delta's ``readChangeFeed`` shape): one
     classified diff PER COMMIT in ``(v_from, v_to]``, each row tagged
-    with the commit version that produced it.  Unlike
-    :func:`table_changes` (an endpoint diff), INTERMEDIATE states are
-    visible: a row deleted at v2 and re-inserted identically at v3
-    appears as delete@2 + insert@3 here but is (correctly) suppressed
-    by the endpoint diff — the distinction that matters to a consumer
-    replaying effects in order.  Cost: each per-version diff reads
-    only that commit's asymmetric file sets, so the whole feed is
-    ∝ total churn across the range; the version loop is control-plane
-    (bounded by retained versions) and builds ONE union plan."""
+    with its ``commit_version``.  Unlike :func:`table_changes` (an
+    endpoint diff), INTERMEDIATE states are visible: a row deleted at
+    v2 and re-inserted identically at v3 is delete@2 + insert@3 here —
+    what a consumer replaying effects in order needs.  A batch read of
+    the ``txnlog_cdc`` DataSource (sources/cdcstream) — the per-version
+    partitions its stream drains, one Spark job for any number of
+    versions — under the schema and column map logged at ``v_to``.
+    An empty range, or a ``v_from`` below the truncation floor, raises
+    ``ValueError`` here on the driver."""
+    from . import cdcstream
+
     s_to = snapshot(path, v_to)
-    out = None
-    skipped = 0
-    for v in range(v_from + 1, s_to.version + 1):
-        try:
-            with open(os.path.join(_log_dir(path),
-                                   _commit_name(v))) as f:
-                c = json.load(f)
-        except FileNotFoundError:
-            # truncated below a checkpoint: let table_changes raise
-            # its own (clearer) error for the missing version
-            c = {}
-        if c.get("data_change") is False:
-            # compact/OPTIMIZE (or a synced foreign no-data commit):
-            # the rows are DECLARED identical — skip the whole
-            # version instead of scanning both sides to suppress
-            # every rewritten-but-identical row (the dominant cost of
-            # CDC over a freshly compacted 100 TB table)
-            skipped += 1
-            continue
-        d = (table_changes(spark, path, v - 1, v, key=key)
-             .withColumn("commit_version", F.lit(v).cast("long")))
-        out = d if out is None else out.unionByName(d)
-    if out is None:
-        if skipped:
-            # a non-empty range of ONLY no-data commits: an empty
-            # frame in the change-feed shape (filter-false folds to
-            # an empty LocalTableScan — no file is read)
-            return (table_changes(spark, path, v_from,
-                                  s_to.version, key=key)
-                    .withColumn("commit_version",
-                                F.lit(v_to).cast("long"))
-                    .filter(F.lit(False)))
+    if v_from >= s_to.version:
         raise ValueError(
             f"table_changes_range: empty range ({v_from}, "
             f"{s_to.version}]")
-    return out
+    snapshot(path, v_from)          # below the floor: not in the log
+    cdcstream.register(spark)
+    return (spark.read.format("txnlog_cdc")
+            .option("path", path).option("key", key)
+            .option("startingVersion", v_from)
+            .option("endingVersion", s_to.version).load()
+            .withColumnRenamed("_commit_version", "commit_version"))
 
 
 def describe_history(spark: SparkSession, path: str) -> DataFrame:

@@ -51,9 +51,9 @@ import os
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .logcore import (FilePartition, arrow_schema, list_versions,
+from .logcore import (FilePartition, arrow_schema, latest_version,
                       read_commit, read_file, register as _register,
-                      replay, ship_by_value)
+                      replay, schema_snapshot, ship_by_value)
 
 
 class TxnlogStreamReader(DataSourceStreamReader):
@@ -69,10 +69,7 @@ class TxnlogStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        vs = list_versions(self._path)
-        if not vs:
-            raise FileNotFoundError(f"no txnlog table at {self._path}")
-        return {"version": vs[-1]}
+        return {"version": latest_version(self._path)}
 
     def partitions(self, start: dict, end: dict):
         parts: list[FilePartition] = []
@@ -140,17 +137,8 @@ class TxnlogStreamDataSource(DataSource):
         return "txnlog_stream"
 
     def schema(self) -> StructType:
-        table = self.options["path"]
-        schema_json = replay(table).schema_json
-        if schema_json is None:
-            # no retained commit or checkpoint records a schema —
-            # name the table instead of json.loads(None)'s opaque
-            # TypeError (ADVICE r9)
-            raise FileNotFoundError(
-                f"txnlog_stream: no schema recorded in any retained "
-                f"commit or checkpoint of {table} — is this a txnlog "
-                f"table (created via txnlog.create_table)?")
-        logged = StructType.fromJson(json.loads(schema_json))
+        logged = StructType.fromJson(json.loads(
+            schema_snapshot(self.options["path"]).schema_json))
         return StructType(list(logged.fields)
                           + [StructField("_commit_version", LongType(),
                                          False)])

@@ -181,10 +181,15 @@ _DEPLOY = textwrap.dedent("""
         except Exception as e:
             out[fmt] = repr(e)[:300]
     txnlog.merge(spark, tbl, rows(0, 10, "m"), key="k")
-    try:
-        out["txnlog_cdc"] = drain("txnlog_cdc", tbl, key="k")
-    except Exception as e:
-        out["txnlog_cdc"] = repr(e)[:300]
+    for fmt, call in (("txnlog_cdc", lambda: drain("txnlog_cdc", tbl,
+                                                   key="k")),
+                      ("txnlog_cdc_batch", lambda: spark.read
+                       .format("txnlog_cdc").option("path", tbl)
+                       .option("key", "k").load().count())):
+        try:
+            out[fmt] = call()
+        except Exception as e:
+            out[fmt] = repr(e)[:300]
     print("RESULT " + json.dumps(out))
     spark.stop()
 """)
@@ -195,9 +200,9 @@ def test_sources_work_without_package_on_worker_path(tmp_path):
     that finds the repo only through its own sys.path, run from a
     foreign cwd with PYTHONPATH unset, so no Spark worker process can
     import the package.  The three txnlog DataSources still work: the append tail
-    drains 150 rows, the batch source reads 150, and the change feed
-    drains the append's 50 inserts plus the merge's 10 pre- and 10
-    post-images."""
+    drains 150 rows, the batch source reads 150, and the change feed —
+    drained as a stream and read as a batch — gives the append's 50
+    inserts plus the merge's 10 pre- and 10 post-images."""
     script = tmp_path / "deploy.py"
     script.write_text(_DEPLOY)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -210,4 +215,4 @@ def test_sources_work_without_package_on_worker_path(tmp_path):
     assert lines, proc.stderr[-3000:]
     got = json.loads(lines[-1][len("RESULT "):])
     assert got == {"txnlog_stream": 150, "txnlog": 150,
-                   "txnlog_cdc": 70}, got
+                   "txnlog_cdc": 70, "txnlog_cdc_batch": 70}, got

@@ -3891,3 +3891,142 @@ def test_append_interrupt_during_retry_drops_staged_files(spark, tdir,
         txnlog.append(spark, _mk(spark, 10, 20), tdir, key="k")
     assert {p.name for p in Path(tdir).rglob("*.parquet")} == before
     assert txnlog.snapshot(tdir).version == 0
+
+
+# ------------------------------- one change feed for batch and stream
+def _drain_cdc(spark, path, ck):
+    """Every row an ``availableNow`` drain of the txnlog_cdc stream
+    emits, from a fresh checkpoint."""
+    from docker_aktin_dwh_spark.sources import cdcstream
+    cdcstream.register(spark)
+    rows = []
+    await_query(lambda: (
+        spark.readStream.format("txnlog_cdc").option("path", path)
+        .option("key", "k").load().writeStream.foreachBatch(
+            lambda df, _b: rows.extend(df.collect()))
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True).start()))
+    return rows
+
+
+def _feed_rows(rows, version_col):
+    return sorted((tuple(r[c] for c in r.__fields__ if c != version_col)
+                   + (r[version_col],) for r in rows),
+                  key=lambda t: tuple((v is None, str(v)) for v in t))
+
+
+def test_change_feed_across_add_column(spark, tdir):
+    """A range crossing an ``add_column`` reads every version under one
+    schema, the range end's: versions before the column NULL-fill it,
+    in the batch read and in a stream drain alike.  A stream whose
+    schema predates a later data version's column raises, naming that
+    version, instead of dropping the column."""
+    from docker_aktin_dwh_spark.sources.cdcstream import (
+        TxnlogCdcStreamReader)
+
+    txnlog.create_table(spark, _mk(spark, 0, 20), tdir, key="k")      # v0
+    txnlog.merge(spark, tdir, _mk(spark, 5, 8, tag="m"), key="k")      # v1
+    txnlog.add_column(spark, tdir, column="score", dtype="int")        # v2
+    txnlog.merge(spark, tdir, _mk(spark, 10, 12, tag="n")
+                 .withColumn("score", F.lit(7)), key="k")              # v3
+    feed = txnlog.table_changes_range(spark, tdir, 0, key="k")
+    assert feed.columns == ["k", "v", "score", "change_type",
+                            "commit_version"]
+    got = {(r.k, r.change_type): (r.v, r.score, r.commit_version)
+           for r in feed.collect()}
+    assert len(got) == 10
+    assert got[(5, "update_postimage")] == ("m5", None, 1)
+    assert got[(10, "update_preimage")] == ("a10", None, 3)
+    assert got[(10, "update_postimage")] == ("n10", 7, 3)
+    stream = _drain_cdc(spark, tdir, os.path.dirname(tdir) + "/ck")
+    assert _feed_rows(stream, "_commit_version") \
+        == _feed_rows(feed.collect(), "commit_version")
+    old = TxnlogCdcStreamReader(tdir, "k", 0, schema_version=1)
+    assert [p.version for p in old.partitions(
+        {"version": 0}, {"version": 1})] == [1]
+    with pytest.raises(ValueError, match=r"version 3 .*\['score'\]"):
+        old.partitions({"version": 0}, {"version": 3})
+
+
+@pytest.mark.parametrize("n_versions", [3, 12])
+def test_table_changes_range_is_one_job(spark, tdir, n_versions):
+    """Collecting the per-version feed runs one Spark job whatever the
+    number of versions: planning reads only the log, and each
+    version is one partition of a single DataSource scan."""
+    txnlog.create_table(spark, _mk(spark, 0, 400)
+                        .repartitionByRange(4, "k"), tdir, key="k")
+    for i in range(n_versions):
+        txnlog.merge(spark, tdir, _mk(spark, 30 * i, 30 * i + 5,
+                                      tag=f"m{i}").coalesce(1), key="k")
+    rows = []
+    n = _job_ids(spark, lambda: rows.extend(txnlog.table_changes_range(
+        spark, tdir, 0, key="k").collect()))
+    assert len(n) == 1, n
+    assert len(rows) == 10 * n_versions
+    assert {r.commit_version for r in rows} \
+        == set(range(1, n_versions + 1))
+
+
+def test_change_feed_batch_equals_stream_drain(spark, tdir):
+    """The batch read and a stream drain of one range give the same
+    rows across a restore that shrinks a deletion vector, a
+    partitioned drop_partition, a rename_column and a compact."""
+    txnlog.create_table(spark, _mkp(spark, 0, 80), tdir, key="k",
+                        partition_by=["region"])                     # v0
+    txnlog.delete_where(spark, tdir, key="k",
+                        filters=[("k", ">=", 40), ("k", "<", 44)])   # v1
+    txnlog.restore(spark, tdir, version=0)                           # v2
+    txnlog.drop_partition(spark, tdir, values={"region": 2})         # v3
+    txnlog.rename_column(spark, tdir, old="v", new="val")            # v4
+    txnlog.merge(spark, tdir, _mkp(spark, 0, 6, tag="m")
+                 .withColumnRenamed("v", "val").filter("region != 2"),
+                 key="k")                                            # v5
+    assert txnlog.compact(spark, tdir, key="k") is not None          # v6
+    txnlog.append(spark, _mkp(spark, 100, 104, tag="z")
+                  .withColumnRenamed("v", "val"), tdir, key="k")     # v7
+    batch = txnlog.table_changes_range(spark, tdir, 0, key="k").collect()
+    by = {}
+    for r in batch:
+        by.setdefault(r.commit_version, set()).add((r.change_type, r.k))
+    assert by[1] == {("delete", k) for k in range(40, 44)}
+    assert by[2] == {("insert", k) for k in range(40, 44)}, \
+        "restore resurrects the vectored rows"
+    assert by[3] == {("delete", k) for k in range(80) if k % 4 == 2}
+    assert 4 not in by and 6 not in by, "rename and compact: no rows"
+    assert {k for _t, k in by[5]} == {0, 1, 3, 4, 5}
+    assert by[7] == {("insert", k) for k in range(100, 104)}
+    assert set(batch[0].__fields__) == {"k", "region", "val",
+                                        "change_type", "commit_version"}
+    stream = _drain_cdc(spark, tdir, os.path.dirname(tdir) + "/ck")
+    assert _feed_rows(stream, "_commit_version") \
+        == _feed_rows(batch, "commit_version")
+
+
+def test_merge_nan_key_batch_replaces_rows(spark, tdir):
+    """A double key column holding NaN: no NaN footer bound is logged
+    (an old log's NaN bound reads as missing stats), and a batch whose
+    key set holds NaN keeps every file, because footer bounds do not
+    cover NaN — so merging {NaN, -0.0, 3.0} into a one-file table
+    holding NaN and 0.0 replaces all three rows."""
+    from docker_aktin_dwh_spark.sources import logcore
+
+    nan = float("nan")
+    base = spark.createDataFrame(
+        [(float(i), f"a{i}") for i in range(10)] + [(nan, "anan")],
+        "k double, v string").coalesce(1)
+    txnlog.create_table(spark, base, tdir, key="k")
+    (st,) = txnlog.snapshot(tdir).files.values()
+    txnlog.merge(spark, tdir, spark.createDataFrame(
+        [(nan, "mnan"), (-0.0, "mz"), (3.0, "m3")], "k double, v string"),
+        key="k")
+    got = sorted((r.v, r.k) for r in txnlog.read_table(spark, tdir)
+                 .filter("k = 0 OR k = 3 OR isnan(k)").collect())
+    assert [v for v, _k in got] == ["m3", "mnan", "mz"], got
+    assert txnlog.read_table(spark, tdir).count() == 11
+    assert all(b == b for b in (st["kmin"], st["kmax"])
+               if b is not None), st
+    old = {"kmin": 0.0, "kmax": nan, "cols": {"k": [0.0, nan]}}
+    assert txnlog._interval_hits(old, [3.0])
+    assert txnlog._envelope_hits(old, 2.0, 4.0)
+    assert txnlog._range_hits(old, 2.0, 4.0)
+    assert logcore.interval_hit(old, "k", ">=", 2.0)
