@@ -49,11 +49,12 @@ Protocol invariants (each one is a test in tests/test_txnlog.py):
   longer rewrites every interval-hit file — it commits a per-file
   ``dv`` action (a run-length row-index bitmap in the log, Delta's
   deletion-vector design) and readers MASK the dead rows via the
-  parquet reader's ``_metadata.row_index`` (one broadcast-hash join
-  against the churn-sized DV table + a JVM-side ``exists`` filter —
-  zero overhead when no DVs exist).  Rewrite bytes become ∝ touched
-  ROWS, not touched files: at 100 TB a 100-row correction commits a
-  100-row add file and a few dozen bitmap entries instead of GBs.
+  parquet reader's ``_metadata.row_index`` (one filter over the scan
+  holding the DV map as a constant, a broadcast-hash join only for
+  very large DV maps — zero overhead when no DVs exist).  Rewrite
+  bytes become ∝ touched ROWS, not touched files: at 100 TB a 100-row
+  correction commits a 100-row add file and a few dozen bitmap
+  entries instead of GBs.
   A file whose cumulative DV passes DV_MAX_FILE_FRACTION is folded
   (rewritten without its dead rows) by the very commit that crossed
   the line, and :func:`compact` folds all DVs; time travel, CDC and
@@ -426,15 +427,47 @@ def create_table(spark: SparkSession, df: DataFrame, path: str, *,
 _FILE_META = "__txnlog_file"
 _ROW_META = "__txnlog_ri"
 
+#: up to this many deletion-vectored files, and DV_INLINE_MAX_RANGES
+#: ranges over them, the read mask is one constant map literal; past
+#: either it broadcast-joins the DV table.  The map lookup scans the
+#: DV'd file names for every row, so its cost grows with the file
+#: count, while the broadcast is one fixed job: level at 64 files on a
+#: 2M-row, 256-file scan (NOTES.md, "A deletion-vector mask is a
+#: constant, not a join")
+DV_INLINE_MAX_FILES = 64
+#: the literal is parsed and folded once per planned query and printed
+#: in every plan string; the inline mask was still the faster one at
+#: 80 000 ranges, this bound keeps the literal near a megabyte
+DV_INLINE_MAX_RANGES = 50_000
+
+_DV_TYPE = "map<string,array<struct<s:bigint,e:bigint>>>"
+#: characters Hadoop's ``Path.toUri`` leaves as they are
+_URI_PLAIN = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
+                       "0123456789._-")
+
+
+def _spark_file_name(spark: SparkSession, rel: str) -> str:
+    """The name ``_metadata.file_name`` gives the logged file ``rel``:
+    Spark reports the basename URL-encoded (``f 1.parquet`` reads back
+    as ``f%201.parquet``, ``100%`` as ``100%25``) while the log keeps
+    it decoded.  Encoded on the JVM through Hadoop's ``Path.toUri``,
+    the encoder Spark uses; the names the engine writes need no
+    encoding and make no Py4J call.  Never decode Spark's side
+    instead: ``url_decode`` turns ``+`` into a space."""
+    base = os.path.basename(rel)
+    if _URI_PLAIN.issuperset(base):
+        return base
+    jpath = spark._jvm.org.apache.hadoop.fs.Path("/" + base)
+    return jpath.toUri().getRawPath().rsplit("/", 1)[-1]
+
 
 def _with_rowmeta(df: DataFrame) -> DataFrame:
     """Append the per-file identity the DV protocol is keyed on: the
-    data file's basename and the parquet reader's physical row index
+    data file's name as Spark reports it (:func:`_spark_file_name`)
+    and the parquet reader's physical row index
     (``_metadata.row_index`` — stable, 0-based per file, JVM-side)."""
     return df.select(
-        "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-         .alias(_FILE_META),
+        "*", F.col("_metadata.file_name").alias(_FILE_META),
         F.col("_metadata.row_index").alias(_ROW_META))
 
 
@@ -450,23 +483,39 @@ def _apply_dv(spark: SparkSession, df: DataFrame,
               dvmap: dict[str, list], *, keep_dead: bool = False
               ) -> DataFrame:
     """Mask (or, for CDC, SELECT) the rows a deletion vector covers.
-    One broadcast hash join on the file basename against the
-    churn-sized DV table, then a codegen'd ``exists`` over the range
-    structs — no explode, cost ∝ scanned rows with a few-entry array
-    probe each.  The DV table is a ``LocalRelation`` built by
-    :func:`~docker_aktin_dwh_spark.session.local_frame`, so neither
-    the mask nor its broadcast starts a Python worker.
-    ``keep_dead=True`` inverts the filter (only DV'd rows survive —
-    the CDC delta read)."""
-    cols = df.columns
-    base = _with_rowmeta(df)
-    j = base.join(F.broadcast(_dv_frame(spark, dvmap)),
-                  _FILE_META, "left")
-    dead = F.when(F.col("__dv_ranges").isNull(), F.lit(False)).otherwise(
-        F.exists("__dv_ranges",
-                 lambda r: (F.col(_ROW_META) >= r["s"])
-                           & (F.col(_ROW_META) <= r["e"])))
-    return j.filter(dead if keep_dead else ~dead).select(*cols)
+    ``df`` is a raw file scan (the mask reads its ``_metadata``) and
+    ``dvmap`` maps logged file names to their dead row ranges; the
+    mask keys on the basename, uuid-unique even across partition dirs.
+
+    Up to DV_INLINE_MAX_FILES files and DV_INLINE_MAX_RANGES ranges
+    the mask is ONE filter over the scan: the DV map travels as a
+    ``from_json`` of a string literal, which the optimizer folds into
+    one map literal, and each row runs an ``exists`` over its file's
+    ranges — no join, no broadcast job, one Py4J parse.  Past
+    either bound the DV table is a ``LocalRelation`` broadcast-hash-
+    joined on the file name (one job, then a per-row lookup whose cost
+    does not grow with the file count).  ``keep_dead=True`` inverts
+    the filter (only DV'd rows survive — the CDC delta read)."""
+    dvmap = {_spark_file_name(spark, n): rg for n, rg in dvmap.items()}
+    if (len(dvmap) > DV_INLINE_MAX_FILES
+            or sum(len(rg) for rg in dvmap.values())
+            > DV_INLINE_MAX_RANGES):
+        cols = df.columns
+        j = _with_rowmeta(df).join(F.broadcast(_dv_frame(spark, dvmap)),
+                                   _FILE_META, "left")
+        dead = F.coalesce(F.exists(
+            "__dv_ranges", lambda r: F.col(_ROW_META).between(
+                r["s"], r["e"])), F.lit(False))
+        return j.filter(dead if keep_dead else ~dead).select(*cols)
+    lit = json.dumps(
+        {n: [{"s": int(s), "e": int(e)} for s, e in rg]
+         for n, rg in sorted(dvmap.items())}, separators=(",", ":"))
+    # a SQL string literal: backslash and quote are its escapes
+    lit = lit.replace("\\", "\\\\").replace("'", "\\'")
+    dead = (f"coalesce(exists(from_json('{lit}', '{_DV_TYPE}')"
+            "[_metadata.file_name], r -> _metadata.row_index "
+            "BETWEEN r.s AND r.e), false)")
+    return df.filter(dead if keep_dead else f"NOT {dead}")
 
 
 def _scan(spark: SparkSession, path: str, schema: StructType,
@@ -491,13 +540,15 @@ def _read_files(spark: SparkSession, path: str, schema: StructType,
     (logical) schema, with each file's deletion vector masked.  Every
     rewrite (merge fold, compact, delete) reads through here — reading
     a DV'd file raw would RESURRECT its dead rows into the rewrite.
-    Under column mapping the scan runs under PHYSICAL names (DV
-    masking included — it needs the scan's ``_metadata``) and aliases
-    back to logical as the last projection."""
+    The mask (:func:`_apply_dv`) is one filter over the scan holding
+    the DV map as a constant, so a masked read plans and runs the same
+    jobs as an unmasked one; only a DV map past the inline bounds
+    adds a broadcast job.  Under column mapping the scan runs under
+    PHYSICAL names (DV masking included — it needs the scan's
+    ``_metadata``) and aliases back to logical as the last
+    projection."""
     df = _scan(spark, path, schema, names, colmap, partition_by)
-    # DVs join on the file BASENAME (uuid-unique even across partition
-    # dirs) — log entries key the relative path
-    dvmap = {os.path.basename(n): stats[n]["dv"] for n in names
+    dvmap = {n: stats[n]["dv"] for n in names
              if stats.get(n, {}).get("dv")}
     if dvmap:
         df = _apply_dv(spark, df, dvmap)
@@ -1201,7 +1252,7 @@ def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
     got = hits.limit(DV_ROWS_COLLECT_MAX + 1).collect()
     if len(got) > DV_ROWS_COLLECT_MAX:
         return None, None, None
-    rev = {os.path.basename(n): n for n in touched}
+    rev = {_spark_file_name(spark, n): n for n in touched}
     per: dict[str, list[int]] = {}
     for fn, ri in got:
         per.setdefault(rev[fn], []).append(ri)
@@ -1953,8 +2004,8 @@ def update_where(spark: SparkSession, path: str, *, key: str,
             spark, path, snap, touched, lambda df: df.filter(pred), key)
         # the touched files through their DV mask — or, when no
         # matching row was dead already, without it (an empty stats
-        # map): the raw matches ARE the live ones then, and the mask's
-        # broadcast job is saved.  Copy-on-write keeps every live row,
+        # map): the raw matches ARE the live ones then, and the
+        # per-row mask is saved.  Copy-on-write keeps every live row,
         # so it always reads masked.
         masked = dv_actions is None or dead_hit
         src = _read_files(spark, path, schema, touched,
@@ -2210,8 +2261,7 @@ def table_changes(spark: SparkSession, path: str, v_from: int,
     def delta_rows(dvmap: dict[str, list]) -> DataFrame:
         raw = _scan(spark, path, schema, sorted(dvmap), cm,
                     s1.partition_by or s0.partition_by)
-        base_dv = {os.path.basename(n): rg for n, rg in dvmap.items()}
-        return _alias_logical(_apply_dv(spark, raw, base_dv,
+        return _alias_logical(_apply_dv(spark, raw, dvmap,
                                         keep_dead=True), schema, cm)
 
     if dv_dead:

@@ -1061,3 +1061,62 @@ def test_percent_encoded_paths_and_v2_checkpoint_names(spark, tdir):
          .trigger(availableNow=True).start())
     q.awaitTermination()
     assert txnlog.read_table(spark, t + "_rep").count() == 20
+
+
+def _encoded_name_fixture(tdir, name, dv_ranges=None):
+    """A one-file foreign table whose data file's name needs URL
+    encoding; Spark's ``_metadata.file_name`` reports it encoded."""
+    t = os.path.join(tdir, "fe")
+    os.makedirs(os.path.join(t, "sub dir"))
+    _duck_parquet(os.path.join(t, "sub dir", name),
+                  "SELECT range AS k, 'x' || range AS v "
+                  "FROM range(0, 20)")
+    add = {"path": "sub%20dir/" + name.replace("%", "%25")
+                                      .replace(" ", "%20"),
+           "partitionValues": {}, "size": 1, "modificationTime": 0,
+           "dataChange": True}
+    proto = _PROTO
+    if dv_ranges:
+        add["deletionVector"] = delta_export.dv_descriptor(dv_ranges)
+        proto = {"minReaderVersion": 3, "minWriterVersion": 7,
+                 "readerFeatures": ["deletionVectors"],
+                 "writerFeatures": ["deletionVectors"]}
+    _write_log(os.path.join(t, "_delta_log"), 0, [
+        {"protocol": proto},
+        {"metaData": _meta([_fld("k", "long"), _fld("v", "string")])},
+        {"add": add},
+    ])
+    return t
+
+
+def test_dv_verbs_on_url_encoded_file_names(spark, tdir):
+    """Row-level verbs plan deletion vectors on a file whose name
+    Spark reports URL-encoded (``f 1.parquet`` → ``f%201.parquet``):
+    the hit rows map back to the logged file and the read masks them."""
+    t = _encoded_name_fixture(tdir, "f 1.parquet")
+    imp = t + "_imp"
+    delta_import.import_delta_log(spark, t, imp, key="k")
+    txnlog.delete_where(spark, imp, key="k", filters=[("k", "<", 5)])
+    assert any(s.get("dv") for s in txnlog.snapshot(imp).files.values())
+    txnlog.merge(spark, imp, _mk(spark, 8, 10, tag="m").drop("p"),
+                 key="k")
+    got = {r.k: r.v for r in txnlog.read_table(spark, imp).collect()}
+    assert sorted(got) == list(range(5, 20))
+    assert got[8] == "m8" and got[10] == "x10"
+
+
+def test_imported_dv_masks_url_encoded_file_name(spark, tdir,
+                                                monkeypatch):
+    """A foreign deletion vector on a file whose name holds a space, a
+    percent sign and a plus masks its rows after import — on both mask
+    arms."""
+    t = _encoded_name_fixture(tdir, "g 100%+x.parquet",
+                              dv_ranges=[(2, 4), (11, 11)])
+    imp = t + "_imp"
+    delta_import.import_delta_log(spark, t, imp, key="k")
+    want = sorted(set(range(20)) - {2, 3, 4, 11})
+    assert sorted(r.k for r in txnlog.read_table(spark, imp)
+                  .collect()) == want
+    monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+    assert sorted(r.k for r in txnlog.read_table(spark, imp)
+                  .collect()) == want

@@ -1,7 +1,8 @@
 """Driver-side frames (session.local_frame): every frame the engine
 builds from driver-held rows is a JVM ``LocalRelation`` — no job to
 build it, no Python worker to scan or broadcast it — including the
-deletion-vector (DV) side of every txnlog read and rewrite.  Also the
+deletion-vector (DV) side of a txnlog read or rewrite past the inline
+DV bound (under it the DV side is a map literal).  Also the
 guard that keeps ``createDataFrame`` and ``parallelize`` out of the
 package, and value parity with the ``createDataFrame(list)`` form the
 helper replaced."""
@@ -62,46 +63,65 @@ def _batch(spark, lo, hi):
         F.concat(F.lit("b"), F.col("id").cast("string")).alias("v"))
 
 
-def test_dv_masked_read_and_change_feed_plans_are_local(spark, tmp_path):
+def _assert_dv_local(plan: str, inline: bool) -> None:
+    """The DV side of a masked plan is driver-built with no Python-RDD
+    leaf: a map literal folded into the mask's filter (the inline arm)
+    or a LocalRelation (the broadcast arm past DV_INLINE_MAX_FILES)."""
+    if inline:
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+        assert "map(keys:" in plan, plan
+    else:
+        _assert_local(plan)
+
+
+def test_dv_masked_read_and_change_feed_plans_are_local(spark, tmp_path,
+                                                        monkeypatch):
     tdir = str(tmp_path / "tbl")
     _one_file_table(spark, tdir)
     txnlog.merge(spark, tdir, _batch(spark, 10, 20), key="k")    # v1
     assert any(s.get("dv") for s in txnlog.snapshot(tdir).files.values()), \
         "scenario must leave a deletion vector"
-    read = txnlog.read_table(spark, tdir)
-    _assert_local(_plan(read))
-    assert read.count() == 100
-    # v0 → v1 diff reads the DV delta through the keep_dead arm, and
-    # its empty old-only side is a driver-built frame too
-    feed = txnlog.table_changes(spark, tdir, 0, 1, key="k")
-    _assert_local(_plan(feed))
-    assert {(r.k, r.change_type) for r in feed.collect()} == \
-        {(k, t) for k in range(10, 20)
-         for t in ("update_preimage", "update_postimage")}
+    for inline in (True, False):
+        if not inline:
+            monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+        read = txnlog.read_table(spark, tdir)
+        _assert_dv_local(_plan(read), inline)
+        assert read.count() == 100
+        # v0 → v1 diff reads the DV delta through the keep_dead arm
+        # (its empty old-only side, a LocalRelation, optimizes away)
+        feed = txnlog.table_changes(spark, tdir, 0, 1, key="k")
+        _assert_dv_local(_plan(feed), inline)
+        assert {(r.k, r.change_type) for r in feed.collect()} == \
+            {(k, t) for k in range(10, 20)
+             for t in ("update_preimage", "update_postimage")}
 
 
 def test_merge_fold_read_plan_is_local(spark, tmp_path, monkeypatch):
-    tdir = str(tmp_path / "tbl")
-    _one_file_table(spark, tdir)
-    txnlog.merge(spark, tdir, _batch(spark, 10, 20), key="k")    # DV
-    (folded,) = [n for n, s in txnlog.snapshot(tdir).files.items()
-                 if s.get("dv")]
-    staged = []
-    stage = txnlog._stage_data_files
+    for inline in (True, False):
+        if not inline:
+            monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+        tdir = str(tmp_path / f"tbl_{inline}")
+        _one_file_table(spark, tdir)
+        txnlog.merge(spark, tdir, _batch(spark, 10, 20), key="k")  # DV
+        (folded,) = [n for n, s in txnlog.snapshot(tdir).files.items()
+                     if s.get("dv")]
+        staged = []
+        stage = txnlog._stage_data_files
 
-    def spy(spark_, df, *a, **kw):
-        staged.append(_plan(df))
-        return stage(spark_, df, *a, **kw)
+        def spy(spark_, df, *a, **kw):
+            staged.append(_plan(df))
+            return stage(spark_, df, *a, **kw)
 
-    monkeypatch.setattr(txnlog, "_stage_data_files", spy)
-    txnlog.merge(spark, tdir, _batch(spark, 20, 60), key="k")    # fold
-    assert folded not in txnlog.snapshot(tdir).files, \
-        "the DV'd file must fold (rewrite) in this commit"
-    (plan,) = staged
-    _assert_local(plan)
-    got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
-    assert len(got) == 100 and got[5] == "a5" and got[15] == "b15" \
-        and got[59] == "b59" and got[60] == "a60"
+        monkeypatch.setattr(txnlog, "_stage_data_files", spy)
+        txnlog.merge(spark, tdir, _batch(spark, 20, 60), key="k")  # fold
+        monkeypatch.setattr(txnlog, "_stage_data_files", stage)
+        assert folded not in txnlog.snapshot(tdir).files, \
+            "the DV'd file must fold (rewrite) in this commit"
+        (plan,) = staged
+        _assert_dv_local(plan, inline)
+        got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
+        assert len(got) == 100 and got[5] == "a5" and got[15] == "b15" \
+            and got[59] == "b59" and got[60] == "a60"
 
 
 # ------------------------------------------------------------ value parity

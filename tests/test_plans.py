@@ -423,35 +423,76 @@ def test_jn11_forward_asof_is_one_shuffle_no_nlj(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_txnlog_dv_read_plans(spark, tmp_path):
-    """Deletion-vector masking plan contract (r11): a table with NO
-    deletion vectors reads as a PLAIN parquet scan (zero masking
-    overhead — no join node at all); a table WITH a DV masks through
-    exactly one BroadcastHashJoin against the churn-sized DV frame
-    plus a codegen'd exists() filter — never a nested loop, never a
-    shuffle of the data side."""
+def _dv_table(spark, path):
     from docker_aktin_dwh_spark.sources import txnlog
 
-    path = str(tmp_path / "tbl")
     df = spark.range(0, 100).selectExpr("id AS k",
                                         "CAST(id AS STRING) AS v")
     txnlog.create_table(spark, df.coalesce(2), path, key="k")
     clean = plans.formatted_plan(txnlog.read_table(spark, path))
-    assert "Join" not in clean, clean
-
     txnlog.merge(spark, path,
                  spark.range(5, 8).selectExpr("id AS k", "'b' AS v"),
                  key="k")
     assert any(s.get("dv")
                for s in txnlog.snapshot(path).files.values())
+    return clean
+
+
+def test_txnlog_dv_read_plans(spark, tmp_path, monkeypatch):
+    """Deletion-vector masking plan contract: a table with NO deletion
+    vectors reads as a PLAIN parquet scan (no join node at all); a
+    table WITH a DV masks through exactly one Filter over the scan —
+    the DV map is a constant, so no join and no exchange — and past
+    the inline bound (forced here with DV_INLINE_MAX_FILES = 0)
+    through exactly one BroadcastHashJoin against the DV frame.
+    Neither arm ever plans a nested loop or a cartesian product."""
     import re
+
+    from docker_aktin_dwh_spark.sources import txnlog
+
+    path = str(tmp_path / "tbl")
+    clean = _dv_table(spark, path)
+    assert "Join" not in clean, clean
+
     masked = plans.formatted_plan(txnlog.read_table(spark, path))
-    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", masked)) == 1, \
+    assert "Join" not in masked, masked
+    assert "Exchange" not in masked, masked
+    filters = re.findall(r"\(\d+\) Filter", masked)
+    assert len(filters) == 1, masked
+    # below the Filter sits the scan alone (the columnar adapter and
+    # the projection that assembles `_metadata`)
+    nodes = re.findall(r"^[ +\-*]*([A-Za-z][A-Za-z ]*?)\s+\(\d+\)$",
+                       masked.split("\n\n")[0], re.M)
+    below = nodes[nodes.index("Filter") + 1:]
+    assert below[-1] == "Scan parquet", masked
+    assert set(below) <= {"Project", "ColumnarToRow", "Scan parquet"}, \
         masked
-    assert "BroadcastNestedLoopJoin" not in masked, masked
-    assert "CartesianProduct" not in masked, masked
+
+    monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+    joined = plans.formatted_plan(txnlog.read_table(spark, path))
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", joined)) == 1, \
+        joined
     # the data side must not shuffle for the mask
-    assert "Exchange hashpartitioning" not in masked, masked
+    assert "Exchange hashpartitioning" not in joined, joined
+    for plan in (masked, joined):
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+
+
+def test_txnlog_dv_mask_is_folded_to_a_literal(spark, tmp_path):
+    """The inline DV mask carries the DV map as ``from_json`` of a
+    string literal, which the optimizer must fold into one map
+    literal.  If a Spark upgrade stops folding it, every scanned row
+    would parse the JSON again — fail loudly instead."""
+    from docker_aktin_dwh_spark.sources import txnlog
+
+    path = str(tmp_path / "tbl")
+    _dv_table(spark, path)
+    df = txnlog.read_table(spark, path)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "map(keys:" in plan, plan
+    assert "from_json" not in plan.lower(), plan
+    assert "jsontostructs" not in plan.lower(), plan
 
 
 def test_tokenize_not_inlined_per_element(spark):

@@ -3610,9 +3610,10 @@ def test_row_level_verbs_job_counts(spark, tdir):
     """Each row-level verb decides from one bounded collect with no
     shuffle and reuses the driver-held answer: merge and apply_changes
     run 3 jobs (the key collect, the DV hit scan with the keys as an
-    IN list, the staging write), update_where 2 when no hit row was
-    dead already (the DV hit scan and the staging write — the
-    DV-masked re-read is skipped), delete_where 1.  Batches are one
+    IN list, the staging write), update_where 2 (the DV hit scan and
+    the staging write — the re-read is unmasked when no hit row was
+    dead already, and its DV mask runs no job when one was),
+    delete_where 1.  Batches are one
     partition each: Spark's limit collect runs one job per scale-up
     round over a batch's partitions."""
     txnlog.create_table(spark, _mk(spark, 0, 4000)
@@ -3637,11 +3638,37 @@ def test_row_level_verbs_job_counts(spark, tdir):
         spark, tdir, key="k", filters=[("k", ">=", 300), ("k", "<", 305)],
         assignments={"v": "upper(v)"}))
     assert len(n) <= 2, n
+    # over rows already dead the re-read is masked: still no extra job
+    n = _job_ids(spark, lambda: txnlog.update_where(
+        spark, tdir, key="k", filters=[("k", ">=", 498), ("k", "<", 505)],
+        assignments={"v": "upper(v)"}))
+    assert len(n) <= 2, n
     got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
     assert len(got) == 4000 - 3 - 5 + 3
     assert got[15] == "m15" and got[105] == "u105" and 202 not in got
     assert got[5001] == "i5001" and got[302] == "A302" \
         and got[305] == "a305" and 501 not in got
+    assert got[498] == "A498" and got[504] == "A504" and got[505] == "a505"
+
+
+def test_dv_masked_read_and_compact_job_counts(spark, tdir):
+    """The DV mask is a constant filter over the scan, not a broadcast
+    join: a masked read written to a noop sink runs one job, and
+    compacting a DV'd table into one file two (the shuffle and the
+    write) — each one fewer than with a broadcast of the DV map."""
+    txnlog.create_table(spark, _mk(spark, 0, 400)
+                        .repartitionByRange(2, "k"), tdir, key="k")
+    txnlog.delete_where(spark, tdir, key="k",
+                        filters=[("k", ">=", 10), ("k", "<", 13)])
+    assert any(s.get("dv") for s in txnlog.snapshot(tdir).files.values())
+    n = _job_ids(spark, lambda: txnlog.read_table(spark, tdir)
+                 .write.format("noop").mode("overwrite").save())
+    assert len(n) == 1, n
+    n = _job_ids(spark, lambda: txnlog.compact(spark, tdir, key="k"))
+    assert len(n) == 2, n
+    got = sorted(r.k for r in txnlog.read_table(spark, tdir).collect())
+    assert got == sorted(set(range(400)) - {10, 11, 12})
+    assert len(txnlog.snapshot(tdir).files) == 1
 
 
 @pytest.mark.parametrize("cap", [100_000, 3], ids=["driver", "aggregate"])
@@ -4030,3 +4057,64 @@ def test_merge_nan_key_batch_replaces_rows(spark, tdir):
     assert txnlog._envelope_hits(old, 2.0, 4.0)
     assert txnlog._range_hits(old, 2.0, 4.0)
     assert logcore.interval_hit(old, "k", ">=", 2.0)
+
+
+# ------------------------------------------- DV mask: both arms agree
+@pytest.mark.parametrize("layout", ["plain", "partitioned", "renamed"])
+def test_dv_mask_arms_agree(spark, tdir, monkeypatch, layout):
+    """The inline DV mask (one constant filter) and the broadcast-join
+    arm past DV_INLINE_MAX_FILES (forced with the bound at 0) give the
+    same rows for latest and time-travel reads, for the change feed —
+    across merge-on-read commits (newly dead rows) and a restore that
+    shrinks the DVs (resurrected rows, the ``keep_dead`` read) — and
+    for compaction, on a plain, a partitioned and a column-mapped
+    table."""
+    if layout == "partitioned":
+        txnlog.create_table(spark, _mkp(spark, 0, 200), tdir, key="k",
+                            partition_by=["region"])
+    else:
+        txnlog.create_table(spark, _mk(spark, 0, 200)
+                            .repartitionByRange(4, "k"), tdir, key="k")
+    if layout == "renamed":
+        txnlog.rename_column(spark, tdir, old="v", new="val")
+    v0 = txnlog.snapshot(tdir).version
+    txnlog.delete_where(spark, tdir, key="k",
+                        filters=[("k", ">=", 10), ("k", "<", 20)])
+    batch = txnlog.read_table(spark, tdir).filter("k BETWEEN 50 AND 54")
+    batch = batch.withColumn(batch.columns[-1], F.lit("m"))
+    txnlog.merge(spark, tdir, batch.coalesce(1), key="k")
+    txnlog.delete_where(spark, tdir, key="k",
+                        filters=[("k", ">=", 100), ("k", "<", 103)])
+    v_dv = txnlog.snapshot(tdir).version
+    assert sum(bool(s.get("dv"))
+               for s in txnlog.snapshot(tdir).files.values()) >= 2
+    txnlog.restore(spark, tdir, version=v0 + 1)
+    v_rs = txnlog.snapshot(tdir).version
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def observe(dest):
+        out = {
+            "latest": rows(txnlog.read_table(spark, tdir)),
+            "travel": rows(txnlog.read_table(spark, tdir, v_dv)),
+            "dead": rows(txnlog.table_changes(spark, tdir, v0, v_dv,
+                                              key="k")),
+            "restored": rows(txnlog.table_changes(spark, tdir, v_dv,
+                                                  v_rs, key="k")),
+        }
+        txnlog.clone_table(tdir, dest)
+        txnlog.compact(spark, dest, key="k")
+        out["compact"] = rows(txnlog.read_table(spark, dest))
+        return out
+
+    inline = observe(tdir + "_inline")
+    monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+    joined = observe(tdir + "_joined")
+    assert inline == joined
+    types = {r[-1] for r in inline["restored"]}
+    assert "insert" in types and len(inline["restored"]) >= 3, \
+        inline["restored"]
+    assert len(inline["travel"]) == 200 - 10 - 3
+    assert len(inline["latest"]) == 200 - 10
+    assert inline["compact"] == inline["latest"]
