@@ -50,11 +50,11 @@ Protocol invariants (each one is a test in tests/test_txnlog.py):
   ``dv`` action (a run-length row-index bitmap in the log, Delta's
   deletion-vector design) and readers MASK the dead rows via the
   parquet reader's ``_metadata.row_index`` (one filter over the scan
-  holding the DV map as a constant, a broadcast-hash join only for
-  very large DV maps — zero overhead when no DVs exist).  Rewrite
-  bytes become ∝ touched ROWS, not touched files: at 100 TB a 100-row
-  correction commits a 100-row add file and a few dozen bitmap
-  entries instead of GBs.
+  holding the DV map as a constant, a broadcast-hash join only for a
+  large scan over many DV'd files — zero overhead when no DVs
+  exist).  Rewrite bytes become ∝ touched ROWS, not touched files:
+  at 100 TB a 100-row correction commits a 100-row add file and a
+  few dozen bitmap entries instead of GBs.
   A file whose cumulative DV passes DV_MAX_FILE_FRACTION is folded
   (rewritten without its dead rows) by the very commit that crossed
   the line, and :func:`compact` folds all DVs; time travel, CDC and
@@ -427,18 +427,15 @@ def create_table(spark: SparkSession, df: DataFrame, path: str, *,
 _FILE_META = "__txnlog_file"
 _ROW_META = "__txnlog_ri"
 
-#: up to this many deletion-vectored files, and DV_INLINE_MAX_RANGES
-#: ranges over them, the read mask is one constant map literal; past
-#: either it broadcast-joins the DV table.  The map lookup scans the
-#: DV'd file names for every row, so its cost grows with the file
-#: count, while the broadcast is one fixed job: level at 64 files on a
-#: 2M-row, 256-file scan (NOTES.md, "A deletion-vector mask is a
-#: constant, not a join")
-DV_INLINE_MAX_FILES = 64
-#: the literal is parsed and folded once per planned query and printed
-#: in every plan string; the inline mask was still the faster one at
-#: 80 000 ranges, this bound keeps the literal near a megabyte
-DV_INLINE_MAX_RANGES = 50_000
+#: The costs the two mask arms trade, fitted to a sweep over 0.5M-32M
+#: scanned rows and 1-256 DV'd files on ``local[4]`` (NOTES.md, "A
+#: deletion-vector mask is a constant, not a join"): the inline map
+#: lookup compares every scanned row's file name against the K DV'd
+#: names, DV_LOOKUP_NS per name; the broadcast join pays DV_JOIN_NS
+#: per scanned row instead, plus one job of DV_BROADCAST_MS.
+DV_LOOKUP_NS = 0.57
+DV_JOIN_NS = 9.5
+DV_BROADCAST_MS = 50
 
 _DV_TYPE = "map<string,array<struct<s:bigint,e:bigint>>>"
 #: characters Hadoop's ``Path.toUri`` leaves as they are
@@ -479,27 +476,36 @@ def _dv_frame(spark: SparkSession, dvmap: dict[str, list]) -> DataFrame:
                      "s: bigint, e: bigint>>")
 
 
-def _apply_dv(spark: SparkSession, df: DataFrame,
-              dvmap: dict[str, list], *, keep_dead: bool = False
-              ) -> DataFrame:
-    """Mask (or, for CDC, SELECT) the rows a deletion vector covers.
-    ``df`` is a raw file scan (the mask reads its ``_metadata``) and
-    ``dvmap`` maps logged file names to their dead row ranges; the
-    mask keys on the basename, uuid-unique even across partition dirs.
+def _dv_inline(n_files: int, rows: int) -> bool:
+    """Whether to mask ``n_files`` DV'd files inline over a scan of
+    ``rows`` logged rows: the lookup's cost grows with files x rows,
+    the join's with rows alone, so past about 17 files a large scan
+    goes to the join and a small one stays inline, where the fixed
+    broadcast job costs more than the lookups."""
+    return (rows * (n_files * DV_LOOKUP_NS - DV_JOIN_NS)
+            <= DV_BROADCAST_MS * 1e6)
 
-    Up to DV_INLINE_MAX_FILES files and DV_INLINE_MAX_RANGES ranges
-    the mask is ONE filter over the scan: the DV map travels as a
-    ``from_json`` of a string literal, which the optimizer folds into
-    one map literal, and each row runs an ``exists`` over its file's
-    ranges — no join, no broadcast job, one Py4J parse.  Past
-    either bound the DV table is a ``LocalRelation`` broadcast-hash-
-    joined on the file name (one job, then a per-row lookup whose cost
-    does not grow with the file count).  ``keep_dead=True`` inverts
-    the filter (only DV'd rows survive — the CDC delta read)."""
+
+def _apply_dv(spark: SparkSession, df: DataFrame,
+              dvmap: dict[str, list], rows: int, *,
+              keep_dead: bool = False) -> DataFrame:
+    """Mask (or, for CDC, SELECT) the rows a deletion vector covers.
+    ``df`` is a raw file scan (the mask reads its ``_metadata``) of
+    ``rows`` logged rows, and ``dvmap`` maps logged file names to
+    their dead row ranges; the mask keys on the basename, uuid-unique
+    even across partition dirs.
+
+    While :func:`_dv_inline` holds the mask is ONE filter over the
+    scan: the DV map travels as a ``from_json`` of a string literal,
+    which the optimizer folds into one map literal, and each row runs
+    an ``exists`` over its file's ranges — no join, no broadcast job,
+    one Py4J parse.  Otherwise the DV table is a ``LocalRelation``
+    broadcast-hash-joined on the file name (one job, then a per-row
+    lookup whose cost does not grow with the file count).
+    ``keep_dead=True`` inverts the filter (only DV'd rows survive —
+    the CDC delta read)."""
     dvmap = {_spark_file_name(spark, n): rg for n, rg in dvmap.items()}
-    if (len(dvmap) > DV_INLINE_MAX_FILES
-            or sum(len(rg) for rg in dvmap.values())
-            > DV_INLINE_MAX_RANGES):
+    if not _dv_inline(len(dvmap), rows):
         cols = df.columns
         j = _with_rowmeta(df).join(F.broadcast(_dv_frame(spark, dvmap)),
                                    _FILE_META, "left")
@@ -542,16 +548,18 @@ def _read_files(spark: SparkSession, path: str, schema: StructType,
     a DV'd file raw would RESURRECT its dead rows into the rewrite.
     The mask (:func:`_apply_dv`) is one filter over the scan holding
     the DV map as a constant, so a masked read plans and runs the same
-    jobs as an unmasked one; only a DV map past the inline bounds
-    adds a broadcast job.  Under column mapping the scan runs under
-    PHYSICAL names (DV masking included — it needs the scan's
-    ``_metadata``) and aliases back to logical as the last
-    projection."""
+    jobs as an unmasked one; only a large scan over many DV'd files
+    (:func:`_dv_inline`) adds a broadcast job.  Under column mapping
+    the scan runs under PHYSICAL names (DV masking included — it
+    needs the scan's ``_metadata``) and aliases back to logical as the
+    last projection."""
     df = _scan(spark, path, schema, names, colmap, partition_by)
     dvmap = {n: stats[n]["dv"] for n in names
              if stats.get(n, {}).get("dv")}
     if dvmap:
-        df = _apply_dv(spark, df, dvmap)
+        df = _apply_dv(spark, df, dvmap,
+                       sum(stats.get(n, {}).get("rows", 0)
+                           for n in names))
     df = _alias_logical(df, schema, colmap)
     if partition_by:
         # partition discovery surfaces partition columns LAST no
@@ -2261,7 +2269,8 @@ def table_changes(spark: SparkSession, path: str, v_from: int,
     def delta_rows(dvmap: dict[str, list]) -> DataFrame:
         raw = _scan(spark, path, schema, sorted(dvmap), cm,
                     s1.partition_by or s0.partition_by)
-        return _alias_logical(_apply_dv(spark, raw, dvmap,
+        rows = sum(s1.files[n].get("rows", 0) for n in dvmap)
+        return _alias_logical(_apply_dv(spark, raw, dvmap, rows,
                                         keep_dead=True), schema, cm)
 
     if dv_dead:

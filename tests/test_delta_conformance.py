@@ -1117,6 +1117,6 @@ def test_imported_dv_masks_url_encoded_file_name(spark, tdir,
     want = sorted(set(range(20)) - {2, 3, 4, 11})
     assert sorted(r.k for r in txnlog.read_table(spark, imp)
                   .collect()) == want
-    monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+    monkeypatch.setattr(txnlog, "_dv_inline", lambda *a: False)
     assert sorted(r.k for r in txnlog.read_table(spark, imp)
                   .collect()) == want

@@ -66,7 +66,8 @@ def _batch(spark, lo, hi):
 def _assert_dv_local(plan: str, inline: bool) -> None:
     """The DV side of a masked plan is driver-built with no Python-RDD
     leaf: a map literal folded into the mask's filter (the inline arm)
-    or a LocalRelation (the broadcast arm past DV_INLINE_MAX_FILES)."""
+    or a LocalRelation (the broadcast arm, where ``_dv_inline`` is
+    false)."""
     if inline:
         assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
         assert "map(keys:" in plan, plan
@@ -83,7 +84,7 @@ def test_dv_masked_read_and_change_feed_plans_are_local(spark, tmp_path,
         "scenario must leave a deletion vector"
     for inline in (True, False):
         if not inline:
-            monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+            monkeypatch.setattr(txnlog, "_dv_inline", lambda *a: False)
         read = txnlog.read_table(spark, tdir)
         _assert_dv_local(_plan(read), inline)
         assert read.count() == 100
@@ -99,7 +100,7 @@ def test_dv_masked_read_and_change_feed_plans_are_local(spark, tmp_path,
 def test_merge_fold_read_plan_is_local(spark, tmp_path, monkeypatch):
     for inline in (True, False):
         if not inline:
-            monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+            monkeypatch.setattr(txnlog, "_dv_inline", lambda *a: False)
         tdir = str(tmp_path / f"tbl_{inline}")
         _one_file_table(spark, tdir)
         txnlog.merge(spark, tdir, _batch(spark, 10, 20), key="k")  # DV

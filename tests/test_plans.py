@@ -442,8 +442,8 @@ def test_txnlog_dv_read_plans(spark, tmp_path, monkeypatch):
     """Deletion-vector masking plan contract: a table with NO deletion
     vectors reads as a PLAIN parquet scan (no join node at all); a
     table WITH a DV masks through exactly one Filter over the scan —
-    the DV map is a constant, so no join and no exchange — and past
-    the inline bound (forced here with DV_INLINE_MAX_FILES = 0)
+    the DV map is a constant, so no join and no exchange — and on
+    the broadcast arm (forced here by making ``_dv_inline`` false)
     through exactly one BroadcastHashJoin against the DV frame.
     Neither arm ever plans a nested loop or a cartesian product."""
     import re
@@ -468,7 +468,7 @@ def test_txnlog_dv_read_plans(spark, tmp_path, monkeypatch):
     assert set(below) <= {"Project", "ColumnarToRow", "Scan parquet"}, \
         masked
 
-    monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+    monkeypatch.setattr(txnlog, "_dv_inline", lambda *a: False)
     joined = plans.formatted_plan(txnlog.read_table(spark, path))
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin", joined)) == 1, \
         joined

@@ -4063,8 +4063,8 @@ def test_merge_nan_key_batch_replaces_rows(spark, tdir):
 @pytest.mark.parametrize("layout", ["plain", "partitioned", "renamed"])
 def test_dv_mask_arms_agree(spark, tdir, monkeypatch, layout):
     """The inline DV mask (one constant filter) and the broadcast-join
-    arm past DV_INLINE_MAX_FILES (forced with the bound at 0) give the
-    same rows for latest and time-travel reads, for the change feed —
+    arm (forced by making ``_dv_inline`` false) give the same rows for
+    latest and time-travel reads, for the change feed —
     across merge-on-read commits (newly dead rows) and a restore that
     shrinks the DVs (resurrected rows, the ``keep_dead`` read) — and
     for compaction, on a plain, a partitioned and a column-mapped
@@ -4109,7 +4109,7 @@ def test_dv_mask_arms_agree(spark, tdir, monkeypatch, layout):
         return out
 
     inline = observe(tdir + "_inline")
-    monkeypatch.setattr(txnlog, "DV_INLINE_MAX_FILES", 0)
+    monkeypatch.setattr(txnlog, "_dv_inline", lambda *a: False)
     joined = observe(tdir + "_joined")
     assert inline == joined
     types = {r[-1] for r in inline["restored"]}
@@ -4118,3 +4118,32 @@ def test_dv_mask_arms_agree(spark, tdir, monkeypatch, layout):
     assert len(inline["travel"]) == 200 - 10 - 3
     assert len(inline["latest"]) == 200 - 10
     assert inline["compact"] == inline["latest"]
+
+
+def test_dv_mask_arm_follows_scan_size(spark, tdir, monkeypatch):
+    """The mask arm weighs the DV'd file count against the logged rows
+    of the scan: many DV'd files stay inline over a small scan (the
+    broadcast job costs more than the lookups) and go to the join over
+    a large one, where a K-only bound would have kept 32 files inline;
+    a few DV'd files stay inline at any size.  Reads and the change
+    feed pass the logged rows of the files they scan."""
+    assert txnlog._dv_inline(256, 30_000)
+    assert not txnlog._dv_inline(256, 8_000_000)
+    assert not txnlog._dv_inline(32, 32_000_000)
+    assert txnlog._dv_inline(8, 10 ** 12)
+
+    txnlog.create_table(spark, _mk(spark, 0, 200)
+                        .repartitionByRange(4, "k"), tdir, key="k")
+    v0 = txnlog.snapshot(tdir).version
+    txnlog.delete_where(spark, tdir, key="k", filters=[("k", "<", 3)])
+    (dv_rows,) = [s["rows"] for s in txnlog.snapshot(tdir).files.values()
+                  if s.get("dv")]
+    seen = []
+    real = txnlog._dv_inline
+    monkeypatch.setattr(txnlog, "_dv_inline",
+                        lambda n, rows: seen.append((n, rows))
+                        or real(n, rows))
+    assert txnlog.read_table(spark, tdir).count() == 197
+    assert txnlog.table_changes(spark, tdir, v0, v0 + 1,
+                                key="k").count() == 3
+    assert seen == [(1, 200), (1, dv_rows)]
