@@ -534,13 +534,21 @@ def interval_hit(stats: dict, col: str, op: str, val) -> bool:
     ``col <op> val``?  True (keep the file) whenever the answer is
     not provably no — missing stats, un-stats'd column, or a type
     mismatch all keep the file (skipping is an optimization, never a
-    correctness lever)."""
+    correctness lever).
+
+    Spark orders NaN above every number and equal to itself, while a
+    footer's [min, max] may leave out the file's NaN rows (pyarrow's
+    does): a NaN literal keeps the file under every op, and so does
+    ``>``/``>=`` on a floating column, which a NaN row satisfies."""
     iv = (stats.get("cols") or {}).get(col)
     bounds = None if iv is None else stats_bounds(*iv)
     if bounds is None:
         return True
     lo, hi = bounds
     try:
+        if (any(v != v for v in (val if op == "in" else [val]))
+                or op in (">", ">=") and isinstance(hi, float)):
+            return True
         if op == "=":
             return lo <= val <= hi
         if op == "<":

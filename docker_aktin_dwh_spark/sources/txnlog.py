@@ -598,6 +598,30 @@ def _pv_hit(stats: dict, col: str, op: str, val, dtype) -> bool:
     return True
 
 
+def _snap_file_hits(snap: Snapshot,
+                    filters: list[tuple[str, str, object]]):
+    """Per-file can-match closure for ``filters`` under ``snap``'s
+    schema — partition values first (exact), then footer intervals;
+    used for read pruning, a write's touched set and its logical
+    conflict detection on retry."""
+    pcols = set(snap.partition_by or ())
+    types = {}
+    if pcols and snap.schema_json:
+        types = _pv_types(
+            StructType.fromJson(json.loads(snap.schema_json)),
+            list(pcols))
+    part = [(c, o, v) for c, o, v in filters if c in pcols]
+    rest = [(_phys_name(snap.colmap, c), o, v)
+            for c, o, v in filters if c not in pcols]
+
+    def hits(stats: dict) -> bool:
+        return (all(_pv_hit(stats, c, o, v, types[c])
+                    for c, o, v in part)
+                and all(_interval_hit(stats, c, o, v)
+                        for c, o, v in rest))
+    return hits
+
+
 def prune_files(snap: Snapshot,
                 filters: list[tuple[str, str, object]]) -> list[str]:
     """The live files of ``snap`` that can contain a row satisfying
@@ -609,20 +633,8 @@ def prune_files(snap: Snapshot,
     keyed physical (rename-stable), so the conjuncts translate through
     the snapshot's colmap first (partition columns are never renamed,
     so their names pass through unchanged)."""
-    pcols = set(snap.partition_by or ())
-    types = {}
-    if pcols and snap.schema_json:
-        types = _pv_types(
-            StructType.fromJson(json.loads(snap.schema_json)),
-            list(pcols))
-    part = [(c, o, v) for c, o, v in filters if c in pcols]
-    rest = [(_phys_name(snap.colmap, c), o, v)
-            for c, o, v in filters if c not in pcols]
-    return [n for n in sorted(snap.files)
-            if all(_pv_hit(snap.files[n], c, o, v, types[c])
-                   for c, o, v in part)
-            and all(_interval_hit(snap.files[n], c, o, v)
-                    for c, o, v in rest)]
+    hits = _snap_file_hits(snap, filters)
+    return [n for n in sorted(snap.files) if hits(snap.files[n])]
 
 
 def read_table(spark: SparkSession, path: str,
@@ -1233,7 +1245,7 @@ def _key_join(spark: SparkSession, key: str, keys: list,
 
 
 def _compute_dv(spark: SparkSession, path: str, snap: Snapshot,
-                touched: list[str], hit_rows, key: str):
+                touched: list[str], hit_rows):
     """Plan the merge-on-read arm for one commit attempt: which touched
     files take a ``dv`` action and which must FOLD (rewrite).
 
@@ -1310,30 +1322,135 @@ def _rewrite_unaffected(s0: Snapshot, s1: Snapshot,
     return all(s1.files[n] == s0.files[n] for n in touched)
 
 
+def _in_partitions(snap: Snapshot, values: dict[str, object],
+                   refusal: str):
+    """The per-file closure matching the files whose partition values
+    equal ALL of ``values`` (a {col: value} conjunction over partition
+    columns) under ``snap``'s logged types.  A ``values`` naming a
+    column that is not a partition column raises ValueError with
+    ``refusal`` formatted with ``bad`` (those columns) and ``by`` (the
+    table's partition columns)."""
+    bad = [c for c in values if c not in (snap.partition_by or ())]
+    if bad:
+        raise ValueError(refusal.format(bad=bad, by=snap.partition_by))
+    types = _pv_types(StructType.fromJson(json.loads(snap.schema_json)),
+                      list(values))
+
+    def match(stats: dict) -> bool:
+        pv = stats.get("pv") or {}
+        return all(c in pv and _pv_decode(pv[c], types[c]) == v
+                   for c, v in values.items())
+    return match
+
+
+def _pred_join(pred: Column):
+    """A predicate in :func:`_key_join`'s shape: ``"left_semi"`` keeps
+    the rows ``pred`` holds for, ``"left_anti"`` the others."""
+    return lambda df, how: df.filter(pred if how == "left_semi"
+                                     else ~pred)
+
+
+def _commit_rows(spark: SparkSession, path: str, verb: str, op: str,
+                 key: str, derive, dv: bool = True) -> Snapshot:
+    """The one commit protocol of the row-level write verbs (merge,
+    apply_changes, delete_range, update_where, delete_where): delete
+    the rows a verb hits, insert the rows it brings, as ONE atomic
+    commit.  Each attempt:
+
+    1. reads the latest snapshot and calls ``derive(snap)``, which
+       validates the verb against it and returns ``(hits, join,
+       rows)``: ``hits(stats)`` tells whether a file can hold a hit
+       row (footer or partition pruning; disjoint files carry over by
+       log reference); ``join(df, how)`` keeps a frame's hit rows for
+       ``"left_semi"`` and its other rows for ``"left_anti"`` (a
+       :func:`_key_join` or :func:`_pred_join`); ``rows`` is what the
+       commit inserts — None, a DataFrame (the batch, the upserts), or
+       a function of the hit rows' live versions (the updated rows);
+    2. with ``dv`` set, plans deletion vectors for the touched files
+       (:func:`_compute_dv`, one bounded collect of the hit row
+       indexes): the hits become per-file ``dv`` actions, and only
+       files whose DV crossed DV_MAX_FILE_FRACTION FOLD — rewrite
+       their non-hit rows.  Without ``dv``, or past
+       DV_ROWS_COLLECT_MAX hits, it is copy-on-write: every touched
+       file rewrites its non-hit rows;
+    3. stages the kept rows and the verb's rows as ONE write job;
+    4. claims the next version.  While the winner of a lost race is
+       logically disjoint (:func:`_rewrite_unaffected`) the staged
+       files stay valid and only the claim retries; otherwise they are
+       dropped and the attempt re-derives from the fresh snapshot, up
+       to MERGE_MAX_ATTEMPTS, then CommitConflictError.
+
+    A verb that inserts no rows of its own and deletes no live row
+    commits nothing and returns the current snapshot."""
+    for _ in range(MERGE_MAX_ATTEMPTS):
+        snap = snapshot(path)
+        hits, join, rows = derive(snap)
+        touched = sorted(n for n, s in snap.files.items() if hits(s))
+        own = isinstance(rows, DataFrame)
+        if not touched and not own:
+            return snap                   # statically nothing matches
+        dv_actions = fold = dead_hit = None
+        if touched and dv:
+            dv_actions, fold, dead_hit = _compute_dv(
+                spark, path, snap, touched,
+                lambda df: join(df, "left_semi"))
+        if dv_actions is None:
+            rewrite = touched
+        elif dv_actions or fold or own:
+            rewrite = fold
+        else:
+            return snap   # every hit row dead already or a footer false hit
+        schema = StructType.fromJson(json.loads(snap.schema_json))
+        kept = live = None
+        if rewrite:
+            # masked: a raw read would resurrect rows an earlier DV killed
+            live = _read_files(spark, path, schema, rewrite, snap.files,
+                               snap.colmap, snap.partition_by)
+            kept = join(live, "left_anti")
+        if callable(rows):
+            if dv_actions is not None:
+                # when no hit row was dead already the raw matches ARE
+                # the live ones: read unmasked and save the per-row mask
+                live = _read_files(spark, path, schema, touched,
+                                   snap.files if dead_hit else {},
+                                   snap.colmap, snap.partition_by)
+            rows = rows(join(live, "left_semi"))
+        stage = rows if kept is None else kept if rows is None else \
+            kept.unionByName(rows, allowMissingColumns=True)
+        adds = [] if stage is None else _stage_data_files(
+            spark, stage, path, key, snap.version + 1, snap.colmap,
+            snap.partition_by)
+        payload = {"op": op, "add": adds, "remove": rewrite}
+        if dv_actions:
+            payload["dv"] = dv_actions
+        v = snap.version + 1
+        for _ in range(MERGE_MAX_ATTEMPTS * 8):
+            if _try_commit(path, v, payload):
+                return snapshot(path, v)
+            nxt = snapshot(path)
+            if not _rewrite_unaffected(snap, nxt, touched, hits):
+                break                     # real conflict: re-derive
+            snap = nxt
+            v = max(v + 1, nxt.version + 1)
+        _drop_files(path, adds)
+    raise CommitConflictError(
+        f"{verb} lost {MERGE_MAX_ATTEMPTS} commit races at {path}")
+
+
 def merge(spark: SparkSession, path: str, batch: DataFrame, *,
           key: str,
           partition_filter: dict[str, object] | None = None) -> Snapshot:
     """Delete+insert MERGE keyed on ``key`` (the reference's re-import
     semantics): rows whose key appears in the batch are replaced,
-    everything else inserted.
+    everything else inserted — one :func:`_commit_rows` commit.
 
     Data skipping: only files whose footer [kmin, kmax] interval
-    contains a batch key are considered; disjoint files carry over by
-    log reference alone.  The batch key set is collected to the
-    driver ONLY below MERGE_KEYS_COLLECT_MAX distinct keys (O(log B)
-    bisect per file); a wider batch prunes by its min/max envelope —
-    one aggregate row, driver cost O(1) regardless of churn.
-
-    Merge-on-read (r11): below the key-collect cap the replaced rows
-    are DELETION-VECTORED, not rewritten — the commit carries the
-    batch's own files plus per-file row-index bitmaps; a file whose
-    cumulative DV crosses DV_MAX_FILE_FRACTION is folded (rewritten
-    live-rows-only) by that same commit.  Wide batches keep the
-    copy-on-write rewrite.
-    Optimistic concurrency: on a lost version race the staged files
-    are dropped and the WHOLE merge re-derives from the fresh
-    snapshot (a concurrent commit may have rewritten the very files
-    this merge read), up to MERGE_MAX_ATTEMPTS.
+    contains a batch key are considered.  The batch key set is
+    collected to the driver ONLY below MERGE_KEYS_COLLECT_MAX distinct
+    keys (O(log B) bisect per file), and only then are the replaced
+    rows deletion-vectored; a wider batch prunes by its min/max
+    envelope — one aggregate row, driver cost O(1) regardless of
+    churn — and rewrites copy-on-write.
 
     ``partition_filter`` (r14, partitioned tables): a {col: value}
     conjunction over partition columns that SCOPES the merge — only
@@ -1384,14 +1501,10 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
             def key_join(df, how): return df.join(dk, key, how)
         hits = key_hits
         if partition_filter:
-            snap0 = snapshot(path)
-            bad = [c for c in partition_filter
-                   if c not in (snap0.partition_by or ())]
-            if bad:
-                raise ValueError(
-                    f"merge: partition_filter names {bad}, not "
-                    f"partition columns (partitioned by "
-                    f"{snap0.partition_by})")
+            in_part = _in_partitions(
+                snapshot(path), partition_filter,
+                "merge: partition_filter names {bad}, not partition "
+                "columns (partitioned by {by})")
             import functools
             in_scope = functools.reduce(
                 lambda a, b: a & b,
@@ -1403,20 +1516,10 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
                     f"merge: {n_out} batch row(s) fall outside "
                     f"partition_filter {partition_filter} — the scope "
                     f"contract requires every batch row to match")
-            ptypes = _pv_types(
-                StructType.fromJson(json.loads(snap0.schema_json)),
-                list(partition_filter))
 
-            def hits(s):
-                pv = s.get("pv") or {}
-                for c, v in partition_filter.items():
-                    if c not in pv or _pv_decode(pv[c],
-                                                 ptypes[c]) != v:
-                        return False
-                return key_hits(s)
-        for _ in range(MERGE_MAX_ATTEMPTS):
-            snap = snapshot(path)
-            touched = [n for n, s in snap.files.items() if hits(s)]
+            def hits(s): return in_part(s) and key_hits(s)
+
+        def derive(snap: Snapshot):
             logged_cols = [fl.name for fl in StructType.fromJson(
                 json.loads(snap.schema_json)).fields]
             extra = [c for c in batch.columns if c not in logged_cols]
@@ -1428,75 +1531,12 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
             _check_types(snap, batch, "merge")
             _check_constraints(snap, batch, "merge")
             _require_partition_cols(batch, snap.partition_by)
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            dv_actions = fold = None
-            if touched and n_keys <= MERGE_KEYS_COLLECT_MAX:
-                dv_actions, fold, _ = _compute_dv(
-                    spark, path, snap, touched,
-                    lambda df: key_join(df, "left_semi"), key)
-            if dv_actions is not None:
-                # merge-on-read: the commit is the batch's own files,
-                # per-file deletion vectors for the replaced rows, and
-                # a rewrite ONLY of files whose DV crossed the fold
-                # cap — rewrite bytes ∝ touched rows, not files
-                # r16 (guide §5): the fold-kept rows and the batch used
-                # to stage as TWO sequential Spark write jobs; one
-                # union stages both in a single job (the commit's add
-                # set is the same row set either way — adds are
-                # per-file log entries, and the read/CDC paths are
-                # row-level, never file-boundary-sensitive)
-                if fold:
-                    live = _read_files(spark, path, schema, fold,
-                                       snap.files, snap.colmap,
-                                       snap.partition_by)
-                    kept = key_join(live, "left_anti")
-                    to_stage = kept.unionByName(
-                        batch, allowMissingColumns=True)
-                else:
-                    to_stage = batch
-                adds = _stage_data_files(spark, to_stage, path, key,
-                                         snap.version + 1, snap.colmap,
-                                         snap.partition_by)
-                payload = {"op": "merge", "add": adds, "remove": fold}
-                if dv_actions:
-                    payload["dv"] = dv_actions
-            else:
-                if touched:
-                    # copy-on-write fallback (wide batch / huge churn):
-                    # logged schema + DV masking — a raw read would
-                    # resurrect rows an earlier DV killed
-                    old = _read_files(spark, path, schema, touched,
-                                      snap.files, snap.colmap,
-                                      snap.partition_by)
-                    kept = key_join(old, "left_anti")
-                    # a batch NARROWER than the evolved schema
-                    # NULL-fills its missing columns (delete+insert
-                    # semantics: the replacing row version simply has
-                    # no value there)
-                    merged = kept.unionByName(batch,
-                                              allowMissingColumns=True)
-                else:
-                    merged = batch
-                adds = _stage_data_files(spark, merged, path, key,
-                                         snap.version + 1, snap.colmap,
-                                         snap.partition_by)
-                payload = {"op": "merge", "add": adds,
-                           "remove": touched}
-            # claim loop: while the winner's commit is logically
-            # disjoint (see _rewrite_unaffected), the staged output
-            # stays valid — retry the claim only, no re-derive
-            v = snap.version + 1
-            for _ in range(MERGE_MAX_ATTEMPTS * 8):
-                if _try_commit(path, v, payload):
-                    return snapshot(path, v)
-                nxt = snapshot(path)
-                if not _rewrite_unaffected(snap, nxt, touched, hits):
-                    break                     # real conflict: re-derive
-                snap = nxt
-                v = max(v + 1, nxt.version + 1)
-            _drop_files(path, adds)   # lost materially: redo vs new state
-        raise CommitConflictError(
-            f"merge lost {MERGE_MAX_ATTEMPTS} commit races at {path}")
+            # a batch NARROWER than the evolved schema NULL-fills its
+            # missing columns (delete+insert semantics: the replacing
+            # row version simply has no value there)
+            return hits, key_join, batch
+        return _commit_rows(spark, path, "merge", "merge", key, derive,
+                            dv=n_keys <= MERGE_KEYS_COLLECT_MAX)
     finally:
         batch.unpersist()
 
@@ -1523,12 +1563,12 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
     table_changes; a key that is both updated and deleted in one
     batch is a malformed feed and raises).
 
-    Same data skipping and optimistic concurrency as :func:`merge`:
-    files disjoint from every feed key (delete keys included) carry
-    over by log reference; a lost version race re-derives from the
-    fresh snapshot.  Crucially, delete and upsert commit TOGETHER —
-    a crash can never leave deletes applied but upserts missing (the
-    two-call merge+delete_range emulation has exactly that window)."""
+    Same data skipping and key arms as :func:`merge`, through the same
+    :func:`_commit_rows` protocol: every feed key (delete keys
+    included) is a hit, the upsert rows are what the commit inserts.
+    Crucially, delete and upsert commit TOGETHER — a crash can never
+    leave deletes applied but upserts missing (the two-call
+    merge+delete_range emulation has exactly that window)."""
     feed = feed.cache()
     try:
         valid_ops = tuple(upsert_ops) + (delete_op,)
@@ -1600,15 +1640,14 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
             dk = feed.select(key).distinct()
             def key_join(df, how): return df.join(dk, key, how)
         ups = feed.filter(F.col(op_col) != delete_op).drop(op_col)
-        # a delete-only feed stages NOTHING — without this guard the
-        # empty upsert frame still walks _stage_data_files, which on a
-        # partitioned table refuses a feed that (legitimately) carries
-        # only the key column (r15: the MERGE ... WHEN MATCHED THEN
-        # DELETE SQL shape is exactly such a feed).  Answered by the
+        # a delete-only feed stages NOTHING: it may (legitimately)
+        # carry only the key column, which staging on a partitioned
+        # table refuses (r15: the MERGE ... WHEN MATCHED THEN DELETE
+        # SQL shape is exactly such a feed).  Answered by the
         # validation above — no isEmpty job.
         ups_empty = n_ups == 0
-        for _ in range(MERGE_MAX_ATTEMPTS):
-            snap = snapshot(path)
+
+        def derive(snap: Snapshot):
             logged_cols = [fl.name for fl in StructType.fromJson(
                 json.loads(snap.schema_json)).fields]
             extra = [c for c in ups.columns if c not in logged_cols]
@@ -1619,64 +1658,12 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
                     f"append(evolve_schema=True)")
             _check_types(snap, ups, "apply_changes")
             _check_constraints(snap, ups, "apply_changes")
-            if not ups_empty:
-                _require_partition_cols(ups, snap.partition_by)
-            touched = [n for n, s in snap.files.items() if hits(s)]
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            dv_actions = fold = None
-            if touched and n_keys <= MERGE_KEYS_COLLECT_MAX:
-                dv_actions, fold, _ = _compute_dv(
-                    spark, path, snap, touched,
-                    lambda df: key_join(df, "left_semi"), key)
-            if dv_actions is not None:
-                # merge-on-read: deletes AND replaced update rows are
-                # bitmapped; only the upsert rows (and any fold) stage
-                # r16: fold-kept + upserts stage in ONE write job
-                # (same single-staging fold as merge, guide §5)
-                to_stage = None
-                if fold:
-                    live = _read_files(spark, path, schema, fold,
-                                       snap.files, snap.colmap,
-                                       snap.partition_by)
-                    kept = key_join(live, "left_anti")
-                    to_stage = kept if ups_empty else kept.unionByName(
-                        ups, allowMissingColumns=True)
-                elif not ups_empty:
-                    to_stage = ups
-                adds = [] if to_stage is None else _stage_data_files(
-                    spark, to_stage, path, key, snap.version + 1,
-                    snap.colmap, snap.partition_by)
-                payload = {"op": "apply", "add": adds, "remove": fold}
-                if dv_actions:
-                    payload["dv"] = dv_actions
-            else:
-                if touched:
-                    old = _read_files(spark, path, schema, touched,
-                                      snap.files, snap.colmap,
-                                      snap.partition_by)
-                    kept = key_join(old, "left_anti")
-                    merged = kept if ups_empty else kept.unionByName(
-                        ups, allowMissingColumns=True)
-                else:
-                    merged = ups
-                adds = _stage_data_files(spark, merged, path, key,
-                                         snap.version + 1, snap.colmap,
-                                         snap.partition_by)
-                payload = {"op": "apply", "add": adds,
-                           "remove": touched}
-            v = snap.version + 1
-            for _ in range(MERGE_MAX_ATTEMPTS * 8):
-                if _try_commit(path, v, payload):
-                    return snapshot(path, v)
-                nxt = snapshot(path)
-                if not _rewrite_unaffected(snap, nxt, touched, hits):
-                    break                     # real conflict: re-derive
-                snap = nxt
-                v = max(v + 1, nxt.version + 1)
-            _drop_files(path, adds)
-        raise CommitConflictError(
-            f"apply_changes lost {MERGE_MAX_ATTEMPTS} commit races "
-            f"at {path}")
+            if ups_empty:
+                return hits, key_join, None
+            _require_partition_cols(ups, snap.partition_by)
+            return hits, key_join, ups
+        return _commit_rows(spark, path, "apply_changes", "apply", key,
+                            derive, dv=n_keys <= MERGE_KEYS_COLLECT_MAX)
     finally:
         feed.unpersist()
 
@@ -1753,21 +1740,11 @@ def compact(spark: SparkSession, path: str, *, key: str,
     for _ in range(MERGE_MAX_ATTEMPTS):
         snap = snapshot(path)
         if partition_filter:
-            bad = [c for c in partition_filter
-                   if c not in (snap.partition_by or ())]
-            if bad:
-                raise ValueError(
-                    f"compact: partition_filter names {bad}, not "
-                    f"partition columns (partitioned by "
-                    f"{snap.partition_by})")
-            types = _pv_types(
-                StructType.fromJson(json.loads(snap.schema_json)),
-                list(partition_filter))
-            scope = {
-                n: s for n, s in snap.files.items()
-                if all(c in (s.get("pv") or {})
-                       and _pv_decode(s["pv"][c], types[c]) == v
-                       for c, v in partition_filter.items())}
+            in_part = _in_partitions(
+                snap, partition_filter,
+                "compact: partition_filter names {bad}, not partition "
+                "columns (partitioned by {by})")
+            scope = {n: s for n, s in snap.files.items() if in_part(s)}
         else:
             scope = snap.files
         has_dv = any(s.get("dv") for s in scope.values())
@@ -1847,66 +1824,15 @@ def _envelope_hits(stats: dict, lo, hi) -> bool:
 def delete_range(spark: SparkSession, path: str, *, key,
                  lo, hi) -> Snapshot:
     """DELETE WHERE ``lo <= key < hi`` — the DELETE verb of the format,
-    with the same footer-stats data skipping as :func:`merge`: only
-    files whose [kmin, kmax] interval intersects [lo, hi) are rewritten
-    (their surviving rows re-staged); disjoint files carry over by log
-    reference alone.  At 100 TB a range delete (GDPR erasure of an id
-    range, retention drop of an old key band) touches the handful of
-    files holding the range, never the table.  Optimistic concurrency
-    as in merge: a lost version race re-derives from the fresh
-    snapshot."""
-    pred = lambda df: df.filter((F.col(key) >= F.lit(lo))   # noqa: E731
-                                & (F.col(key) < F.lit(hi)))
-    for _ in range(MERGE_MAX_ATTEMPTS):
-        snap = snapshot(path)
-        touched = sorted(n for n, s in snap.files.items()
-                         if _range_hits(s, lo, hi))
-        if not touched:
-            return snap                       # statically nothing to do
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        # merge-on-read first: a sparse erasure (one id band in a
-        # 100 TB table) commits bitmaps, zero data rewrite
-        dv_actions, fold, _ = _compute_dv(spark, path, snap, touched,
-                                          pred, key)
-        if dv_actions is not None:
-            adds = []
-            if fold:
-                live = _read_files(spark, path, schema, fold,
-                                   snap.files, snap.colmap,
-                                   snap.partition_by)
-                adds = _stage_data_files(
-                    spark, live.filter(~((F.col(key) >= F.lit(lo))
-                                         & (F.col(key) < F.lit(hi)))),
-                    path, key, snap.version + 1, snap.colmap,
-                    snap.partition_by)
-            payload = {"op": "delete", "add": adds, "remove": fold}
-            if dv_actions:
-                payload["dv"] = dv_actions
-            if not dv_actions and not fold:
-                return snap     # footer false positive: nothing to do
-        else:
-            old = _read_files(spark, path, schema, touched, snap.files,
-                              snap.colmap, snap.partition_by)
-            kept = old.filter(~((F.col(key) >= F.lit(lo))
-                                & (F.col(key) < F.lit(hi))))
-            adds = _stage_data_files(spark, kept, path, key,
-                                     snap.version + 1, snap.colmap,
-                                     snap.partition_by)
-            payload = {"op": "delete", "add": adds, "remove": touched}
-        v = snap.version + 1
-        for _ in range(MERGE_MAX_ATTEMPTS * 8):
-            if _try_commit(path, v, payload):
-                return snapshot(path, v)
-            nxt = snapshot(path)
-            if not _rewrite_unaffected(
-                    snap, nxt, touched,
-                    lambda s: _range_hits(s, lo, hi)):
-                break                         # real conflict: re-derive
-            snap = nxt
-            v = max(v + 1, nxt.version + 1)
-        _drop_files(path, adds)
-    raise CommitConflictError(
-        f"delete lost {MERGE_MAX_ATTEMPTS} commit races at {path}")
+    one :func:`_commit_rows` commit: only files whose [kmin, kmax]
+    interval intersects [lo, hi) are touched; disjoint files carry
+    over by log reference alone.  At 100 TB a range delete (GDPR
+    erasure of an id range, retention drop of an old key band) touches
+    the handful of files holding the range, never the table."""
+    join = _pred_join((F.col(key) >= F.lit(lo)) & (F.col(key) < F.lit(hi)))
+    def hits(s): return _range_hits(s, lo, hi)
+    return _commit_rows(spark, path, "delete", "delete", key,
+                        lambda snap: (hits, join, None))
 
 
 def _filters_pred(filters: list[tuple[str, str, object]]):
@@ -1926,30 +1852,6 @@ def _filters_pred(filters: list[tuple[str, str, object]]):
                             [ops[o](c, v) for c, o, v in filters])
 
 
-def _snap_file_hits(snap: Snapshot,
-                    filters: list[tuple[str, str, object]]):
-    """Per-file can-match closure for ``filters`` under ``snap``'s
-    schema — partition values first (exact), then footer intervals;
-    used both for the touched set and for logical conflict detection
-    on retry."""
-    pcols = set(snap.partition_by or ())
-    types = {}
-    if pcols and snap.schema_json:
-        types = _pv_types(
-            StructType.fromJson(json.loads(snap.schema_json)),
-            list(pcols))
-    part = [(c, o, v) for c, o, v in filters if c in pcols]
-    rest = [(_phys_name(snap.colmap, c), o, v)
-            for c, o, v in filters if c not in pcols]
-
-    def hits(stats: dict) -> bool:
-        return (all(_pv_hit(stats, c, o, v, types[c])
-                    for c, o, v in part)
-                and all(_interval_hit(stats, c, o, v)
-                        for c, o, v in rest))
-    return hits
-
-
 def update_where(spark: SparkSession, path: str, *, key: str,
                  filters: list[tuple[str, str, object]],
                  assignments: dict[str, object]) -> Snapshot:
@@ -1963,18 +1865,13 @@ def update_where(spark: SparkSession, path: str, *, key: str,
     maps column → new value (a Column, or a SQL expression string
     evaluated per row — old column values referencable).
 
-    Merge-on-read: matched rows are DELETION-VECTORED in place and the
-    updated row versions stage as new files — rewrite bytes ∝ updated
-    ROWS (files whose cumulative DV crosses the fold cap rewrite, as
-    everywhere).  Wide updates past the DV collect cap fall back to
-    copy-on-write.  The merge key cannot be assigned (key identity is
-    what CDC/merge semantics are built on — re-keying is a
-    merge/delete+insert, not an update).  Constraints and the retype
-    guard validate the UPDATED rows before anything commits; the
-    change feed classifies the result as update_preimage/postimage
-    pairs with no stored change column.  Optimistic concurrency: lost
-    claims retry claim-only while the winner is logically disjoint
-    (_rewrite_unaffected), else re-derive."""
+    Through :func:`_commit_rows`, the matched rows are the hits and
+    their updated versions are what the commit inserts.  The merge key
+    cannot be assigned (key identity is what CDC/merge semantics are
+    built on — re-keying is a merge/delete+insert, not an update).
+    Constraints and the retype guard validate the UPDATED rows before
+    anything commits; the change feed classifies the result as
+    update_preimage/postimage pairs with no stored change column."""
     if not filters:
         raise ValueError("update_where: empty filters would rewrite "
                          "the whole table; pass an explicit "
@@ -1983,19 +1880,9 @@ def update_where(spark: SparkSession, path: str, *, key: str,
         raise ValueError(
             f"update_where: cannot assign the merge key {key!r} — "
             f"re-keying rows is a merge/delete+insert, not an update")
-    pred = _filters_pred(filters)
+    join = _pred_join(_filters_pred(filters))
 
-    def assign(df: DataFrame) -> DataFrame:
-        # ONE projection for all assignments so every expression sees
-        # the PRE-update row (SQL/Delta UPDATE semantics: {'a': col
-        # ('b'), 'b': col('a')} swaps; sequential withColumn would
-        # feed later assignments the NEW values — ADVICE r14).
-        return df.withColumns(
-            {c: (F.expr(v) if isinstance(v, str) else v)
-             for c, v in assignments.items()})
-
-    for _ in range(MERGE_MAX_ATTEMPTS):
-        snap = snapshot(path)
+    def derive(snap: Snapshot):
         schema = StructType.fromJson(json.loads(snap.schema_json))
         logged = {f.name for f in schema.fields}
         bad = [c for c in assignments if c not in logged]
@@ -2003,122 +1890,41 @@ def update_where(spark: SparkSession, path: str, *, key: str,
             raise ValueError(
                 f"update_where: assignment targets {bad} not in the "
                 f"table schema (have {sorted(logged)})")
-        hits = _snap_file_hits(snap, filters)
-        touched = sorted(n for n, s in snap.files.items()
-                         if hits(s))
-        if not touched:
-            return snap                   # statically nothing matches
-        dv_actions, fold, dead_hit = _compute_dv(
-            spark, path, snap, touched, lambda df: df.filter(pred), key)
-        # the touched files through their DV mask — or, when no
-        # matching row was dead already, without it (an empty stats
-        # map): the raw matches ARE the live ones then, and the
-        # per-row mask is saved.  Copy-on-write keeps every live row,
-        # so it always reads masked.
-        masked = dv_actions is None or dead_hit
-        src = _read_files(spark, path, schema, touched,
-                          snap.files if masked else {}, snap.colmap,
-                          snap.partition_by)
-        updated = assign(src.filter(pred)).select(
-            *[f.name for f in schema.fields])
-        _check_types(snap, updated, "update_where")
-        _check_constraints(snap, updated, "update_where")
-        if dv_actions is not None:
-            if not dv_actions and not fold:
-                return snap   # footer false positive: nothing matches
-            adds = []
-            if fold:
-                flive = _read_files(spark, path, schema, fold,
-                                    snap.files, snap.colmap,
-                                    snap.partition_by)
-                adds += _stage_data_files(
-                    spark, flive.filter(~pred), path, key,
-                    snap.version + 1, snap.colmap, snap.partition_by)
-            adds += _stage_data_files(spark, updated, path, key,
-                                      snap.version + 1, snap.colmap,
-                                      snap.partition_by)
-            payload = {"op": "update", "add": adds, "remove": fold}
-            if dv_actions:
-                payload["dv"] = dv_actions
-        else:
-            merged = src.filter(~pred).unionByName(updated)
-            adds = _stage_data_files(spark, merged, path, key,
-                                     snap.version + 1, snap.colmap,
-                                     snap.partition_by)
-            payload = {"op": "update", "add": adds, "remove": touched}
-        v = snap.version + 1
-        for _ in range(MERGE_MAX_ATTEMPTS * 8):
-            if _try_commit(path, v, payload):
-                return snapshot(path, v)
-            nxt = snapshot(path)
-            if not _rewrite_unaffected(snap, nxt, touched, hits):
-                break                     # real conflict: re-derive
-            snap = nxt
-            v = max(v + 1, nxt.version + 1)
-        _drop_files(path, adds)
-    raise CommitConflictError(
-        f"update_where lost {MERGE_MAX_ATTEMPTS} commit races at "
-        f"{path}")
+
+        def updated(hit: DataFrame) -> DataFrame:
+            # ONE projection for all assignments so every expression
+            # sees the PRE-update row (SQL/Delta UPDATE semantics:
+            # {'a': col('b'), 'b': col('a')} swaps; sequential
+            # withColumn would feed later assignments the NEW values —
+            # ADVICE r14).
+            out = hit.withColumns(
+                {c: (F.expr(v) if isinstance(v, str) else v)
+                 for c, v in assignments.items()}).select(
+                *[f.name for f in schema.fields])
+            _check_types(snap, out, "update_where")
+            _check_constraints(snap, out, "update_where")
+            return out
+        return _snap_file_hits(snap, filters), join, updated
+    return _commit_rows(spark, path, "update_where", "update", key,
+                        derive)
 
 
 def delete_where(spark: SparkSession, path: str, *, key: str,
                  filters: list[tuple[str, str, object]]) -> Snapshot:
     """``DELETE WHERE`` over an arbitrary (col, op, literal)
     conjunction (r14 — Delta's predicate DELETE; :func:`delete_range`
-    remains the key-range fast form).  Same physics as
-    :func:`update_where` minus the assignments: conjunction-pruned
-    file selection (partition values first, then footer intervals),
-    merge-on-read deletion vectors for sparse hits with fold/copy-on-
-    write fallbacks, CDC classifies plain deletes, claim-only retries
-    while the winner is logically disjoint."""
+    remains the key-range fast form): :func:`update_where` minus the
+    assignments — conjunction-pruned file selection (partition values
+    first, then footer intervals), one :func:`_commit_rows` commit
+    with no rows inserted; CDC classifies plain deletes."""
     if not filters:
         raise ValueError("delete_where: empty filters would delete "
                          "the whole table; pass an explicit "
                          "conjunction")
-    pred = _filters_pred(filters)
-    for _ in range(MERGE_MAX_ATTEMPTS):
-        snap = snapshot(path)
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        hits = _snap_file_hits(snap, filters)
-        touched = sorted(n for n, s in snap.files.items() if hits(s))
-        if not touched:
-            return snap                   # statically nothing matches
-        dv_actions, fold, _ = _compute_dv(
-            spark, path, snap, touched, lambda df: df.filter(pred), key)
-        if dv_actions is not None:
-            if not dv_actions and not fold:
-                return snap   # footer false positive: nothing matches
-            adds = []
-            if fold:
-                live = _read_files(spark, path, schema, fold,
-                                   snap.files, snap.colmap,
-                                   snap.partition_by)
-                adds = _stage_data_files(
-                    spark, live.filter(~pred), path, key,
-                    snap.version + 1, snap.colmap, snap.partition_by)
-            payload = {"op": "delete", "add": adds, "remove": fold}
-            if dv_actions:
-                payload["dv"] = dv_actions
-        else:
-            old = _read_files(spark, path, schema, touched, snap.files,
-                              snap.colmap, snap.partition_by)
-            adds = _stage_data_files(spark, old.filter(~pred), path,
-                                     key, snap.version + 1,
-                                     snap.colmap, snap.partition_by)
-            payload = {"op": "delete", "add": adds, "remove": touched}
-        v = snap.version + 1
-        for _ in range(MERGE_MAX_ATTEMPTS * 8):
-            if _try_commit(path, v, payload):
-                return snapshot(path, v)
-            nxt = snapshot(path)
-            if not _rewrite_unaffected(snap, nxt, touched, hits):
-                break                     # real conflict: re-derive
-            snap = nxt
-            v = max(v + 1, nxt.version + 1)
-        _drop_files(path, adds)
-    raise CommitConflictError(
-        f"delete_where lost {MERGE_MAX_ATTEMPTS} commit races at "
-        f"{path}")
+    join = _pred_join(_filters_pred(filters))
+    return _commit_rows(
+        spark, path, "delete_where", "delete", key,
+        lambda snap: (_snap_file_hits(snap, filters), join, None))
 
 
 def drop_partition(spark: SparkSession, path: str, *,
@@ -2139,18 +1945,10 @@ def drop_partition(spark: SparkSession, path: str, *,
             raise ValueError(
                 f"drop_partition: table at {path} is not partitioned "
                 f"(use delete_range for key-range erasure)")
-        bad = [c for c in values if c not in snap.partition_by]
-        if bad:
-            raise ValueError(
-                f"drop_partition: {bad} are not partition columns "
-                f"(partitioned by {snap.partition_by})")
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        types = _pv_types(schema, list(values))
-        removes = sorted(
-            n for n, s in snap.files.items()
-            if all(c in (s.get("pv") or {})
-                   and _pv_decode(s["pv"][c], types[c]) == v
-                   for c, v in values.items()))
+        in_part = _in_partitions(
+            snap, values, "drop_partition: {bad} are not partition "
+            "columns (partitioned by {by})")
+        removes = sorted(n for n, s in snap.files.items() if in_part(s))
         if not removes:
             return snap                   # nothing lives there
         if _try_commit(path, snap.version + 1,

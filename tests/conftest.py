@@ -7,7 +7,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from docker_aktin_dwh_spark.session import build_session  # noqa: E402
+from docker_aktin_dwh_spark.session import (build_session,  # noqa: E402
+                                            default_parallelism)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
@@ -36,10 +37,10 @@ def scale_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def spark():
-    # 28 local cores / 14 sweep threads (was 16/8): the suite grew past
-    # the 6-minute guard in r7 (623 tests) and the VM has 32 cores —
-    # widening beyond this measured no further gain (saturated)
-    s = build_session(app_name="tests", cpus=28, shuffle_partitions=8)
+    # local cores (and sweep threads) from SPARK_GRAFT_CPUS, the
+    # machine's core count: a fixed 28 let the JVM and its Python
+    # workers outgrow a 4-core, 16 GB machine, which killed the JVM
+    s = build_session(app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
 
@@ -64,7 +65,7 @@ def _cost_rank(key: str) -> int:
     return len(_SLOW_FIRST)
 
 
-def pooled_key_results(request, keys, run, max_workers=28):
+def pooled_key_results(request, keys, run):
     """Per-key sweep jobs through a thread pool, restricted to the keys
     whose parametrized tests were actually collected in this session —
     `-k some_key` computes one key, a full module run still gets pool
@@ -83,5 +84,5 @@ def pooled_key_results(request, keys, run, max_workers=28):
             selected.add(cs.params["key"])
     todo = [k for k in keys if k in selected] if selected else list(keys)
     todo.sort(key=_cost_rank)
-    with ThreadPoolExecutor(max_workers=max_workers) as ex:
+    with ThreadPoolExecutor(max_workers=default_parallelism()) as ex:
         return dict(zip(todo, ex.map(run, todo)))

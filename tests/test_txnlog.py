@@ -779,67 +779,106 @@ def test_merge_wide_batch_envelope_pruning(spark, tdir, monkeypatch):
     assert got[5] == "a5" and got[25] == "b25" and got[350] == "a350"
 
 
-def test_merge_disjoint_race_reclaims_without_restaging(spark, tdir,
-                                                        monkeypatch):
-    """Logical conflict detection (r13): a merge that loses its
-    version race to a DISJOINT append must NOT re-read and re-stage —
-    commits are deltas, so the staged output stays valid verbatim and
-    only the claim retries (Delta's conflict rule; what lets a merge
-    land under append churn instead of starving).  A winner that
-    TOUCHES the merge's files (overlapping keys → DV change) must
-    force a full re-derive, and the result must still be exact."""
+#: each row-level verb over the key band [lo, hi) with tag ``t``: the
+#: call, the op tag its commit carries, and its effect on {k: v}
+_RACE_VERBS = {
+    "merge": (
+        lambda spark, tdir, lo, hi, t: txnlog.merge(
+            spark, tdir, _mk(spark, lo, hi, tag=t), key="k"),
+        "merge",
+        lambda got, lo, hi, t: got.update(
+            {k: f"{t}{k}" for k in range(lo, hi)})),
+    "apply_changes": (
+        lambda spark, tdir, lo, hi, t: txnlog.apply_changes(
+            spark, tdir, _mk(spark, lo, hi, tag=t).withColumn(
+                "op", F.when(F.col("k") < lo + 6, "update")
+                .otherwise("delete")), key="k"),
+        "apply",
+        lambda got, lo, hi, t: [
+            got.update({k: f"{t}{k}"}) if k < lo + 6 else got.pop(k, None)
+            for k in range(lo, hi)]),
+    "update_where": (
+        lambda spark, tdir, lo, hi, t: txnlog.update_where(
+            spark, tdir, key="k", filters=[("k", ">=", lo), ("k", "<", hi)],
+            assignments={"v": F.concat(F.lit(t),
+                                       F.col("k").cast("string"))}),
+        "update",
+        lambda got, lo, hi, t: got.update(
+            {k: f"{t}{k}" for k in range(lo, hi) if k in got})),
+    "delete_where": (
+        lambda spark, tdir, lo, hi, t: txnlog.delete_where(
+            spark, tdir, key="k", filters=[("k", ">=", lo), ("k", "<", hi)]),
+        "delete",
+        lambda got, lo, hi, t: [got.pop(k, None) for k in range(lo, hi)]),
+    "delete_range": (
+        lambda spark, tdir, lo, hi, t: txnlog.delete_range(
+            spark, tdir, key="k", lo=lo, hi=hi),
+        "delete",
+        lambda got, lo, hi, t: [got.pop(k, None) for k in range(lo, hi)]),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_RACE_VERBS))
+def test_disjoint_race_reclaims_without_restaging(spark, tdir, monkeypatch,
+                                                  verb):
+    """Logical conflict detection (r13), the same for every row-level
+    verb: a verb that loses its version race to a DISJOINT append must
+    NOT re-read and re-stage — commits are deltas, so the staged output
+    stays valid verbatim and only the claim retries (Delta's conflict
+    rule; what lets a write land under append churn instead of
+    starving).  A winner that TOUCHES the verb's files (overlapping
+    keys → DV change) must force a full re-derive, and the result must
+    still be exact."""
+    run, op, effect = _RACE_VERBS[verb]
     df = _mk(spark, 0, 400).repartitionByRange(4, "k")
     txnlog.create_table(spark, df, tdir, key="k")
+    want = {k: f"a{k}" for k in range(400)}
 
-    stages = {"n": 0}
-    real_stage = txnlog._stage_data_files
+    derives = {"n": 0}
+    real_dv = txnlog._compute_dv
+    state = {"interfered": False, "winner": False}
 
-    def counting_stage(*a, **kw):
-        stages["n"] += 1
-        return real_stage(*a, **kw)
+    def counting_dv(*a, **kw):
+        derives["n"] += not state["winner"]
+        return real_dv(*a, **kw)
 
     real_commit = txnlog._try_commit
-    state = {"interfered": False}
 
-    def interfering_commit(path, version, payload):
-        if payload.get("op") == "merge" and not state["interfered"]:
-            state["interfered"] = True
-            # a DISJOINT append (keys 500+) steals the version first
-            txnlog.append(spark, _mk(spark, 500, 520, tag="x"),
-                          tdir, key="k")
-            return real_commit(path, version, payload)  # loses: taken
-        return real_commit(path, version, payload)
-
-    monkeypatch.setattr(txnlog, "_stage_data_files", counting_stage)
-    monkeypatch.setattr(txnlog, "_try_commit", interfering_commit)
-    txnlog.merge(spark, tdir, _mk(spark, 10, 20, tag="m"), key="k")
-    # one staging round for the merge + one for the interfering append
-    assert stages["n"] == 2, (
-        f"disjoint race must reuse the staged files (got "
-        f"{stages['n']} staging rounds)")
-    got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
-    assert len(got) == 420 and got[15] == "m15" and got[510] == "x510"
-
-    # overlapping winner: the second merge DVs the same file our merge
-    # read — must re-derive (extra staging), result still exact
-    stages["n"] = 0
-    state["interfered"] = False
-
-    def overlapping_commit(path, version, payload):
-        if payload.get("op") == "merge" and not state["interfered"]:
-            state["interfered"] = True
-            txnlog.merge(spark, tdir, _mk(spark, 12, 14, tag="w"),
-                         key="k")
+    def racing(winner):
+        def commit(path, version, payload):
+            if payload.get("op") == op and not state["interfered"]:
+                state["interfered"] = state["winner"] = True
+                winner()                    # steals the version first
+                state["winner"] = False
             return real_commit(path, version, payload)
-        return real_commit(path, version, payload)
+        return commit
 
-    monkeypatch.setattr(txnlog, "_try_commit", overlapping_commit)
-    txnlog.merge(spark, tdir, _mk(spark, 10, 20, tag="z"), key="k")
-    assert stages["n"] >= 3, "overlapping race must re-derive"
+    monkeypatch.setattr(txnlog, "_compute_dv", counting_dv)
+    monkeypatch.setattr(txnlog, "_try_commit", racing(
+        lambda: txnlog.append(spark, _mk(spark, 500, 520, tag="x"),
+                              tdir, key="k")))
+    run(spark, tdir, 10, 20, "m")
+    assert derives["n"] == 1, (
+        f"disjoint race must reuse the staged commit (got "
+        f"{derives['n']} derive rounds)")
+    want.update({k: f"x{k}" for k in range(500, 520)})
+    effect(want, 10, 20, "m")
     got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
-    assert len(got) == 420
-    assert all(got[k] == f"z{k}" for k in range(10, 20)), \
-        "the LAST merge's rows must win after the re-derive"
+    assert got == want
+
+    # overlapping winner: a merge DVs the same file this verb read —
+    # must re-derive, and the verb's effect lands on the winner's rows
+    derives["n"] = 0
+    state["interfered"] = False
+    monkeypatch.setattr(txnlog, "_try_commit", racing(
+        lambda: txnlog.merge(spark, tdir, _mk(spark, 32, 35, tag="w"),
+                             key="k")))
+    run(spark, tdir, 30, 40, "z")
+    assert derives["n"] >= 2, "overlapping race must re-derive"
+    want.update({k: f"w{k}" for k in range(32, 35)})
+    effect(want, 30, 40, "z")
+    got = {r.k: r.v for r in txnlog.read_table(spark, tdir).collect()}
+    assert got == want
 
 
 def _body_append_txn_idempotency(spark, tdir):
@@ -3613,7 +3652,7 @@ def test_row_level_verbs_job_counts(spark, tdir):
     IN list, the staging write), update_where 2 (the DV hit scan and
     the staging write — the re-read is unmasked when no hit row was
     dead already, and its DV mask runs no job when one was),
-    delete_where 1.  Batches are one
+    delete_where and delete_range 1.  Batches are one
     partition each: Spark's limit collect runs one job per scale-up
     round over a batch's partitions."""
     txnlog.create_table(spark, _mk(spark, 0, 4000)
@@ -3649,6 +3688,11 @@ def test_row_level_verbs_job_counts(spark, tdir):
     assert got[5001] == "i5001" and got[302] == "A302" \
         and got[305] == "a305" and 501 not in got
     assert got[498] == "A498" and got[504] == "A504" and got[505] == "a505"
+    n = _job_ids(spark, lambda: txnlog.delete_range(
+        spark, tdir, key="k", lo=700, hi=703))
+    assert len(n) == 1, n
+    assert txnlog.read_table(spark, tdir).filter(
+        "k >= 698 AND k < 705").count() == 4
 
 
 def test_dv_masked_read_and_compact_job_counts(spark, tdir):
@@ -3766,6 +3810,19 @@ def test_apply_changes_delete_only_partitioned_stages_nothing(
     assert snap.version == 1
     assert {r.k for r in txnlog.read_table(spark, tdir).collect()} \
         == set(range(100)) - {10, 11, 12, 13}
+
+
+def test_apply_changes_delete_only_no_match_commits_nothing(spark, tdir):
+    """A key-only delete feed whose keys no file holds changes nothing:
+    on a partitioned table it returns the current snapshot instead of
+    staging the feed (which lacks the partition column and raised)."""
+    txnlog.create_table(spark, _mkp(spark, 0, 100), tdir, key="k",
+                        partition_by=["region"])
+    dels = spark.range(5000, 5004).coalesce(1).select(
+        F.col("id").alias("k"), F.lit("delete").alias("op"))
+    snap = txnlog.apply_changes(spark, tdir, dels, key="k")
+    assert snap.version == 0
+    assert txnlog.read_table(spark, tdir).count() == 100
 
 
 def test_apply_changes_wide_feed_envelope_pruning(spark, tdir,
@@ -4147,3 +4204,67 @@ def test_dv_mask_arm_follows_scan_size(spark, tdir, monkeypatch):
     assert txnlog.table_changes(spark, tdir, v0, v0 + 1,
                                 key="k").count() == 3
     assert seen == [(1, 200), (1, dv_rows)]
+
+
+@pytest.mark.parametrize("flt, sql", [
+    (("k", ">", 100.0), "k > 100.0"),
+    (("k", ">=", 100.0), "k >= 100.0"),
+    (("k", "=", float("nan")), "k = double('NaN')"),
+    (("k", "<", float("nan")), "k < double('NaN')"),
+    (("k", "<=", float("nan")), "k <= double('NaN')"),
+    (("k", "in", [float("nan")]), "k IN (double('NaN'))"),
+], ids=["gt", "ge", "eq_nan", "lt_nan", "le_nan", "in_nan"])
+def test_nan_rows_survive_file_pruning(spark, tdir, flt, sql):
+    """A pyarrow-written file leaves NaN out of a double column's
+    footer [min, max] ({0.0, 1.0, NaN, 9.0} logs [-0.0, 9.0]), while
+    Spark orders NaN above every number and equal to itself.  File
+    pruning must keep every file a NaN row could match: read_table
+    with ``filters``, delete_where and update_where agree with a plain
+    Spark filter over the same file.  Parquet filter pushdown is off
+    here: with it, the parquet reader's own row-group check drops the
+    NaN row under ``>``, ``=`` and ``IN`` by the same footer bounds,
+    before any txnlog code runs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (DoubleType, LongType, StructField,
+                                   StructType)
+
+    name = "p-0-0-nan.parquet"
+    schema = StructType([StructField("id", LongType()),
+                         StructField("k", DoubleType())])
+
+    def build(path):
+        os.makedirs(os.path.join(path, "_txnlog"))
+        f = os.path.join(path, name)
+        pq.write_table(pa.table({
+            "id": pa.array([0, 1, 2, 3], pa.int64()),
+            "k": pa.array([0.0, 1.0, float("nan"), 9.0], pa.float64())}), f)
+        add = {"file": name, **txnlog._file_stats(f, "id")}
+        assert txnlog._try_commit(path, 0, {
+            "op": "create", "key": "id", "add": [add], "remove": [],
+            "schema": schema.json()})
+        return f
+
+    pushdown = "spark.sql.parquet.filterPushdown"
+    spark.conf.set(pushdown, "false")
+    try:
+        f = build(tdir)
+        want = {r.id for r in spark.read.parquet(f).filter(sql).collect()}
+        assert want, "every case matches at least one row"
+        got = txnlog.read_table(spark, tdir, filters=[flt]).filter(sql)
+        assert {r.id for r in got.collect()} == want
+
+        dpath = tdir + "_del"
+        build(dpath)
+        txnlog.delete_where(spark, dpath, key="id", filters=[flt])
+        assert {r.id for r in txnlog.read_table(spark, dpath).collect()} \
+            == {0, 1, 2, 3} - want
+
+        upath = tdir + "_upd"
+        build(upath)
+        txnlog.update_where(spark, upath, key="id", filters=[flt],
+                            assignments={"k": F.lit(-1.0)})
+        assert {r.id for r in txnlog.read_table(spark, upath).collect()
+                if r.k == -1.0} == want
+    finally:
+        spark.conf.unset(pushdown)
