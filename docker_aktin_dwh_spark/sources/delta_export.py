@@ -316,19 +316,24 @@ def _widened_columns(path: str, snap) -> dict[str, tuple[str, str]]:
     {physical column name: (narrowest from-type, logged to-type)}.
     r13 refused to export these; r14 declares them through Delta's
     ``typeWidening`` table feature + ``delta.typeChanges`` field
-    metadata instead (VERDICT r13 item 4).  Footer reads only; files
-    pyarrow cannot open are skipped conservatively."""
+    metadata instead (VERDICT r13 item 4).  Footer reads only; a live
+    file pyarrow cannot open raises, naming the file — skipping it
+    could export a widened column without its typeChanges."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
+    logical = StructType.fromJson(json.loads(snap.schema_json))
     try:
-        logical = StructType.fromJson(json.loads(snap.schema_json))
         expect = to_arrow_schema(
             txnlog._phys_schema(logical, snap.colmap))
-    except Exception:
+    except PySparkTypeError:
+        # a column Arrow has no type for (YearMonthIntervalType,
+        # CalendarIntervalType): none of the widening matrix's
+        # numeric types can be compared, so nothing is widened
         return {}
-    import pyarrow as pa
 
     def in_matrix(t) -> bool:
         # only the types the widening matrix covers — comparing e.g.
@@ -340,10 +345,12 @@ def _widened_columns(path: str, snap) -> dict[str, tuple[str, str]]:
     want = {f.name: f.type for f in expect}
     out: dict[str, tuple[str, str]] = {}
     for name in sorted(snap.files):
+        fpath = os.path.join(path, name)
         try:
-            got = pq.ParquetFile(os.path.join(path, name)).schema_arrow
-        except Exception:
-            continue
+            got = pq.ParquetFile(fpath).schema_arrow
+        except (pa.ArrowException, OSError) as e:
+            raise ValueError(f"export: cannot read the footer of live "
+                             f"file {fpath}: {e}") from e
         for f in got:
             w = want.get(f.name)
             if w is not None and in_matrix(w) and f.type != w:

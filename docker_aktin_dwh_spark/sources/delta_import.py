@@ -2,19 +2,20 @@
 
 VERDICT r14 item 1: the interop story was export + own-reader
 differential — one-directional.  This module closes the other
-direction: it replays a foreign ``_delta_log`` (JSON commits, seeded
-from ``N.checkpoint.parquet`` via ``_last_checkpoint`` when present)
-per the PUBLIC Delta transaction-log protocol (delta-io/delta
-PROTOCOL.md), reconciles file actions by the spec's (path, deletion-
-vector uniqueId) key, and materializes a txnlog table: hardlinked data
-files (hive ``col=value`` layout rebuilt from the log's
-``partitionValues`` — Delta does not require a layout, txnlog's
-partition scan does), decoded deletion vectors (inline "i" and on-disk
-"u" storage, array/bitmap/run containers), column-mapping mode "name"
-as txnlog's colmap, ``delta.typeChanges`` tables as a wide logged
-schema over physically-narrow files (txnlog's read path widens at
-scan time), and one txn commit per application id so exactly-once
-sinks keep their idempotence across the import.
+direction: it takes a foreign ``_delta_log``'s replayed state from
+the shared Delta-log reader (sources/deltastream: checkpoint seeding,
+commit listing and parsing, the reader-protocol gate, file actions
+reconciled by (path, deletion-vector uniqueId)) and materializes a
+txnlog table: hardlinked data files (hive ``col=value`` layout rebuilt
+from the log's ``partitionValues`` via ``logcore.pv_frag`` — Delta
+does not require a layout, txnlog's partition scan does), decoded
+deletion vectors (inline "i" and on-disk "u" storage,
+array/bitmap/run containers), column-mapping mode "name" as txnlog's
+colmap, ``delta.typeChanges`` tables as a wide logged schema over
+physically-narrow files (txnlog's read path widens at scan time), and
+one txn commit per application id so exactly-once sinks keep their
+idempotence across the import.  :func:`sync_delta_log` replicates the
+foreign commits after the import through the same reader.
 
 The conformance matrix in tests/test_delta_conformance.py drives this
 importer over GOLDEN FOREIGN FIXTURES — Delta logs authored by hand
@@ -38,15 +39,16 @@ import os
 import struct
 import uuid as _uuid
 import zlib
-import re as _re
 from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 from . import txnlog
-from .logcore import pv_frag
 from .delta_export import _Z85
+from .deltastream import (check_protocol, commit_versions, read_commit,
+                          replay_delta_log)
+from .logcore import pv_frag
 
 _Z85_REV = {c: i for i, c in enumerate(_Z85)}
 
@@ -61,13 +63,6 @@ def _z85_decode(s: str, true_len: int) -> bytes:
             v = v * 85 + _Z85_REV[c]
         out += v.to_bytes(4, "big")
     return bytes(out[:true_len])
-
-
-#: exact commit-file shape — V2 checkpoints
-#: (<v>.checkpoint.<uuid>.json) and compacted logs
-#: (<s>.<e>.compact.json) also end in .json with digit prefixes and
-#: must NOT parse as commit versions
-_COMMIT_NAME = _re.compile(r"\d{20}\.json")
 
 
 # --------------------------------------------------- DV decode (import)
@@ -187,129 +182,6 @@ def _dv_to_ranges(desc: dict, src: str) -> list[list[int]]:
         else:
             ranges.append([v, v])
     return ranges
-
-
-# ------------------------------------------------------- log replay
-
-def _dv_uid(dv: dict | None) -> str | None:
-    """PROTOCOL.md uniqueId — file actions reconcile on (path, this)."""
-    if not dv or not dv.get("storageType"):
-        return None
-    uid = dv["storageType"] + dv["pathOrInlineDv"]
-    if dv.get("offset"):
-        uid += f"@{dv['offset']}"
-    return uid
-
-
-def _norm_map(m) -> dict:
-    if m is None:
-        return {}
-    return m if isinstance(m, dict) else dict(m)
-
-
-def replay_delta_log(src: str, version: int | None = None
-                     ) -> tuple[dict, dict, dict, dict]:
-    """Replay ``src``'s _delta_log → (live adds by (path, dvId),
-    metaData, protocol, txns).  Seeds from the newest checkpoint at or
-    below ``version`` when ``_last_checkpoint`` exists — a foreign
-    table whose older JSON commits were vacuumed away replays only
-    from the checkpoint, exactly like Delta's own readers."""
-    log_dir = os.path.join(src, "_delta_log")
-    live: dict = {}
-    meta = protocol = None
-    txns: dict[str, int] = {}
-    start = 0
-    lc = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(lc):
-        with open(lc) as f:
-            v = json.load(f)["version"]
-        if version is None or v <= version:
-            import pyarrow.parquet as pq
-            rows = pq.read_table(os.path.join(
-                log_dir, f"{v:020d}.checkpoint.parquet")).to_pylist()
-            for row in rows:
-                if row.get("add"):
-                    a = {k: v2 for k, v2 in row["add"].items()
-                         if v2 is not None}
-                    a["partitionValues"] = _norm_map(
-                        row["add"].get("partitionValues"))
-                    dv = a.get("deletionVector")
-                    if dv is not None and not dv.get("storageType"):
-                        a.pop("deletionVector")
-                        dv = None
-                    live[(a["path"], _dv_uid(dv))] = a
-                elif row.get("remove"):
-                    r = row["remove"]
-                    live.pop((r["path"],
-                              _dv_uid(r.get("deletionVector"))), None)
-                elif row.get("metaData"):
-                    m = dict(row["metaData"])
-                    m["configuration"] = _norm_map(
-                        m.get("configuration"))
-                    meta = m
-                elif row.get("protocol"):
-                    protocol = {k: v2
-                                for k, v2 in row["protocol"].items()
-                                if v2 is not None}
-                elif row.get("txn"):
-                    t = row["txn"]
-                    txns[t["appId"]] = t["version"]
-            start = v + 1
-    commits = sorted(n for n in os.listdir(log_dir)
-                     if _COMMIT_NAME.fullmatch(n)
-                     and int(n[:20]) >= start
-                     and (version is None or int(n[:20]) <= version))
-    got = [int(n[:20]) for n in commits]
-    target = version if version is not None \
-        else (got[-1] if got else start - 1)
-    required = list(range(start, target + 1))
-    if got != required:
-        # version above the latest commit, below a checkpoint whose
-        # older commits were log-cleaned, or a hole in the run —
-        # replaying a non-contiguous prefix silently drops actions
-        missing = sorted(set(required) - set(got))[:5]
-        raise ValueError(
-            f"delta log at {log_dir} cannot replay version "
-            f"{target}: missing commit(s) {missing} "
-            f"(checkpoint seed at {start - 1}, "
-            f"available {got[:3]}..{got[-3:] if got else []})")
-    for name in commits:
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    a = action["add"]
-                    a["partitionValues"] = _norm_map(
-                        a.get("partitionValues"))
-                    live[(a["path"],
-                          _dv_uid(a.get("deletionVector")))] = a
-                elif "remove" in action:
-                    r = action["remove"]
-                    live.pop((r["path"],
-                              _dv_uid(r.get("deletionVector"))), None)
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "protocol" in action:
-                    protocol = action["protocol"]
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        t["version"], txns.get(t["appId"],
-                                               t["version"]))
-    if meta is None or protocol is None:
-        raise ValueError(
-            f"no metaData/protocol action found under {log_dir}")
-    if protocol.get("minReaderVersion", 1) > 3:
-        raise NotImplementedError(
-            f"minReaderVersion {protocol['minReaderVersion']}")
-    unknown = set(protocol.get("readerFeatures") or ()) - {
-        "deletionVectors", "columnMapping", "typeWidening"}
-    if unknown:
-        raise NotImplementedError(
-            f"reader features {sorted(unknown)}")
-    return live, meta, protocol, txns
 
 
 # ---------------------------------------------------------- import
@@ -434,7 +306,7 @@ def import_delta_log(spark: SparkSession, src: str, dest: str, *,
     txn commit per foreign application id.  ``key`` optionally names
     the merge key for subsequent txnlog writes (must be a schema
     column)."""
-    live, meta, protocol, txns = replay_delta_log(src, version)
+    imported_v, live, meta, txns = replay_delta_log(src, version)
     schema_json, colmap = _import_schema(meta)
     schema = StructType.fromJson(json.loads(schema_json))
     names = {f.name for f in schema.fields}
@@ -479,13 +351,10 @@ def import_delta_log(spark: SparkSession, src: str, dest: str, *,
         payload["colmap"] = colmap
     if dvs:
         payload["dv"] = dvs
-    # progress marker for sync_delta_log: the foreign version this
-    # import reached, under the table-id-scoped app name (the same
-    # exactly-once txn channel foreign streaming sinks use)
-    imported_v = version if version is not None else max(
-        (int(n[:20]) for n in os.listdir(os.path.join(
-            src, "_delta_log"))
-         if _COMMIT_NAME.fullmatch(n)), default=0)
+    # progress marker for sync_delta_log: the foreign version the
+    # replay reached (not a later listing — a commit landing meanwhile
+    # is the sync's to deliver), under the table-id-scoped app name
+    # (the same exactly-once txn channel foreign streaming sinks use)
     payload["txn"] = {"app": _sync_app(meta), "version": imported_v}
     # the log dir is created LAST (post-review r15): a refusal during
     # materialization leaves only idempotent hardlinks behind, so a
@@ -543,11 +412,7 @@ def sync_delta_log(spark: SparkSession, src: str, dest: str
             f"(found progress markers {sync_apps})")
     app = sync_apps[0]
     last = snap.txns[app]
-    log_dir = os.path.join(src, "_delta_log")
-    pending = sorted(
-        int(n[:20]) for n in os.listdir(log_dir)
-        if _COMMIT_NAME.fullmatch(n)
-        and int(n[:20]) > last)
+    pending = [v for v in commit_versions(src) if v > last]
     if not pending:
         return None
     expected = list(range(last + 1, last + 1 + len(pending)))
@@ -570,66 +435,46 @@ def sync_delta_log(spark: SparkSession, src: str, dest: str
         extra_txns: list[dict] = []
         data_change = False
         saw_file_action = False
-        with open(os.path.join(log_dir, f"{fv:020d}.json")) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action or "remove" in action:
-                    saw_file_action = True
-                    if (action.get("add") or action["remove"]).get(
-                            "dataChange", True):
-                        data_change = True
-                if "add" in action:
-                    a = dict(action["add"])
-                    a["partitionValues"] = _norm_map(
-                        a.get("partitionValues"))
-                    schema = StructType.fromJson(
-                        json.loads(schema_json or out.schema_json))
-                    cm = colmap if colmap is not None else out.colmap
-                    phys_key = (txnlog._phys_name(cm, key)
-                                if key else None)
-                    add, dv = _materialize_add(
-                        src, dest, a, pcols, schema, key, phys_key)
-                    adds.append(add)
-                    if dv:
-                        dvs.append(dv)
-                    basenames[os.path.basename(
-                        unquote(a["path"]))] = add["file"]
-                elif "remove" in action:
-                    base = os.path.basename(
-                        unquote(action["remove"]["path"]))
-                    rel = basenames.get(base)
-                    if rel is not None:
-                        removes.append(rel)
-                elif "metaData" in action:
-                    m = dict(action["metaData"])
-                    m["configuration"] = _norm_map(
-                        m.get("configuration"))
-                    if list(m.get("partitionColumns") or []) != pcols:
-                        raise NotImplementedError(
-                            "foreign partition-spec change mid-log")
-                    schema_json, colmap = _import_schema(m)
-                    if (out.colmap is None) != (colmap is None):
-                        raise NotImplementedError(
-                            "foreign column-mapping mode change "
-                            "mid-log")
-                elif "protocol" in action:
-                    p = action["protocol"]
-                    if p.get("minReaderVersion", 1) > 3:
-                        raise NotImplementedError(
-                            f"minReaderVersion "
-                            f"{p['minReaderVersion']}")
-                    unknown = set(p.get("readerFeatures") or ()) - {
-                        "deletionVectors", "columnMapping",
-                        "typeWidening"}
-                    if unknown:
-                        raise NotImplementedError(
-                            f"reader features {sorted(unknown)}")
-                elif "txn" in action:
-                    t = action["txn"]
-                    extra_txns.append({"app": t["appId"],
-                                       "version": t["version"]})
+        for action in read_commit(src, fv):
+            if "add" in action or "remove" in action:
+                saw_file_action = True
+                if (action.get("add") or action["remove"]).get(
+                        "dataChange", True):
+                    data_change = True
+            if "add" in action:
+                a = action["add"]
+                schema = StructType.fromJson(
+                    json.loads(schema_json or out.schema_json))
+                cm = colmap if colmap is not None else out.colmap
+                phys_key = txnlog._phys_name(cm, key) if key else None
+                add, dv = _materialize_add(src, dest, a, pcols, schema,
+                                           key, phys_key)
+                adds.append(add)
+                if dv:
+                    dvs.append(dv)
+                basenames[os.path.basename(
+                    unquote(a["path"]))] = add["file"]
+            elif "remove" in action:
+                base = os.path.basename(
+                    unquote(action["remove"]["path"]))
+                rel = basenames.get(base)
+                if rel is not None:
+                    removes.append(rel)
+            elif "metaData" in action:
+                m = action["metaData"]
+                if list(m.get("partitionColumns") or []) != pcols:
+                    raise NotImplementedError(
+                        "foreign partition-spec change mid-log")
+                schema_json, colmap = _import_schema(m)
+                if (out.colmap is None) != (colmap is None):
+                    raise NotImplementedError(
+                        "foreign column-mapping mode change mid-log")
+            elif "protocol" in action:
+                check_protocol(action["protocol"])
+            elif "txn" in action:
+                t = action["txn"]
+                extra_txns.append({"app": t["appId"],
+                                   "version": t["version"]})
         # foreign per-app txns first (idempotent: txns take max), the
         # data commit with the progress marker LAST — a crash between
         # them re-syncs this foreign version, which re-commits the

@@ -30,6 +30,7 @@ consumed from systems the DWH doesn't control (src/build.sh:255).
 
 import json
 import os
+import re
 import struct
 import sys
 import tempfile
@@ -152,6 +153,23 @@ def test_roundtrip_column_mapping_and_widened(spark, tdir):
     got = txnlog.read_table(spark, imp)
     assert dict(got.dtypes)["n"] == "bigint", \
         "typeWidening: imported logical schema is the WIDE type"
+
+
+def test_export_refuses_unreadable_file_of_widened_table(spark, tdir):
+    """The only physically-narrow file of a widened column cannot be
+    opened: the export raises naming it instead of exporting the
+    column without its delta.typeChanges."""
+    txnlog.create_table(spark, _mk(spark, 0, 50).coalesce(1)
+                        .withColumn("n", F.col("k").cast("int")),
+                        tdir, key="k")
+    txnlog.widen_column_type(spark, tdir, column="n", to="long")
+    [narrow] = txnlog.snapshot(tdir).files
+    txnlog.append(spark, _mk(spark, 50, 60).withColumn("n", F.col("k")),
+                  tdir, key="k")
+    with open(os.path.join(tdir, narrow), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(ValueError, match=re.escape(narrow)):
+        delta_export.export_delta_log(tdir, tdir + "_d")
 
 
 def test_roundtrip_checkpointed_history(spark, tdir):
@@ -494,15 +512,46 @@ def _tiny_foreign(tdir, protocol, config=None, dv_desc=None):
     return t
 
 
-def test_refuses_unknown_reader_feature(spark, tdir):
-    t = _tiny_foreign(tdir, {
-        "minReaderVersion": 3, "minWriterVersion": 7,
-        "readerFeatures": ["v2Checkpoint"],
-        "writerFeatures": ["v2Checkpoint"]})
-    with pytest.raises(NotImplementedError, match="v2Checkpoint"):
+_V2_CHECKPOINT = {"minReaderVersion": 3, "minWriterVersion": 7,
+                  "readerFeatures": ["v2Checkpoint"],
+                  "writerFeatures": ["v2Checkpoint"]}
+
+
+@pytest.mark.parametrize("entry", ["import", "sync", "stream"])
+def test_refuses_unknown_reader_feature(spark, tdir, entry):
+    """One reader-protocol gate: the import refuses a v0 protocol with
+    an unknown reader feature; the sync and a running stream refuse
+    the same protocol arriving as a v1 upgrade."""
+    if entry == "import":
+        t = _tiny_foreign(tdir, _V2_CHECKPOINT)
+        with pytest.raises(NotImplementedError, match="v2Checkpoint"):
+            delta_import.import_delta_log(spark, t, t + "_imp")
+        with pytest.raises(NotImplementedError, match="v2Checkpoint"):
+            read_delta_table(t)
+        return
+    t = _tiny_foreign(tdir, _PROTO)
+    log = os.path.join(t, "_delta_log")
+    if entry == "sync":
         delta_import.import_delta_log(spark, t, t + "_imp")
-    with pytest.raises(NotImplementedError, match="v2Checkpoint"):
-        read_delta_table(t)
+        _write_log(log, 1, [{"protocol": _V2_CHECKPOINT}])
+        with pytest.raises(NotImplementedError, match="v2Checkpoint"):
+            delta_import.sync_delta_log(spark, t, t + "_imp")
+        return
+    from docker_aktin_dwh_spark.sources import deltastream
+    deltastream.register(spark)
+    q = (spark.readStream.format("delta_stream").option("path", t)
+         .load().writeStream.format("memory")
+         .queryName("delta_stream_gate")
+         .option("checkpointLocation", os.path.join(tdir, "ck"))
+         .trigger(processingTime="200 milliseconds").start())
+    try:
+        q.processAllAvailable()
+        assert spark.table("delta_stream_gate").count() == 5
+        _write_log(log, 1, [{"protocol": _V2_CHECKPOINT}])
+        with pytest.raises(Exception, match="v2Checkpoint"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def test_refuses_id_column_mapping(spark, tdir):
@@ -844,6 +893,84 @@ def test_import_version_validation_and_retry(spark, tdir):
         delta_import.sync_delta_log(spark, t, dest)
 
 
+def test_import_marker_ignores_commit_racing_the_import(
+        spark, tdir, monkeypatch):
+    """A foreign commit landing while the import materializes files is
+    the next sync's to deliver: the progress marker records the
+    version the import replayed, not a later listing of the log."""
+    t = os.path.join(tdir, "ft")
+    _sync_fixture_v0(t)
+    _duck_parquet(os.path.join(t, "f2.parquet"),
+                  "SELECT range AS k, 'c' || range AS v "
+                  "FROM range(200, 205)")
+    real = delta_import._materialize_add
+
+    def racing(*a, **kw):
+        _write_log(os.path.join(t, "_delta_log"), 1, [
+            {"add": {"path": "f2.parquet",
+                     "partitionValues": {"p": "0"}, "size": 1,
+                     "modificationTime": 1, "dataChange": True}}])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(delta_import, "_materialize_add", racing)
+    dest = t + "_imp"
+    snap = delta_import.import_delta_log(spark, t, dest, key="k")
+    monkeypatch.undo()
+    assert snap.txns["delta-import:m-1"] == 0
+    assert txnlog.read_table(spark, dest).count() == 50
+    delta_import.sync_delta_log(spark, t, dest)
+    assert txnlog.read_table(spark, dest).count() == 55
+    _assert_synced(spark, t, dest)
+
+
+def _checkpointed_foreign(t, json_versions):
+    """A partitioned foreign table whose log was cleaned below a
+    checkpoint at v2 (files c0..c2, an extra schema column ``w`` no
+    file carries), plus JSON commits adding c<v> for each of
+    ``json_versions``."""
+    log = os.path.join(t, "_delta_log")
+    os.makedirs(log)
+
+    def add(i):
+        _duck_parquet(os.path.join(t, f"c{i}.parquet"),
+                      f"SELECT {100 * i} + range AS k, 'c{i}' AS v "
+                      f"FROM range(4)")
+        return {"add": {"path": f"c{i}.parquet",
+                        "partitionValues": {"p": str(i % 2)},
+                        "size": 1, "modificationTime": i,
+                        "dataChange": True}}
+
+    delta_export._write_checkpoint(log, 2, [
+        {"protocol": _PROTO},
+        {"metaData": _meta([_fld("k", "long"), _fld("v", "string"),
+                            _fld("w", "string"), _fld("p", "integer")],
+                           partition_cols=["p"])},
+    ] + [add(i) for i in range(3)])
+    for v in json_versions:
+        _write_log(log, v, [add(v)])
+
+
+def test_import_marker_of_checkpoint_only_log(spark, tdir):
+    """Every JSON commit log-cleaned below the checkpoint at v2: the
+    import records v2, so the next foreign commit syncs instead of
+    reporting v1 as a gap."""
+    t = os.path.join(tdir, "ft")
+    _checkpointed_foreign(t, [])
+    dest = t + "_imp"
+    snap = delta_import.import_delta_log(spark, t, dest, key="k")
+    assert snap.txns["delta-import:m-1"] == 2
+    assert delta_import.sync_delta_log(spark, t, dest) is None
+    _duck_parquet(os.path.join(t, "c3.parquet"),
+                  "SELECT 300 + range AS k, 'c3' AS v FROM range(4)")
+    _write_log(os.path.join(t, "_delta_log"), 3, [
+        {"add": {"path": "c3.parquet", "partitionValues": {"p": "1"},
+                 "size": 1, "modificationTime": 3,
+                 "dataChange": True}}])
+    delta_import.sync_delta_log(spark, t, dest)
+    assert txnlog.read_table(spark, dest).count() == 16
+    _assert_synced(spark, t, dest)
+
+
 def test_refuses_nested_column_mapping(spark, tdir):
     """columnMapping mode 'name' with physicalNames INSIDE a struct:
     txnlog's colmap is top-level only — importing would mis-decode,
@@ -1022,6 +1149,34 @@ def test_delta_stream_refuses_column_mapping(spark, tdir):
          .queryName("delta_stream_cm")
          .option("checkpointLocation", os.path.join(tdir, "ck2"))
          .trigger(availableNow=True).start().awaitTermination())
+
+
+def test_delta_stream_over_checkpoint_seeded_history(spark, tdir):
+    """A log cleaned below a checkpoint at v2, JSON commits v3..v4 only:
+    the schema comes from the checkpoint's metaData; startingVersion=3
+    delivers exactly v3..v4's rows, the default start names the option
+    instead of replaying the hole."""
+    from docker_aktin_dwh_spark.sources import deltastream
+    deltastream.register(spark)
+    t = os.path.join(tdir, "ft")
+    _checkpointed_foreign(t, [3, 4])
+
+    def run(name, **opts):
+        r = spark.readStream.format("delta_stream").option("path", t)
+        for k, v in opts.items():
+            r = r.option(k, v)
+        (r.load().writeStream.format("memory").queryName(name)
+         .option("checkpointLocation", os.path.join(tdir, name))
+         .trigger(availableNow=True).start().awaitTermination())
+        return spark.table(name)
+
+    got = run("delta_stream_ckpt", startingVersion=3)
+    assert got.columns == ["k", "v", "w", "p", "_commit_version"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (100 * v + j, f"c{v}", None, v % 2, v)
+        for v in (3, 4) for j in range(4)]
+    with pytest.raises(Exception, match="startingVersion"):
+        run("delta_stream_ckpt0")
 
 
 def test_percent_encoded_paths_and_v2_checkpoint_names(spark, tdir):
