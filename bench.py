@@ -4,6 +4,7 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
+   "codegen_compilations": {"total": n, "per_key": {name: n, ...}},
    "scaling": {"replicas": R, "base_sec": {...}, "scaled_sec": {...},
                "slope": {name: scaled/base, ...}}}
 
@@ -25,7 +26,8 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from docker_aktin_dwh_spark.registry import build_registry
-from docker_aktin_dwh_spark.session import build_session
+from docker_aktin_dwh_spark.session import build_session, \
+    codegen_compilations
 
 #: headline set: star join, wide agg, windows, cohort semantics, dedup,
 #: similarity, text — the capability cross-section, not the cheap ones.
@@ -167,12 +169,17 @@ def main() -> None:
     # around the LAST (steady-state) run, so cross-round comparisons
     # can be computed from deterministic work, not wall, even on a
     # ±50%-noise box.
+    # Spark's generated-code compiles over each key's timed runs: a key
+    # whose later runs compile again is thrashing the generated-code
+    # cache or inlining per-call literals
     timings: dict[str, float] = {}
     spread: dict[str, dict] = {}
+    compiles: dict[str, int] = {}
     for key in HEADLINE:
         fn = registry[key].fn
         runs = []
         counters = None
+        cg0 = codegen_compilations(spark)
         for i in range(3):
             c0 = _work_counters(spark) if i == 2 else None
             t0 = time.perf_counter()
@@ -181,6 +188,7 @@ def main() -> None:
             if i == 2:
                 c1 = _work_counters(spark)
                 counters = {k: c1[k] - c0[k] for k in c1}
+        compiles[key] = codegen_compilations(spark) - cg0
         runs.sort()
         timings[key] = round(runs[1], 3)
         spread[key] = {"med": round(runs[1], 3),
@@ -196,6 +204,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_spread": spread,
+        "codegen_compilations": {"total": sum(compiles.values()),
+                                 "per_key": compiles},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf_dir,
     }
     if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
@@ -234,6 +244,7 @@ def main() -> None:
     compact["queries"] = {k: timings[k] for k in flagship
                           if k in timings}
     compact["n_queries"] = len(timings)
+    compact["codegen_compilations"] = out["codegen_compilations"]["total"]
     # VERDICT r15 item 2: echo the EFFECTIVE parallelism so the
     # $SPARK_GRAFT_CPUS contract is provable from artifacts alone (the
     # session master is local[$SPARK_GRAFT_CPUS]; defaultParallelism is

@@ -222,10 +222,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def table_row_count(sf_dir: str, name: str) -> int | None:
     """Row count of a fixture table from parquet FOOTER metadata — no
     Spark job, no data scan (ADVICE r8: a size-gate's control-plane

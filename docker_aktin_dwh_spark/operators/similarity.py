@@ -503,9 +503,13 @@ def vq_01(spark, sf):
     """
     emb = T(spark, sf, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("e"))
-    stats = emb.agg(
-        F.array(*[F.min(F.col("e")[i]) for i in range(DIM)]).alias("mn"),
-        F.array(*[F.max(F.col("e")[i]) for i in range(DIM)]).alias("mx"))
+    # each bound array is parsed from one SQL string: building 2·DIM
+    # Column objects one by one cost ~4 300 Py4J calls per build
+    def bounds(agg: str):
+        return F.expr("array(" + ", ".join(f"{agg}(e[{i}])"
+                                           for i in range(DIM)) + ")")
+
+    stats = emb.agg(bounds("min").alias("mn"), bounds("max").alias("mx"))
     z = emb.crossJoin(F.broadcast(stats))   # 1-row scalar attach
 
     # per-element |x − dequantized| via a 3-way zip (struct transform)
@@ -591,11 +595,6 @@ PQ_CAND_FACTOR = 8
 
 def _pq_sub(vec_col: str, m: int):
     return F.slice(vec_col, m * PQ_DS + 1, PQ_DS)
-
-
-def _pq_sqd(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _pq_cb_frame(spark, cb: "np.ndarray") -> DataFrame:

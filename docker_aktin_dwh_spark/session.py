@@ -80,6 +80,14 @@ def build_session(app_name: str = "docker-aktin-dwh-spark",
         # first-round scans `cpus` partitions of a 100 TB table, not
         # the table).  Derived from SPARK_GRAFT_CPUS, not a constant.
         .config("spark.sql.limit.initialNumPartitions", str(cpus))
+        # Generated-code classes live in one JVM-wide LRU of this many
+        # entries; Spark's default is 100.  The 12 perfbench query_mix
+        # keys compile ~200 classes, so at 100 a second pass in reverse
+        # order recompiled 105-110 of them; at 2000 it compiles 4.  One
+        # cold sweep of bench.py's 89 headline keys compiles 1 441
+        # distinct classes and a second sweep 26 (per-call literals),
+        # with JVM Metaspace at 210 MiB after both (local[4], sf0.1).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -93,7 +101,10 @@ def apply_runtime_policy(spark: SparkSession) -> SparkSession:
 
     The correctness driver owns its own SparkSession; everything our
     queries depend on must be settable post-hoc.  Static configs (memory,
-    master) are left alone.
+    master, the generated-code cache size) are left alone: a session
+    created elsewhere keeps Spark's 100-entry generated-code cache, so a
+    repeated query mix there recompiles classes that build_session's
+    cache would keep.
     """
     spark.conf.set(NANOS_AS_LONG, "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -111,6 +122,15 @@ def apply_runtime_policy(spark: SparkSession) -> SparkSession:
                    str(default_parallelism()))
     ship_package(spark)
     return spark
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far:
+    the sample count of its compile-time histogram, one sample per
+    generated-code cache miss (executor threads included in local
+    mode)."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
 
 
 def local_frame(spark: SparkSession, rows: list[tuple],

@@ -469,6 +469,35 @@ def stats_bounds(lo, hi):
     return stats_decode(lo), stats_decode(hi)
 
 
+def refuse_variant(schema, verb: str) -> None:
+    """Raise ValueError naming the first VARIANT column of the Spark
+    ``schema`` (nested struct fields, array elements and map keys and
+    values included).  Spark writes a variant column with a parquet
+    logical type pyarrow cannot read (``OSError: Metadata contains
+    Thrift LogicalType that is not recognized``), so
+    :func:`file_stats` could not open the staged file's footer; write
+    verbs call this before anything touches disk."""
+    from pyspark.sql.types import ArrayType, MapType, StructType, \
+        VariantType
+
+    def walk(dt, name: str) -> None:
+        if isinstance(dt, VariantType):
+            raise ValueError(
+                f"{verb}: column {name!r} is VARIANT, which a txnlog "
+                "table cannot store (pyarrow cannot read the footer); "
+                "write it as to_json(...) or shred it first")
+        if isinstance(dt, StructType):
+            for f in dt.fields:
+                walk(f.dataType, f"{name}.{f.name}" if name else f.name)
+        elif isinstance(dt, ArrayType):
+            walk(dt.elementType, f"{name}.element")
+        elif isinstance(dt, MapType):
+            walk(dt.keyType, f"{name}.key")
+            walk(dt.valueType, f"{name}.value")
+
+    walk(schema, "")
+
+
 def file_stats(fpath: str, key: str | None) -> dict:
     """rows + merge-key min/max + PER-COLUMN [min, max] intervals from
     the parquet FOOTER (no data scan; catalog.table_row_count's

@@ -609,19 +609,6 @@ def quote_ident(ident: str) -> str:
                     for p in ident.split("."))
 
 
-def _sql_literal(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float, Decimal)):
-        return str(v)
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return f"'{v.isoformat()}'"
-    s = str(v).replace("'", "''")
-    return f"'{s}'"
-
-
 def _copy_field(v) -> str:
     if v is None:
         return "\\N"

@@ -61,9 +61,9 @@ from pyspark.sql.types import StructType
 from .logcore import (FilePartition, arrow_schema, commit, file_stats,
                       interval_hit, latest_version, list_versions,
                       log_dir, nullable_schema_json, posix_link_claim,
-                      pv_constant, pv_frag, read_file, replay,
-                      resolve_timestamp, schema_snapshot, ship_by_value,
-                      stats_encode)
+                      pv_constant, pv_frag, read_file, refuse_variant,
+                      replay, resolve_timestamp, schema_snapshot,
+                      ship_by_value, stats_encode)
 from .logcore import register as _register
 
 
@@ -635,6 +635,7 @@ class TxnlogBatchDataSource(DataSource):
         stage_colmap) — stage_colmap extends the table's colmap with
         FRESH physical names for evolving columns (tasks stage under
         it; the commit records it)."""
+        refuse_variant(schema, "txnlog write")
         if not list_versions(table):
             return None, None, None, None
         snap = _meta(table, None)

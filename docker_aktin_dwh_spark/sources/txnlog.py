@@ -94,6 +94,7 @@ from .logcore import (CHECKPOINT_EVERY, LOG as _LOG, Snapshot,
                       list_versions as _list_versions, log_dir as _log_dir,
                       posix_link_claim as _posix_link_claim,
                       pv_decode as _pv_decode, ranges_count as _ranges_count,
+                      refuse_variant as _refuse_variant,
                       ranges_from_indexes as _ranges_from_indexes,
                       ranges_subtract as _ranges_subtract,
                       ranges_union as _ranges_union, resolve_timestamp,
@@ -265,14 +266,6 @@ def _pv_types(schema: StructType,
     return {c: by_name[c] for c in partition_by}
 
 
-def _pv_tuple(stats: dict, partition_by: list[str],
-              types: dict) -> tuple:
-    """A file's decoded partition-value tuple (None-safe)."""
-    pv = stats.get("pv") or {}
-    return tuple(_pv_decode(pv[c], types[c]) if c in pv else None
-                 for c in partition_by)
-
-
 def _walk_staged(stage: str) -> list[tuple[str, str]]:
     """(relative_partition_dir, filename) for every staged leaf file —
     '' reldir for an unpartitioned write."""
@@ -312,6 +305,7 @@ def _stage_data_files(spark: SparkSession, df: DataFrame, path: str,
     when the key IS a partition column (partition files do not store
     the column physically)."""
     _require_partition_cols(df, partition_by)
+    _refuse_variant(df.schema, "write")
     pv_types = _pv_types(df.schema, partition_by) if partition_by \
         else {}
     df = _to_physical(df, colmap)
@@ -391,7 +385,10 @@ def create_table(spark: SparkSession, df: DataFrame, path: str, *,
     ``path`` must be absent or an empty directory: :func:`vacuum`
     reclaims every unreferenced ``.parquet`` under the table, so
     building a table over a directory that already holds files would
-    later delete them — raises FileExistsError instead."""
+    later delete them — raises FileExistsError instead.  A VARIANT
+    column, nested ones included, raises ValueError before ``path`` is
+    touched."""
+    _refuse_variant(df.schema, "create_table")
     if os.path.isdir(path) and os.listdir(path):
         raise FileExistsError(
             f"create_table: {path} is not empty; a txnlog table needs "
@@ -1014,6 +1011,7 @@ def add_column(spark: SparkSession, path: str, *, column: str,
             "add nullable, backfill, then enforce via set_constraint")
     from pyspark.sql.types import StructField, _parse_datatype_string
     dt = _parse_datatype_string(dtype)
+    _refuse_variant(StructType([StructField(column, dt)]), "add_column")
     for _ in range(METADATA_MAX_ATTEMPTS):
         snap = snapshot(path)
         schema = StructType.fromJson(json.loads(snap.schema_json))

@@ -3582,6 +3582,41 @@ def test_create_table_refuses_non_empty_directory(spark, tmp_path):
         assert txnlog.read_table(spark, path).count() == 5
 
 
+def test_variant_column_refused_before_staging(spark, tdir):
+    """A VARIANT column, top-level or nested, is refused by name before
+    anything touches disk: Spark writes it with a parquet logical type
+    whose footer pyarrow cannot open, so file stats would fail after
+    the log directory exists.  The path stays usable afterwards, and
+    verbs that would add such a column to a table refuse as well."""
+    doc = F.parse_json(F.concat(F.lit('{"a": '), F.col("k").cast("string"),
+                                F.lit("}")))
+    base = _mk(spark, 0, 20)
+    flat = base.withColumn("doc", doc)
+    nested = base.withColumn("s", F.struct("v", F.array(doc).alias("docs")))
+    for df, col in ((flat, "doc"), (nested, "s.docs.element")):
+        with pytest.raises(ValueError, match=re.escape(repr(col))):
+            txnlog.create_table(spark, df, tdir, key="k")
+        assert not os.path.exists(tdir)
+
+    txnlog.create_table(spark, base.withColumn("doc", F.to_json(doc)),
+                        tdir, key="k")
+    assert txnlog.read_table(spark, tdir).count() == 20
+    extra = base.withColumn("doc", F.to_json(doc)).withColumn("x", doc)
+    with pytest.raises(ValueError, match="'x'"):
+        txnlog.append(spark, extra, tdir, key="k", evolve_schema=True)
+    with pytest.raises(ValueError, match="'x'"):
+        txnlog.add_column(spark, tdir, column="x", dtype="variant")
+    from docker_aktin_dwh_spark.sources import txnbatch
+
+    txnbatch.register(spark)
+    with pytest.raises(Exception, match="'x'"):
+        (extra.write.format("txnlog").option("evolveSchema", "true")
+         .mode("append").save(tdir))
+    assert txnlog.snapshot(tdir).version == 0
+    assert sorted(os.listdir(tdir)) == sorted(
+        ["_txnlog"] + list(txnlog.snapshot(tdir).files))
+
+
 def test_partitioned_with_column_mapping(spark, tdir):
     """r14 interaction: NON-partition columns stay renameable on a
     partitioned table (partition dirs use physical names, which the
